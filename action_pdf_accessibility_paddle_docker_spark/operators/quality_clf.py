@@ -170,7 +170,7 @@ class _TermsExpr:
         self.col = col
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _score_exprs(
     id_col: str,
     carry: tuple,
@@ -188,7 +188,11 @@ def _score_exprs(
     py4j round-trips per call on the q_quality_gate path). ``terms_key`` is
     None (derive from ``text_col``), a column name, a tuple of array-column
     names to concat, or a ``_TermsExpr`` (uncached path only). Returned
-    containers are shared -- callers must treat them as read-only."""
+    containers are shared -- callers must treat them as read-only. Two
+    outputs built from one entry share their aliases' exprIds, and joining
+    them still resolves each side (pinned by test_quality_clf). Bounded:
+    bias/threshold vary per trained model, so a sweep over many models
+    would otherwise grow the cache without limit."""
     if terms_key is None:
         t = terms_array(F.col(text_col), bigrams=bigrams)
     elif isinstance(terms_key, _TermsExpr):

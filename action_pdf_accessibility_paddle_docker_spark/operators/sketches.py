@@ -85,10 +85,14 @@ def sketch_accuracy(
         ),
         F.lit(False),
     )
+    # round the SCALED double (DuckDB's round(DOUBLE, 2)): Spark's round(x,
+    # 2) rounds x's shortest decimal form HALF_UP, so a median landing on a
+    # half cent whose double sits just below it (1.005 -> 100.4999...) would
+    # read 0.01 higher than the SQL. At scale 0 the two rules agree.
     return out.select(
         F.col(group_col),
         F.col("n_distinct_exact").cast("bigint"),
         d_err_ok.alias("distinct_within_tol"),
-        F.round(F.col("_p50_exact"), 2).alias("p50_exact"),
+        (F.round(F.col("_p50_exact") * 100) / 100).alias("p50_exact"),
         q_err_ok.alias("p50_within_tol"),
     )

@@ -8,6 +8,9 @@ Design:
 * The extraction kernel stamps every row with the executor partition id and
   per-row counters (n_regions, n_artifacts, n_pages, error). ``lineage_metrics``
   reduces those to one row per partition -- a cheap shuffle of tiny rows.
+* ``run_bucketed`` is the one exactly-once bucket loop; ``run_resumable``
+  (extraction) and ``jobs/corpus_job.run_pipeline_resumable`` (curation)
+  call it with their own transform and per-bucket counter aggregates.
 * ``run_resumable`` shards the job into ``n_buckets`` conv-hash buckets
   (``pmod(xxhash64(conv_id), n_buckets)``) -- a conversation never straddles
   buckets, so per-bucket (conv_id, turn_idx) ordering gives stable per-conv
@@ -231,9 +234,6 @@ def ensure_run_config(
         raise IOError(f"run-config commit rename failed: {tmp} -> {final}")
 
 
-_COUNTER_COLS = ("turns", "regions", "artifacts", "pages", "errors")
-
-
 def _delete_bucket_dirs(
     spark: SparkSession, data_root: str, buckets: list[int]
 ) -> None:
@@ -250,11 +250,13 @@ def _delete_bucket_dirs(
 
 
 def _per_bucket_counters(
-    spark: SparkSession, data_root: str, buckets: list[int], is_table: bool = False
+    spark: SparkSession, data_root: str, buckets: list[int], counters: dict,
+    is_table: bool = False,
 ) -> dict[int, dict]:
     """Aggregate the just-written output per bucket (partition-pruned read of
-    tiny columns -- NOT a kernel re-execution). When every row of the batch
-    was dropped upstream the data root may not exist at all (dynamic
+    tiny columns -- NOT a re-execution of the batch's plan). ``counters``
+    maps each record field to its aggregate Column. When every row of the
+    batch was dropped upstream the data root may not exist at all (dynamic
     overwrite writes no dirs): that ONE case returns {} so the zero-row
     lineage records still commit and resume skips -- any OTHER read failure
     (transient storage error) propagates, because committing rows=0 over
@@ -270,15 +272,7 @@ def _per_bucket_counters(
         src
         .where(F.col("bucket").isin([int(b) for b in buckets]))
         .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum("n_regions").alias("regions"),
-            F.sum("n_artifacts").alias("artifacts"),
-            F.sum("n_pages").alias("pages"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("errors"),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-        )
+        .agg(*[c.alias(k) for k, c in counters.items()])
     )
     out: dict[int, dict] = {}
     for r in df.collect():
@@ -286,6 +280,107 @@ def _per_bucket_counters(
         b = int(d.pop("bucket"))
         out[b] = {k: (int(v) if isinstance(v, int) else v) for k, v in d.items()}
     return out
+
+
+def run_bucketed(
+    spark: SparkSession,
+    output_root: str,
+    config: dict,
+    part: DataFrame,
+    n_buckets: int,
+    transform,
+    counters: dict,
+    empty: dict,
+    *,
+    cluster_by: tuple = (),
+    sort_by: tuple = (),
+    bucket_batch: int | None = None,
+    fail_after_batches: int | None = None,
+    iceberg_table: str | None = None,
+    totals: tuple = (),
+) -> dict:
+    """The exactly-once bucket loop every resumable pipeline shares.
+
+    ``part`` carries an int ``bucket`` column in ``[0, n_buckets)``. After
+    pinning ``config`` and listing the committed buckets, each batch of
+    pending buckets (``bucket_batch`` per batch; default all, one input
+    scan) goes through ``transform(rows, batch) -> (frame, Observation or
+    None)``, is hash partitioned on ``("bucket", *cluster_by)`` (sorted by
+    ``("bucket", *sort_by)`` when given) and overwrites its buckets' dirs
+    (or ``iceberg_table`` partitions). The written rows are then read back
+    through ``counters`` (name -> aggregate Column; ``empty`` is an empty
+    bucket's record) and each bucket's ``{bucket, counters,
+    batch_counters, committed_at}`` record commits atomically. Returns
+    resumed/ran bucket counts, ``input_scans`` and the batch-observation
+    sums named by ``totals``. ``fail_after_batches`` is the crash-injection
+    test hook: raise after N batches; the next call resumes."""
+    ensure_run_config(output_root, config, spark)
+    done = completed_buckets(output_root, spark)
+    pending = [b for b in range(n_buckets) if b not in done]
+    data_root = output_root.rstrip("/") + "/data"
+    step = bucket_batch or max(1, len(pending))
+    batches = [pending[i:i + step] for i in range(0, len(pending), step)]
+    summary = {
+        "resumed_buckets": len(done), "ran_buckets": 0,
+        **{k: 0 for k in totals}, "input_scans": 0,
+    }
+
+    for n_done, batch in enumerate(batches):
+        if fail_after_batches is not None and n_done >= fail_after_batches:
+            raise RuntimeError(f"injected failure after {n_done} batches")
+        rows = part
+        if len(batch) < n_buckets:
+            rows = part.filter(F.col("bucket").isin(batch))
+        out, obs = transform(rows, batch)
+        # Spread each bucket across tasks (one partition per bucket would
+        # serialize a 1.5 TB bucket's write at 100 TB / 64 buckets); a
+        # range repartition is ruled out because its boundary sampling
+        # re-executes the batch's plan. partitionBy("bucket") below splits
+        # the files per bucket regardless of task layout.
+        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
+        out = out.repartition(n_write, "bucket", *cluster_by)
+        if sort_by:
+            out = out.sortWithinPartitions("bucket", *sort_by)
+        if iceberg_table is not None:
+            from .sinks import overwrite_buckets_iceberg
+
+            overwrite_buckets_iceberg(out, iceberg_table, batch)
+        else:
+            # clear the batch's (pending, uncommitted) partition dirs first:
+            # dynamic overwrite only replaces partitions it writes rows to,
+            # so a crashed attempt's rows would survive a re-run that now
+            # yields ZERO rows for that bucket (committed lineage over stale
+            # data). Deleting pending dirs is safe -- their lineage never
+            # committed, so resume recomputes them regardless.
+            _delete_bucket_dirs(spark, data_root, batch)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(data_root)
+            )
+        summary["input_scans"] += 1
+        got = obs.get if obs is not None else {}
+        stamp = time.time()
+        per_bucket = _per_bucket_counters(
+            spark, data_root if iceberg_table is None else iceberg_table,
+            batch, counters, is_table=iceberg_table is not None,
+        )
+        for b in batch:
+            _commit_lineage(
+                output_root, b,
+                {
+                    "bucket": b,
+                    "counters": per_bucket.get(b, dict(empty)),
+                    "batch_counters": got,
+                    "committed_at": stamp,
+                },
+                spark,
+            )
+        summary["ran_buckets"] += len(batch)
+        for k in totals:
+            summary[k] += got.get(k, 0)
+    return summary
 
 
 def run_resumable(
@@ -316,108 +411,55 @@ def run_resumable(
     fail_after_batches: test hook -- raise after N batches to simulate a
     crash; a subsequent call resumes from the lineage records.
     """
-    df = spark.read.parquet(input_path)
     # a bucket index only means something under the parameters that
     # produced it -- refuse to resume under different ones (stale
     # partitions + wrongly-skipped buckets otherwise, silently)
-    ensure_run_config(
-        output_root,
-        {
-            "kind": "extraction",
-            "n_buckets": int(n_buckets),
-            "bucket_key": "conv_id",
-            "iceberg_table": iceberg_table,
-            # row-set-shaping parameters: committed buckets keep the values
-            # they ran under, so a resume under different ones would yield
-            # an inconsistent corpus with no error (review finding). The
-            # input path is pinned for the same reason -- buckets 0..k of
-            # input A plus k+1.. of input B is a silent cross-corpus mix
-            # AND a data loss (input-B rows hashing into 0..k never write).
-            "input": input_path,
-            "thresholds": thresholds,
-            "detector": "%s:%s" % (
-                detector_kind,
-                sorted((detector_kw or {}).items()),
-            ),
-        },
-        spark,
-    )
-    done = completed_buckets(output_root, spark)
-    pending = [b for b in range(n_buckets) if b not in done]
-    data_root = output_root.rstrip("/") + "/data"
-
-    step = bucket_batch or max(1, len(pending))
-    batches = [pending[i:i + step] for i in range(0, len(pending), step)]
-    n_done = 0
-    summary = {
-        "resumed_buckets": len(done), "ran_buckets": 0, "turns": 0,
-        "errors": 0, "input_scans": 0,
+    config = {
+        "kind": "extraction",
+        "n_buckets": int(n_buckets),
+        "bucket_key": "conv_id",
+        "iceberg_table": iceberg_table,
+        # row-set-shaping parameters: committed buckets keep the values
+        # they ran under, so a resume under different ones would yield
+        # an inconsistent corpus with no error. The
+        # input path is pinned for the same reason -- buckets 0..k of
+        # input A plus k+1.. of input B is a silent cross-corpus mix
+        # AND a data loss (input-B rows hashing into 0..k never write).
+        "input": input_path,
+        "thresholds": thresholds,
+        "detector": "%s:%s" % (
+            detector_kind,
+            sorted((detector_kw or {}).items()),
+        ),
     }
 
-    for batch in batches:
-        if fail_after_batches is not None and n_done >= fail_after_batches:
-            raise RuntimeError(f"injected failure after {n_done} batches")
+    def extract(rows: DataFrame, batch: list[int]):
         obs = Observation(f"batch-{batch[0]}-{time.monotonic_ns()}")
-        part = df.withColumn("bucket", bucket_expr(n_buckets))
-        if len(batch) < n_buckets:
-            part = part.filter(F.col("bucket").isin([int(b) for b in batch]))
         out = build_extraction(
-            part.drop("bucket"), thresholds=thresholds, order_output=False,
+            rows.drop("bucket"), thresholds=thresholds, order_output=False,
             observation=obs, detector_kind=detector_kind, detector_kw=detector_kw,
         ).withColumn("bucket", bucket_expr(n_buckets))
-        # Per-conv stable ordering inside each bucket file set. Hash
-        # partition on (bucket, conv_id) -- NOT on bucket alone (one
-        # partition per bucket would serialize a 1.5 TB bucket's sort at
-        # 100 TB / 64 buckets) and NOT repartitionByRange (its boundary
-        # sampling would re-execute the kernel). Every conversation still
-        # lands whole in exactly one task, sorted by turn; the Hive-style
-        # partitionBy("bucket") below splits files per bucket regardless of
-        # task layout.
-        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
-        out = out.repartition(n_write, "bucket", "conv_id").sortWithinPartitions(
-            "bucket", "conv_id", "turn_idx"
-        )
-        if iceberg_table is not None:
-            from .sinks import overwrite_buckets_iceberg
+        return out, obs
 
-            overwrite_buckets_iceberg(out, iceberg_table, batch)
-        else:
-            # clear the batch's (pending, uncommitted) partition dirs first:
-            # dynamic overwrite only replaces partitions it writes rows to,
-            # so a crashed attempt's rows would survive a re-run that now
-            # yields ZERO rows for that bucket (committed lineage over stale
-            # data). Deleting pending dirs is safe -- their lineage never
-            # committed, so resume recomputes them regardless.
-            _delete_bucket_dirs(spark, data_root, batch)
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(data_root)
-            )
-        summary["input_scans"] += 1
-        got = obs.get
-        stamp = time.time()
-        counters = _per_bucket_counters(
-            spark, data_root if iceberg_table is None else iceberg_table, batch,
-            is_table=iceberg_table is not None,
-        )
-        for b in batch:
-            _commit_lineage(
-                output_root, b,
-                {
-                    "bucket": b,
-                    "counters": counters.get(
-                        b, {k: 0 for k in _COUNTER_COLS} | {"min_conv_id": None, "max_conv_id": None}
-                    ),
-                    "batch_counters": got,
-                    "committed_at": stamp,
-                },
-                spark,
-            )
-        summary["ran_buckets"] += len(batch)
-        summary["turns"] += got.get("turns", 0)
-        summary["errors"] += got.get("errors", 0)
-        n_done += 1
-
-    return summary
+    # Every conversation lands whole in exactly one task (hash on bucket,
+    # conv_id), sorted by turn: per-conv stable ordering inside each
+    # bucket's file set.
+    return run_bucketed(
+        spark, output_root, config,
+        spark.read.parquet(input_path).withColumn("bucket", bucket_expr(n_buckets)),
+        n_buckets, extract,
+        {
+            "turns": F.count(F.lit(1)),
+            "regions": F.sum("n_regions"),
+            "artifacts": F.sum("n_artifacts"),
+            "pages": F.sum("n_pages"),
+            "errors": F.count(F.when(F.col("error").isNotNull(), 1)),
+            "min_conv_id": F.min("conv_id"),
+            "max_conv_id": F.max("conv_id"),
+        },
+        {"turns": 0, "regions": 0, "artifacts": 0, "pages": 0, "errors": 0,
+         "min_conv_id": None, "max_conv_id": None},
+        cluster_by=("conv_id",), sort_by=("conv_id", "turn_idx"),
+        bucket_batch=bucket_batch, fail_after_batches=fail_after_batches,
+        iceberg_table=iceberg_table, totals=("turns", "errors"),
+    )

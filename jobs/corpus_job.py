@@ -2,21 +2,27 @@
 """Training-corpus curation job: the LLM-data-pipeline operators as one
 spark-submit surface over a documents table (doc_id, text, ...).
 
-Stage order mirrors a production curation run (each stage optional):
+Stage order mirrors a production curation run (each stage optional). Each
+stage's ``modes:`` line names the run modes it supports (batch, --resumable,
+--streaming); STAGE_TABLE below holds the reason for every mode it refuses:
 
   urlfilter drop documents whose registered domain is blocklisted
            (--url-col + --blocked-domains FILE; RefinedWeb-style, the
            cheapest exclusion signal -- runs before any text pass)
+           modes: batch, resumable, streaming
   urldedup keep ONE document per canonical URL (normalize_url: fragment/
            tracking-param/port/www normalization; min-id survives;
-           unparseable URLs pass through)
+           unparseable URLs pass through; streaming keeps the first seen)
+           modes: batch, streaming
   clean    C4-style line filter (drop boilerplate lines + gated docs)
+           modes: batch, resumable, streaming
   linededup corpus-wide exact duplicate-LINE removal (RefinedWeb/
            MassiveText): the first occurrence (min doc_id, line_idx)
            of any >=--line-min-chars line survives, later copies are
            removed from their documents, text reassembled in order;
            --linededup-unit paragraph switches the dedup key to the
            \n\n-delimited paragraph (Dolma-style)
+           modes: batch
   spandedup corpus-wide exact duplicate-SPAN removal (Lee et al. 2021
            ExactSubstr): every duplicated run of >= --span-k whitespace
            tokens is removed except its corpus-first occurrence
@@ -26,34 +32,47 @@ Stage order mirrors a production curation run (each stage optional):
            + --new-grams <appendix side path> -- the shard loses every
            corpus-seen span plus its own internal duplicates, and the
            corpus is never rescanned
+           modes: batch
   pii      redact emails / IPv4 / payment cards / SSNs / intl + dashed
            phones in place
+           modes: batch, resumable, streaming
   gate     composed quality gate (length / punct / stopword / repetition)
+           modes: batch, resumable, streaming
   classify model-based quality filter (fastText/DCLM-style): score every
            doc under a trained linear model (--clf-weights, written by
            jobs/train_clf_job.py) and keep docs scoring >= --clf-threshold
+           modes: batch, resumable
   dedup    exact dedup (min-id canonical survives) or incremental vs a
            persisted fingerprint table (--seen-fps parquet dir + --new-fps
            appendix, or --fps-table: a catalog table BUCKETED on the
            fingerprint so the corpus-sized state never re-shuffles and the
-           appendix lands in place)
+           appendix lands in place); streaming: watermarked first-seen
+           dedup bounded by --dedup-horizon
+           modes: batch, resumable, streaming
   neardup  MinHash-LSH near-duplicate removal: connected components over
            the candidate graph, keep the min-id canonical per cluster
-           (--hash-family md5mix|md5|xxhash64 picks the signature family)
+           (--hash-family md5mix|md5|xxhash64 picks the signature family);
+           streaming: the stateless probe against --seen-buckets
+           modes: batch, streaming
   semdedup SemDeDup-style semantic dedup over an embedding column
            (--embeddings side table or --embedding-col on the input):
            KMeans coarse cells -> within-cell cosine pairs -> keep the
            min-id representative per semantic group; --semdedup-cap N
            adds the paper's cluster-balanced diversity cap (at most N
            survivors per cell)
+           modes: batch
   decontam benchmark decontamination (--benchmark <parquet>): drop
            training docs whose distinct-bigram overlap with any benchmark
            doc covers >= --decontam-overlap of the training doc's
            shingles (the n-gram test-set-leak check a corpus runs
            before it ships)
+           modes: batch
   cap      per-source document cap (--cap-per-source N; anti-dominance)
+           modes: batch
   split    stable train/val/test assignment column
+           modes: batch, resumable, streaming
   sample   deterministic per-source keep rates (--rate src=0.5, repeatable)
+           modes: batch, resumable, streaming
 
 Examples:
   spark-submit --py-files pkg.zip jobs/corpus_job.py \
@@ -79,26 +98,595 @@ import argparse
 import json
 import os
 import sys
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable
 
 _repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _repo_root not in sys.path:
     sys.path.insert(0, _repo_root)
 
-STAGES = ("urlfilter", "urldedup", "clean", "linededup", "spandedup", "pii",
-          "gate", "classify", "dedup", "neardup", "semdedup", "decontam",
-          "cap", "split", "sample")
+from action_pdf_accessibility_paddle_docker_spark.operators import (  # noqa: E402
+    dedup as D,
+    linefilter as L,
+    pii as P,
+    textstats as T,
+    urls as U,
+)
 
-# Stages whose bucket-local result equals the global result, so a
-# --resumable run can process hash buckets independently: clean / pii /
-# gate / split / sample are deterministic per-document projections,
-# classify is per-document given FIXED weights (score = f(text, model)),
-# and EXACT dedup becomes bucket-local-safe because the resumable path
-# keys the bucket on the dedup fingerprint itself (every duplicate group
-# lands whole in one bucket). Everything else (neardup, semdedup,
-# decontam, cap, temperature mixing, incremental dedup) aggregates
-# ACROSS buckets.
-RESUMABLE_STAGES = ("urlfilter", "clean", "pii", "gate", "classify",
-                    "dedup", "split", "sample")
+MODES = ("batch", "resumable", "streaming")
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One row of the stage table.
+
+    ``build(run, df)`` returns the stage's output for ``run.mode``.
+    ``refuse`` maps each mode the stage cannot run in to the reason.
+    ``drops``: the stage can remove whole documents. In batch mode,
+    ``checkpoint`` materializes the input EAGERLY before ``build`` (the
+    stage references its input more than once; a LAZY localCheckpoint
+    completes every upstream Observation with rows=0 before data flows --
+    measured -- so it is never lazy here) after ``prepare`` ran, and
+    ``observe`` counts the stage's output rows as ``after_<name>``.
+    ``pins(args)`` are the row-set-shaping parameters a resumable run must
+    resume under."""
+
+    name: str
+    build: Callable
+    refuse: dict = field(default_factory=dict)
+    drops: bool = False
+    checkpoint: bool = False
+    observe: bool = False
+    prepare: Callable | None = None
+    pins: Callable | None = None
+
+
+def _event_time(run):
+    from pyspark.sql import functions as F
+
+    a = run.args
+    return (F.col(a.ts_col) if a.ts_col in run.input_columns
+            else F.current_timestamp())
+
+
+def _urlfilter(run, df):
+    return U.filter_blocked_domains(
+        df, _read_blocked_domains(run.args.blocked_domains),
+        url_col=getattr(run.args, "url_col", "url"),
+    )
+
+
+def _urldedup(run, df):
+    from pyspark.sql import functions as F
+
+    a = run.args
+    if run.mode != "streaming":
+        return U.url_dedup(df, id_col=a.id_col, url_col=a.url_col,
+                           policy=getattr(a, "url_keep", "min_id"),
+                           text_col=a.text_col)
+    # streaming analog: FIRST-seen survives (not min-id -- arrival order
+    # is the only order a stream has); watermark-bounded state shared with
+    # the dedup horizon. Unparseable URLs get a per-row unique key (NULL
+    # would merge them all into one survivor).
+    key = F.coalesce(
+        F.md5(U.normalize_url_from(F.col("_u_s"))),
+        F.concat(F.lit("row:"), F.col(a.id_col).cast("string")),
+    )
+    return (
+        df.withColumn("_ts", _event_time(run))
+        .withColumn("_u_s", U.stripped_url(F.col(a.url_col)))
+        .withColumn("_ukey", key)
+        .withWatermark("_ts", a.dedup_horizon)
+        .dropDuplicatesWithinWatermark(["_ukey"])
+        .drop("_ukey", "_ts", "_u_s")
+    )
+
+
+def _clean(run, df):
+    return L.apply_line_filter(df, text_col=run.args.text_col,
+                               min_kept_lines=run.args.min_kept_lines)
+
+
+def _linededup(run, df):
+    # the input is materialized by the table's checkpoint, so the
+    # operator's own (lazy) input checkpoint is skipped
+    a = run.args
+    unit = getattr(a, "linededup_unit", "line")
+    return D.remove_duplicate_lines(
+        df, id_col=a.id_col, text_col=a.text_col,
+        min_chars=a.line_min_chars, checkpoint_input=False,
+        separator="\n\n" if unit == "paragraph" else "\n",
+    )
+
+
+def _spandedup(run, df):
+    a = run.args
+    if getattr(a, "seen_grams", None):
+        rewritten, new_grams = D.incremental_span_dedup(
+            df, run.spark.read.parquet(a.seen_grams), k=a.span_k,
+            id_col=a.id_col, text_col=a.text_col, checkpoint_input=False,
+        )
+        # side-path appendix (crash-safe by construction: the user unions
+        # it in only after the output commit)
+        new_grams.write.mode("overwrite").parquet(a.new_grams)
+        return rewritten
+    return D.remove_duplicate_spans(
+        df, k=a.span_k, id_col=a.id_col, text_col=a.text_col,
+        checkpoint_input=False,
+    )
+
+
+def _pii(run, df):
+    return P.redact(df, text_col=run.args.text_col)
+
+
+def _gate(run, df):
+    return T.apply_quality_gate(df, text_col=run.args.text_col)
+
+
+def _classify(run, df):
+    from action_pdf_accessibility_paddle_docker_spark.operators import (
+        quality_clf as QC,
+    )
+
+    # per-document under FIXED weights, so bucket-local == global; the
+    # score aggregate and the semi-join's probe side both reference the
+    # input (materialized by the checkpoint in batch mode)
+    weights, bias = run.classifier
+    a = run.args
+    return QC.apply_classifier(
+        df, weights, bias=bias, threshold=a.clf_threshold,
+        text_col=a.text_col, id_col=a.id_col,
+        top_frac=getattr(a, "clf_top_frac", None),
+    )
+
+
+def _dedup(run, df):
+    from pyspark.sql import functions as F
+
+    a, spark = run.args, run.spark
+    if run.mode == "streaming":
+        # NULL-text docs must never merge (dropDuplicates treats NULL keys
+        # as EQUAL): per-row fallback, the urldedup guard
+        fp = F.coalesce(
+            F.md5(D.normalized(F.col(a.text_col))),
+            F.concat(F.lit("row:"), F.col(a.id_col).cast("string")),
+        )
+        return (
+            df.withColumn("_ts", _event_time(run))
+            .withColumn("fingerprint", fp)
+            .withWatermark("_ts", a.dedup_horizon)
+            .dropDuplicatesWithinWatermark(["fingerprint"])
+            .drop("fingerprint", "_ts")
+        )
+    fps_key = getattr(a, "fps_key", "content")
+    if getattr(a, "fps_table", None):
+        # bucketed-table incremental mode: the corpus-sized state side of
+        # the anti-join is read pre-partitioned (no shuffle), and the
+        # appendix goes back into the SAME table
+        legacy_schema = False
+        if spark.catalog.tableExists(a.fps_table):
+            # key-space provenance is validated inside incremental_dedup
+            # (check_fps_key); here we only detect the legacy
+            # fingerprint-only schema so the appendix matches it (Spark
+            # validates append schemas)
+            seen = spark.table(a.fps_table)
+            legacy_schema = "fp_key" not in seen.columns
+        else:
+            seen = spark.createDataFrame([], "fingerprint string")
+    elif getattr(a, "seen_fps", None):
+        # mergeSchema: an accumulated fps dir can mix pre-stamp
+        # (fingerprint-only) and stamped shard files; without it the read
+        # picks one footer's schema nondeterministically
+        seen = spark.read.option("mergeSchema", "true").parquet(a.seen_fps)
+    else:
+        canon = D.exact_dedup(df, id_col=a.id_col, text_col=a.text_col)
+        return df.join(
+            canon.select(F.col("canonical_id").alias(a.id_col)), a.id_col
+        )
+    survivors, _ = D.incremental_dedup(
+        df, seen, id_col=a.id_col, text_col=a.text_col,
+        method=getattr(a, "fps_method", "join"), key=fps_key,
+        url_col=getattr(a, "url_col", "url"),
+    )
+    # one materialization serves the appendix AND the output write
+    # (without it the whole upstream stage chain executes twice)
+    survivors = survivors.localCheckpoint(eager=True)
+    if getattr(a, "fps_table", None):
+        # the table appendix runs POST-COMMIT: state must only record docs
+        # whose curated rows are durable
+        run.post_commit.append(
+            lambda s=survivors, nb=int(getattr(a, "fps_buckets", 256)), k=(
+                None if legacy_schema else fps_key
+            ): D.append_fingerprints(
+                s.select("fingerprint"), a.fps_table, n_buckets=nb, key=k,
+            )
+        )
+    else:
+        survivors.select(
+            "fingerprint", F.lit(fps_key).alias("fp_key"),
+        ).write.mode("overwrite").parquet(a.new_fps)
+    return survivors.drop("fingerprint")
+
+
+def _neardup(run, df):
+    from pyspark.sql import functions as F
+
+    a = run.args
+    if run.mode == "streaming":
+        # stateless corpus probe: drop arriving docs near ANYTHING the
+        # batch corpus has seen; within-stream near-dups are the simhash
+        # watermark path's job
+        from action_pdf_accessibility_paddle_docker_spark.streaming.stream import (
+            streaming_near_dedup_against_corpus,
+        )
+
+        return streaming_near_dedup_against_corpus(
+            df, run.spark.read.parquet(a.seen_buckets),
+            text_col=a.text_col, hash_family=a.hash_family,
+        )
+    if getattr(a, "seen_buckets", None):
+        survivors, new_buckets = D.incremental_near_dedup(
+            df, run.spark.read.parquet(a.seen_buckets), id_col=a.id_col,
+            text_col=a.text_col, hash_family=a.hash_family,
+            persist_buckets=getattr(a, "bucket_persist", "cluster"),
+        )
+        new_buckets.write.mode("overwrite").parquet(a.new_buckets)
+        return survivors
+    # keep the min-id canonical of each LSH connected component; the
+    # cluster table is (doc_id, cluster_id) for EVERY doc, so the survivor
+    # filter is a doc_id equi-join, never a text re-hash
+    clusters = D.dedup_clusters(
+        df, id_col=a.id_col, text_col=a.text_col, hash_family=a.hash_family,
+        threshold=getattr(a, "lsh_threshold", None),
+    )
+    return df.join(
+        clusters.where(F.col("doc_id") == F.col("cluster_id"))
+        .select(F.col("doc_id").alias(a.id_col)),
+        a.id_col,
+    )
+
+
+def _semdedup(run, df):
+    from pyspark.sql import functions as F
+
+    from action_pdf_accessibility_paddle_docker_spark.operators import (
+        similarity as S,
+    )
+
+    a = run.args
+    embeddings = getattr(a, "embeddings", None)
+    if embeddings:
+        embt = run.spark.read.parquet(embeddings)
+        eid = getattr(a, "embedding_id_col", None)
+        if eid and eid != a.id_col:
+            embt = embt.withColumnRenamed(eid, a.id_col)
+        if a.id_col not in embt.columns:
+            raise SystemExit(
+                f"semdedup: --embeddings table has no {a.id_col!r} "
+                f"column (columns: {embt.columns}) -- pass "
+                "--embedding-id-col to name its id column"
+            )
+    else:
+        embt = df
+    emb_col = getattr(a, "embedding_col", "embedding")
+    if emb_col not in embt.columns:
+        raise SystemExit(
+            f"semdedup: column {emb_col!r} not found "
+            f"{'in --embeddings' if embeddings else 'on the input'}"
+            " -- pass --embedding-col or --embeddings"
+        )
+    if embeddings:
+        # only ids still alive in the pipeline: a semantic rep must never
+        # be a doc an earlier stage already removed
+        embt = embt.join(df.select(a.id_col), a.id_col, "left_semi")
+    sem = S.semantic_dedup(
+        embt,
+        threshold=getattr(a, "semdedup_threshold", 0.9),
+        n_clusters=getattr(a, "semdedup_clusters", 16),
+        id_col=a.id_col, vec_col=emb_col,
+    )
+    keep = sem.where(F.col("rep_id") == F.col(a.id_col))
+    cap_n = int(getattr(a, "semdedup_cap", 0) or 0)
+    if cap_n > 0:
+        # method='exact': the CLI promises AT MOST cap survivors per
+        # coarse cell (and a non-empty cell keeps something). The rate
+        # form is only ~cap in expectation and can zero out a small cell.
+        # Cells are bounded (~n/k by construction), so the per-key window
+        # is safe here -- matching the reference composition in
+        # test_similarity.
+        keep = T.cap_per_stratum(keep, cap=cap_n, stratum_col="cid",
+                                 id_col=a.id_col, method="exact")
+    return df.join(keep.select(a.id_col), a.id_col)
+
+
+def _decontam(run, df):
+    from pyspark.sql import functions as F
+
+    a = run.args
+    flagged = D.decontaminate(
+        df, _load_benchmark(run.spark, a),
+        min_overlap_frac=getattr(a, "decontam_overlap", 0.3),
+        id_col=a.id_col, text_col=a.text_col,
+    )
+    # the flagged set is small (leaked docs), so the anti-join broadcasts
+    # it and the corpus streams map-only
+    return df.join(
+        F.broadcast(
+            flagged.select(F.col("train_id").alias(a.id_col)).distinct()
+        ),
+        a.id_col, "left_anti",
+    )
+
+
+def _cap_domain(run, df):
+    # derive the registered domain row-wise BEFORE the checkpoint (staged
+    # projections -- the inlined PSL CASE would blow up the plan); NULL
+    # (unparseable) is one stratum -- cap_per_stratum's sentinel handles it
+    if getattr(run.args, "cap_by_domain", False):
+        return U.with_url_columns(df, run.args.url_col, url_domain="_cap_domain")
+    return df
+
+
+def _cap(run, df):
+    # the count aggregate and keep filter share the checkpointed input;
+    # cap_per_stratum's own LAZY checkpoint is skipped
+    by_domain = getattr(run.args, "cap_by_domain", False)
+    out = T.cap_per_stratum(
+        df, cap=run.args.cap_per_source,
+        stratum_col="_cap_domain" if by_domain else run.args.stratum_col,
+        id_col=run.args.id_col, checkpoint=False,
+    )
+    return out.drop("_cap_domain") if by_domain else out
+
+
+def _split(run, df):
+    return T.stable_split(df, id_col=run.args.id_col)
+
+
+def _sample(run, df):
+    a = run.args
+    if getattr(a, "mix_temperature", None) is not None:
+        # materialize the pipeline-so-far once: the rate derivation is an
+        # eager aggregate over it, and the sample filter reads it again
+        df = df.localCheckpoint(eager=True)
+        rates = T.temperature_mix_rates(
+            df, stratum_col=a.stratum_col, temperature=a.mix_temperature,
+            keep_fraction=getattr(a, "mix_keep_frac", 1.0),
+        )
+    else:
+        rates = {k: float(v) for k, _, v in (r.partition("=") for r in a.rate)}
+    return T.stratified_sample(
+        df, rates=rates, stratum_col=a.stratum_col, id_col=a.id_col,
+        default_rate=a.default_rate,
+    )
+
+
+# Stages a resumable run may compose are those whose bucket-local result
+# equals the global result: per-document projections and filters, classify
+# under FIXED weights, and EXACT dedup, which is bucket-local-safe because
+# the resumable path keys the bucket on the dedup fingerprint itself (every
+# duplicate group lands whole in one bucket).
+_CROSS_BUCKET = "it aggregates across buckets"
+STAGE_TABLE = {st.name: st for st in (
+    Stage("urlfilter", _urlfilter, drops=True, observe=True,
+          pins=lambda a: {"url_col": a.url_col,
+                          "blocked_domains": getattr(a, "blocked_domains", None)}),
+    Stage("urldedup", _urldedup, drops=True, observe=True, refuse={
+        "resumable": f"{_CROSS_BUCKET}: copies of one URL hash to different "
+                     "buckets"}),
+    Stage("clean", _clean, drops=True, observe=True,
+          pins=lambda a: {"min_kept_lines": int(a.min_kept_lines)}),
+    Stage("linededup", _linededup, checkpoint=True, observe=True, refuse={
+        "resumable": f"{_CROSS_BUCKET}: a line's corpus-first occurrence is "
+                     "a corpus-wide aggregate",
+        "streaming": "the corpus-first occurrence of a line is a corpus-wide "
+                     "aggregate with unbounded streaming state"}),
+    Stage("spandedup", _spandedup, checkpoint=True, observe=True, refuse={
+        "resumable": f"{_CROSS_BUCKET}: a span's corpus-first occurrence is "
+                     "a corpus-wide aggregate",
+        "streaming": "the corpus-first occurrence of a token span is a "
+                     "corpus-wide aggregate with unbounded streaming state"}),
+    Stage("pii", _pii),
+    Stage("gate", _gate, drops=True, observe=True),
+    Stage("classify", _classify, drops=True, checkpoint=True, observe=True,
+          pins=lambda a: {"clf_weights": a.clf_weights,
+                          "clf_threshold": float(getattr(a, "clf_threshold", 0.5))},
+          refuse={
+        "streaming": "the score is a per-doc aggregate over exploded terms "
+                     "followed by a semi-join, neither of which streams in "
+                     "append mode; gate streams, classify in the batch pass "
+                     "over the stream's output"}),
+    Stage("dedup", _dedup, drops=True),
+    Stage("neardup", _neardup, drops=True, checkpoint=True, observe=True,
+          refuse={
+        "resumable": f"{_CROSS_BUCKET}: near-duplicate clusters span "
+                     "buckets"}),
+    Stage("semdedup", _semdedup, drops=True, checkpoint=True, observe=True,
+          refuse={
+        "resumable": f"{_CROSS_BUCKET}: KMeans cells and semantic groups "
+                     "span buckets",
+        "streaming": "the KMeans fit and the iterative component labeling "
+                     "both need the full corpus"}),
+    Stage("decontam", _decontam, drops=True, observe=True, refuse={
+        "resumable": "the shingle-overlap join against the benchmark is a "
+                     "one-shot pass over the curated output",
+        "streaming": "the per-(train,bench) overlap is a shingle-explode "
+                     "aggregation with no bounded streaming-state form"}),
+    Stage("cap", _cap, drops=True, checkpoint=True, observe=True,
+          prepare=_cap_domain, refuse={
+        "resumable": f"{_CROSS_BUCKET}: the per-source count spans buckets",
+        "streaming": "it needs a corpus-wide per-stratum count, which has no "
+                     "bounded streaming-state form"}),
+    Stage("split", _split),
+    Stage("sample", _sample, drops=True,
+          pins=lambda a: {"rates": sorted(getattr(a, "rate", []) or []),
+                          "default_rate": float(getattr(a, "default_rate", 1.0)),
+                          "stratum_col": a.stratum_col}),
+)}
+STAGES = tuple(STAGE_TABLE)
+RESUMABLE_STAGES = tuple(
+    s for s in STAGES if "resumable" not in STAGE_TABLE[s].refuse
+)
+# resumable runs apply these before the bucket key: the dedup fingerprint
+# is taken over the text clean/pii rewrite; the remaining stages run per
+# batch on the bucket-filtered rows
+_PRE_BUCKET = ("urlfilter", "clean", "pii")
+
+
+def check_args(args, stages, mode: str) -> None:
+    """Every stage/flag composition rule of the job, owned here for the CLI
+    and library callers alike: raises SystemExit (ValueError for
+    clf_top_frac under --resumable) naming the first violation. ``mode`` is
+    one of MODES."""
+    def g(name, default=None):
+        return getattr(args, name, default)
+
+    batch, resumable, streaming = (mode == m for m in MODES)
+    unknown = sorted(set(stages) - set(STAGES))
+    if unknown:
+        raise SystemExit(f"unknown stages: {unknown}")
+    refused = [s for s in STAGES if s in stages and mode in STAGE_TABLE[s].refuse]
+    if refused:
+        raise SystemExit(
+            f"stages not {'resumable' if resumable else 'streamable'}: "
+            + "; ".join(f"{s} ({STAGE_TABLE[s].refuse[mode]})" for s in refused)
+            + f" -- {mode} runs support "
+            + ",".join(s for s in STAGES if mode not in STAGE_TABLE[s].refuse)
+            + "; run the others as a one-shot batch pass over this output"
+        )
+    if "urlfilter" in stages and not g("blocked_domains"):
+        raise SystemExit("urlfilter requires --blocked-domains")
+    if g("shuffle_output") is not None and (
+            g("partition_output_by") or g("output_files")):
+        raise SystemExit("--shuffle-output orders the whole output; it is "
+                         "exclusive with --partition-output-by/--output-files")
+    if "dedup" in stages and g("seen_fps") and not g("new_fps"):
+        raise SystemExit("--seen-fps requires --new-fps")
+    if g("fps_key", "content") != "content" and not (
+            g("seen_fps") or g("fps_table")):
+        raise SystemExit("--fps-key composes with incremental dedup only "
+                         "(--seen-fps or --fps-table); for within-shard URL "
+                         "dedup use the urldedup stage")
+    if g("fps_table") and (g("seen_fps") or g("new_fps")):
+        raise SystemExit("--fps-table and --seen-fps/--new-fps are exclusive: "
+                         "the table IS the persisted state, appended in place")
+    if "neardup" in stages and g("seen_buckets") and not g("new_buckets") \
+            and not streaming:
+        raise SystemExit("--seen-buckets requires --new-buckets (batch "
+                         "incremental mode writes the shard's appendix; only "
+                         "the --streaming corpus probe runs appendix-less)")
+    if g("new_buckets") and not g("seen_buckets"):
+        raise SystemExit("--new-buckets requires --seen-buckets: plain neardup "
+                         "writes no appendix -- bootstrap a bucket table with "
+                         "operators.dedup.minhash_band_buckets over the "
+                         "curated output, then run later shards against it")
+    if "spandedup" in stages and g("span_k", 50) < 2:
+        raise SystemExit("--span-k must be >= 2")
+    if "spandedup" in stages and bool(g("seen_grams")) != bool(g("new_grams")):
+        raise SystemExit("--seen-grams and --new-grams come together (the "
+                         "shard's appendix goes to a side path; union it in "
+                         "after the output commits). Bootstrap a gram table "
+                         "with operators.dedup.span_gram_table")
+    if (g("seen_grams") or g("new_grams")) and "spandedup" not in stages:
+        raise SystemExit("--seen-grams/--new-grams only apply to the "
+                         "spandedup stage")
+    # incremental_span_dedup's precondition: every doc-dropping stage must
+    # run BEFORE the appendix is derived, or it marks grams of documents
+    # that never ship and a later shard's sole copy of a shared span is
+    # silently excised (permanent content loss)
+    droppers = [s for s in STAGES[STAGES.index("spandedup") + 1:]
+                if s in stages and STAGE_TABLE[s].drops]
+    if g("seen_grams") and droppers:
+        raise SystemExit("--seen-grams cannot be combined with doc-dropping "
+                         f"stages that run after spandedup ({', '.join(droppers)}): "
+                         "run them in a prior pass, then the incremental "
+                         "spandedup pass on its output")
+    for new_p, seen_p, names in (
+        (g("new_fps"), g("seen_fps"), "--new-fps/--seen-fps"),
+        (g("new_buckets"), g("seen_buckets"), "--new-buckets/--seen-buckets"),
+        (g("new_grams"), g("seen_grams"), "--new-grams/--seen-grams"),
+    ):
+        # updating in place would delete the parquet dir the plan still
+        # reads lazily: at best a late failure, at worst a destroyed table
+        if new_p and seen_p and os.path.abspath(new_p) == os.path.abspath(seen_p):
+            raise SystemExit(f"{names} must be different paths: write the "
+                             "appendix to a fresh path and union afterwards")
+    if "decontam" in stages and not g("benchmark"):
+        raise SystemExit("the decontam stage requires --benchmark")
+    if "classify" in stages and not g("clf_weights"):
+        raise SystemExit("the classify stage requires --clf-weights (train "
+                         "one with jobs/train_clf_job.py)")
+    if g("clf_top_frac") is not None:
+        if "classify" not in stages:
+            raise SystemExit("--clf-top-frac only applies to the classify stage")
+        if not 0.0 < g("clf_top_frac") <= 1.0:
+            raise SystemExit("--clf-top-frac must be in (0, 1]")
+        if resumable:
+            raise ValueError("clf_top_frac (--clf-top-frac) conflicts with "
+                             "--resumable: a bucket-local score quantile is "
+                             "not the corpus quantile -- run it one-shot (the "
+                             "fixed --clf-threshold form stays bucket-local)")
+    if g("lsh_threshold") is not None:
+        if "neardup" not in stages:
+            raise SystemExit("--lsh-threshold only applies to the neardup stage")
+        if not 0.0 < g("lsh_threshold") < 1.0:
+            raise SystemExit("--lsh-threshold must be in (0, 1)")
+        if g("seen_buckets") or streaming:
+            raise SystemExit("--lsh-threshold is for the within-corpus batch "
+                             "form only: incremental and streaming probes "
+                             "must match the persisted table's stamped banding")
+    if g("mix_temperature") is not None:
+        if g("rate"):
+            raise SystemExit("--mix-temperature and --rate are exclusive")
+        if g("mix_temperature") <= 0:
+            raise SystemExit("--mix-temperature must be > 0")
+        if not batch:
+            raise SystemExit("--mix-temperature is batch-only: deriving the "
+                             "rates needs a corpus-wide per-source aggregate; "
+                             "pass explicit --rate flags")
+    if g("mix_keep_frac", 1.0) != 1.0 and g("mix_temperature") is None:
+        raise SystemExit("--mix-keep-frac only applies with --mix-temperature")
+    # > 1 is allowed: rates clamp to 1, and over-asking is the recovery when
+    # a tiny source cannot supply its flattened share
+    if g("mix_keep_frac", 1.0) <= 0.0:
+        raise SystemExit("--mix-keep-frac must be > 0")
+    if batch:
+        return
+    for flag, on in (("--seen-fps/--fps-table", g("seen_fps") or g("fps_table")),
+                     ("--report", g("report")),
+                     ("--shuffle-output", g("shuffle_output") is not None),
+                     ("--partition-output-by", g("partition_output_by")),
+                     ("--output-files", g("output_files"))):
+        if on:
+            raise SystemExit(f"{flag} is batch-only (corpus-wide state, "
+                             "aggregate or layout); run it as a batch pass "
+                             "over this run's output")
+    if resumable:
+        if g("buckets", 64) < 1:
+            raise SystemExit("--buckets must be >= 1")
+        return
+    if "urldedup" in stages and g("url_keep", "min_id") != "min_id":
+        raise SystemExit("--url-keep longest is batch-only: streaming urldedup "
+                         "is first-seen (dropDuplicatesWithinWatermark cannot "
+                         "compare captures it has already emitted)")
+    if "urldedup" in stages and "dedup" in stages:
+        raise SystemExit("streaming urldedup and dedup cannot compose in one "
+                         "query: each needs its own watermark on the event "
+                         "column and Spark disallows redefining a watermark; "
+                         "run one of them in a second hop (or batch)")
+    if "neardup" in stages and not g("seen_buckets"):
+        raise SystemExit("streaming neardup requires --seen-buckets: what "
+                         "streams is the stateless probe against the "
+                         "persisted band-bucket table; within-stream "
+                         "connected components are batch-only")
+    if "neardup" in stages and g("new_buckets"):
+        raise SystemExit("--new-buckets is batch-only: a stream updating the "
+                         "bucket table it joins against would race its own "
+                         "micro-batches")
+    if not g("checkpoint"):
+        raise SystemExit("--streaming requires --checkpoint")
 
 
 def main() -> None:
@@ -362,215 +950,15 @@ def main() -> None:
     args = ap.parse_args()
 
     stages = [s.strip() for s in args.stages.split(",") if s.strip()]
-    unknown = sorted(set(stages) - set(STAGES))
-    if unknown:
-        ap.error(f"unknown stages: {unknown}")
-    if ("urlfilter" in stages) and not args.blocked_domains:
-        ap.error("urlfilter requires --blocked-domains")
-    if args.shuffle_output is not None and (
-            args.partition_output_by or args.output_files):
-        ap.error("--shuffle-output orders the whole output; it is "
-                 "exclusive with --partition-output-by/--output-files")
-    if ("dedup" in stages) and args.seen_fps and not args.new_fps:
-        ap.error("--seen-fps requires --new-fps")
-    if getattr(args, "fps_key", "content") != "content" and not (
-            args.seen_fps or args.fps_table):
-        ap.error("--fps-key composes with incremental dedup only "
-                 "(--seen-fps or --fps-table); for within-shard URL dedup "
-                 "use the urldedup stage")
-    if args.fps_table and (args.seen_fps or args.new_fps):
-        ap.error("--fps-table and --seen-fps/--new-fps are exclusive: the "
-                 "table IS the persisted state, appended in place")
-    if ("neardup" in stages) and args.seen_buckets and not args.new_buckets \
-            and not args.streaming:
-        ap.error("--seen-buckets requires --new-buckets (batch incremental "
-                 "mode writes the shard's appendix; only the --streaming "
-                 "corpus probe runs appendix-less)")
-    if args.new_buckets and not args.seen_buckets:
-        ap.error("--new-buckets requires --seen-buckets: plain neardup is "
-                 "the within-corpus batch form and writes no appendix -- "
-                 "bootstrap a bucket table with "
-                 "operators.dedup.minhash_band_buckets over the curated "
-                 "output, then run later shards against it")
-    if ("spandedup" in stages) and bool(args.seen_grams) != bool(args.new_grams):
-        ap.error("--seen-grams and --new-grams come together (batch "
-                 "incremental span dedup writes the shard's appendix to a "
-                 "side path; union it in after the output commits). "
-                 "Bootstrap a gram table with operators.dedup."
-                 "span_gram_table over the curated corpus")
-    if (args.seen_grams or args.new_grams) and "spandedup" not in stages:
-        ap.error("--seen-grams/--new-grams only apply to the spandedup "
-                 "stage")
-    if args.seen_grams:
-        # incremental_span_dedup's documented precondition: every doc-
-        # dropping stage must run BEFORE the appendix is derived -- the
-        # fixed stage order runs these AFTER spandedup, so the appendix
-        # would mark grams of documents that never ship, and a later
-        # shard's sole copy of a span shared with a dropped doc would be
-        # silently excised (permanent content loss; round-7 advice item)
-        droppers_after = [
-            s for s in ("gate", "classify", "dedup", "neardup", "semdedup",
-                        "decontam", "cap", "sample")
-            if s in stages
-        ]
-        if droppers_after:
-            ap.error(
-                "--seen-grams cannot be combined with doc-dropping stages "
-                f"that run after spandedup ({', '.join(droppers_after)}): "
-                "the gram appendix must describe the documents that "
-                "actually ship. Run the dropping stages in a prior pass, "
-                "then the incremental spandedup pass on its output"
-            )
-    for new_p, seen_p, names in (
-        (args.new_fps, args.seen_fps, "--new-fps/--seen-fps"),
-        (args.new_buckets, args.seen_buckets, "--new-buckets/--seen-buckets"),
-        (args.new_grams, args.seen_grams, "--new-grams/--seen-grams"),
-    ):
-        # the natural "update in place" reading is a data-loss hazard: the
-        # overwrite plan reads the seen table LAZILY while deleting the
-        # same parquet dir -- at best a late failure, at worst a destroyed
-        # table; the appendix must go to a fresh path and be unioned later
-        if new_p and seen_p and os.path.abspath(new_p) == os.path.abspath(seen_p):
-            ap.error(f"{names} must be different paths: the appendix is "
-                     "written while the seen table is still being read "
-                     "lazily -- write to a fresh path and union afterwards")
-
-    if ("decontam" in stages) and not args.benchmark:
-        ap.error("the decontam stage requires --benchmark")
-    if ("classify" in stages) and not args.clf_weights:
-        ap.error("the classify stage requires --clf-weights (train one with "
-                 "jobs/train_clf_job.py)")
-    if getattr(args, "clf_top_frac", None) is not None:
-        if "classify" not in stages:
-            ap.error("--clf-top-frac only applies to the classify stage")
-        if not 0.0 < args.clf_top_frac <= 1.0:
-            ap.error("--clf-top-frac must be in (0, 1]")
-        if getattr(args, "resumable", False):
-            ap.error("--clf-top-frac conflicts with --resumable: the "
-                     "cutpoint is a GLOBAL score quantile, and a "
-                     "bucket-local quantile is not the corpus quantile -- "
-                     "run it as a one-shot pass (the fixed --clf-threshold "
-                     "form stays bucket-local-safe)")
-    if getattr(args, "lsh_threshold", None) is not None:
-        if "neardup" not in stages:
-            ap.error("--lsh-threshold only applies to the neardup stage")
-        if not 0.0 < args.lsh_threshold < 1.0:
-            ap.error("--lsh-threshold must be in (0, 1)")
-        if args.seen_buckets or args.streaming:
-            ap.error("--lsh-threshold is for the within-corpus batch form "
-                     "only: incremental (--seen-buckets) and streaming "
-                     "probes must match the persisted table's stamped "
-                     "banding, which a derived banding would silently "
-                     "break (the stamp errors, this guard errors sooner)")
-    if args.mix_temperature is not None and args.rate:
-        ap.error("--mix-temperature and --rate are exclusive")
-    if args.mix_temperature is not None and args.mix_temperature <= 0:
-        ap.error("--mix-temperature must be > 0")
-    if args.mix_keep_frac != 1.0 and args.mix_temperature is None:
-        ap.error("--mix-keep-frac only applies with --mix-temperature "
-                 "(explicit --rate flags carry their own rates)")
-    if args.mix_keep_frac <= 0.0:
-        # values > 1 are deliberately allowed: per-source rates clamp to 1
-        # regardless, and over-asking is the documented recovery when a
-        # tiny source cannot supply its flattened share
-        ap.error("--mix-keep-frac must be > 0")
-    if args.resumable:
-        if args.streaming:
-            ap.error("--resumable and --streaming are exclusive (the "
-                     "streaming checkpoint already gives exactly-once "
-                     "over arriving files)")
-        bad = sorted(set(stages) - set(RESUMABLE_STAGES))
-        if bad:
-            ap.error(f"stages not resumable: {bad} -- bucket-local "
-                     "processing must equal global processing, so only "
-                     f"{','.join(RESUMABLE_STAGES)} compose with "
-                     "--resumable; run corpus-wide stages as a one-shot "
-                     "pass over the resumable output")
-        if args.seen_fps or args.fps_table:
-            ap.error("incremental dedup (--seen-fps/--fps-table) does not "
-                     "compose with --resumable: the fingerprint table is "
-                     "corpus-wide state")
-        if args.mix_temperature is not None:
-            ap.error("--mix-temperature is corpus-wide (per-source "
-                     "aggregate) and does not compose with --resumable; "
-                     "pass explicit --rate flags")
-        if args.report:
-            ap.error("--report with --resumable: run the report as a "
-                     "separate batch job over <output>/data")
-        if args.partition_output_by:
-            ap.error("--partition-output-by conflicts with --resumable "
-                     "(the data layout is partitioned by bucket)")
-        if args.shuffle_output is not None:
-            ap.error("--shuffle-output conflicts with --resumable (a "
-                     "global order crosses buckets); shuffle as a "
-                     "one-shot pass over the resumable output")
-        if args.buckets < 1:
-            ap.error("--buckets must be >= 1")
-    if args.streaming:
-        if args.seen_fps or args.fps_table:
-            ap.error("incremental dedup (--seen-fps/--fps-table) is "
-                     "batch-only")
-        if args.shuffle_output is not None:
-            ap.error("--shuffle-output is batch-only: a global order has "
-                     "no streaming analog")
-        if "urldedup" in stages and args.url_keep != "min_id":
-            ap.error("--url-keep longest is batch-only: streaming urldedup "
-                     "is first-seen (dropDuplicatesWithinWatermark cannot "
-                     "compare captures it has already emitted)")
-        if "urldedup" in stages and "dedup" in stages:
-            ap.error("streaming urldedup and dedup cannot compose in one "
-                     "query: each needs its own watermark on the event "
-                     "column and Spark disallows redefining a watermark "
-                     "(STREAM_FAILED at runtime). Run urldedup in this "
-                     "stream and dedup in a second hop (or batch), or "
-                     "vice versa")
-        if "linededup" in stages:
-            ap.error("linededup is batch-only: the corpus-first occurrence "
-                     "of a line is a corpus-wide aggregate with unbounded "
-                     "streaming state")
-        if "spandedup" in stages:
-            ap.error("spandedup is batch-only: the corpus-first occurrence "
-                     "of a token span is a corpus-wide aggregate with "
-                     "unbounded streaming state")
-        if "cap" in stages:
-            ap.error("cap (per-source document cap) is batch-only: it needs "
-                     "a corpus-wide per-stratum count, which has no bounded "
-                     "streaming-state form")
-        if args.mix_temperature is not None:
-            ap.error("--mix-temperature is batch-only: deriving the rates "
-                     "needs a corpus-wide per-source aggregate; pass "
-                     "explicit --rate flags when streaming")
-        if "neardup" in stages and not args.seen_buckets:
-            ap.error("streaming neardup requires --seen-buckets: the "
-                     "WITHIN-stream connected-components form is batch-only; "
-                     "what streams is the stateless corpus probe (drop docs "
-                     "sharing any LSH band bucket with the persisted table). "
-                     "For within-stream near-dups compose the simhash "
-                     "dropDuplicatesWithinWatermark path")
-        if "neardup" in stages and args.new_buckets:
-            ap.error("--new-buckets is batch-only: a stream updating the "
-                     "bucket table it joins against would race its own "
-                     "micro-batches; advance the table with a batch "
-                     "incremental run over the accumulated output")
-        if "semdedup" in stages:
-            ap.error("semdedup is batch-only: the KMeans fit and the "
-                     "iterative component labeling both need the full "
-                     "corpus")
-        if "classify" in stages:
-            ap.error("classify is batch-only: the score is a per-doc "
-                     "aggregate over exploded terms followed by a semi-join, "
-                     "neither of which streams in append mode; gate streams, "
-                     "classify in the batch pass over the stream's output")
-        if "decontam" in stages:
-            ap.error("decontam is batch-only: the per-(train,bench) "
-                     "overlap is a shingle-explode aggregation with no "
-                     "bounded streaming-state form; run it as a batch "
-                     "pass over the stream's output")
-        if args.report:
-            ap.error("--report is batch-only (corpus-wide aggregate); run "
-                     "it as a separate batch job over the stream's output")
-        if not args.checkpoint:
-            ap.error("--streaming requires --checkpoint")
+    if args.resumable and args.streaming:
+        ap.error("--resumable and --streaming are exclusive (the streaming "
+                 "checkpoint already gives exactly-once over arriving files)")
+    mode = ("streaming" if args.streaming
+            else "resumable" if args.resumable else "batch")
+    try:
+        check_args(args, stages, mode)
+    except (SystemExit, ValueError) as e:
+        ap.error(str(e))
 
     from pyspark.sql import SparkSession
 
@@ -584,13 +972,9 @@ def main() -> None:
         # collide with the surviving files
         builder = builder.enableHiveSupport()
     spark = builder.getOrCreate()
-    if args.streaming:
-        result = run_pipeline_streaming(spark, args, stages)
-    elif args.resumable:
-        result = run_pipeline_resumable(spark, args, stages)
-    else:
-        result = run_pipeline(spark, args, stages)
-    print(json.dumps(result))
+    run = {"batch": run_pipeline, "resumable": run_pipeline_resumable,
+           "streaming": run_pipeline_streaming}[mode]
+    print(json.dumps(run(spark, args, stages)))
     spark.stop()
 
 
@@ -627,391 +1011,63 @@ def _load_benchmark(spark, args):
     return bench
 
 
+class _Run:
+    """One pipeline invocation: what the stage builders read (session,
+    arguments, mode) plus the batch mode's per-stage Observations and the
+    state mutations deferred until the curated output commits."""
+
+    def __init__(self, spark, args, stages, mode: str):
+        check_args(args, stages, mode)
+        self.spark, self.args, self.mode = spark, args, mode
+        self.stages = [STAGE_TABLE[s] for s in STAGES if s in stages]
+        self.input_columns: list[str] = []
+        self.observations: list = []
+        # e.g. the --fps-table appendix: appending the shard's fingerprints
+        # before the output write would, on a crash in between, mark every
+        # doc of the shard as seen -- a rerun would emit ZERO rows
+        self.post_commit: list = []
+
+    @cached_property
+    def classifier(self):
+        from action_pdf_accessibility_paddle_docker_spark.operators import (
+            quality_clf as QC,
+        )
+
+        return QC.load_classifier(self.spark, self.args.clf_weights)
+
+    def apply(self, df, names=None):
+        """Run the selected stages (all, or those in ``names``) over ``df``
+        in the canonical order."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        batch = self.mode == "batch"
+        for st in self.stages:
+            if names is not None and st.name not in names:
+                continue
+            if st.prepare is not None:
+                df = st.prepare(self, df)
+            if batch and st.checkpoint:
+                df = df.localCheckpoint(eager=True)
+            df = st.build(self, df)
+            if batch and st.observe:
+                # counters ride the write pass (a count() per stage would
+                # re-execute the chain once per stage)
+                obs = Observation(f"after_{st.name}")
+                df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                self.observations.append((st.name, obs, df))
+        return df
+
+
 def run_pipeline(spark, args, stages) -> dict:
     """The curation pipeline body; separated from main() so tests can
     drive it on a shared session without the job owning its lifecycle."""
     from pyspark.sql import functions as F
 
-    from action_pdf_accessibility_paddle_docker_spark.operators import dedup as D
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        linefilter as L,
-    )
-    from action_pdf_accessibility_paddle_docker_spark.operators import pii as P
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        textstats as T,
-    )
-
-    from pyspark.sql import Observation
-
+    run = _Run(spark, args, stages, "batch")
     df = spark.read.parquet(args.input)
     counters: dict[str, int] = {"input": df.count()}
-
-    # Per-stage row counters ride the single write pass as Observations
-    # (no extra scans -- a count() per stage would re-execute the whole
-    # chain once per stage, which is wrong at curation scale). A stage
-    # that drops everything is then visible in the JSON line instead of a
-    # bare output=0.
-    observations: list[tuple[str, Observation, "object"]] = []
-    # State-mutating side effects (e.g. the --fps-table appendix) deferred
-    # until AFTER the curated output commits: appending the shard's
-    # fingerprints first would, on a crash between the append and the
-    # output write, permanently mark every doc of the shard as seen -- a
-    # rerun would then emit ZERO rows (silent data loss on retry). The
-    # frames feeding these callbacks are eagerly checkpointed, so running
-    # them late recomputes nothing.
-    post_commit: list = []
-
-    def observed(frame, stage: str):
-        obs = Observation(f"after_{stage}")
-        out = frame.observe(obs, F.count(F.lit(1)).alias("rows"))
-        observations.append((stage, obs, out))
-        return out
-
-    if "urlfilter" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-        df = observed(
-            U.filter_blocked_domains(
-                df, _read_blocked_domains(args.blocked_domains),
-                url_col=getattr(args, "url_col", "url"),
-            ),
-            "urlfilter",
-        )
-    if "urldedup" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-        df = observed(
-            U.url_dedup(df, id_col=args.id_col, url_col=args.url_col,
-                        policy=getattr(args, "url_keep", "min_id"),
-                        text_col=args.text_col),
-            "urldedup",
-        )
-    if "clean" in stages:
-        df = observed(
-            L.apply_line_filter(
-                df, text_col=args.text_col, min_kept_lines=args.min_kept_lines
-            ),
-            "clean",
-        )
-    if "linededup" in stages:
-        # eager pre-checkpoint (see the classify note): the operator
-        # references its input twice, and its own internal checkpoint is
-        # LAZY (fine standalone, wrong under observed stages)
-        df = df.localCheckpoint(eager=True)
-        df = observed(
-            D.remove_duplicate_lines(
-                df, id_col=args.id_col, text_col=args.text_col,
-                min_chars=args.line_min_chars, checkpoint_input=False,
-                separator=(
-                    "\n\n"
-                    if getattr(args, "linededup_unit", "line") == "paragraph"
-                    else "\n"
-                ),
-            ),
-            "linededup",
-        )
-    if "spandedup" in stages:
-        if args.span_k < 2:
-            raise SystemExit("--span-k must be >= 2")
-        # the pairing invariant is owned HERE too, not just argparse: a
-        # library caller with seen_grams but no appendix path would
-        # otherwise crash on parquet(None) AFTER the stage's work ran
-        if bool(getattr(args, "seen_grams", None)) != bool(
-            getattr(args, "new_grams", None)
-        ):
-            raise SystemExit(
-                "--seen-grams and --new-grams come together (the appendix "
-                "is the other half of the CDC contract)"
-            )
-        if getattr(args, "seen_grams", None):
-            # incremental_span_dedup's documented precondition, owned HERE
-            # as well as argparse (library callers bypass the CLI): every
-            # doc-dropping stage must run BEFORE the appendix is derived,
-            # or the gram appendix marks grams of documents that never
-            # ship and a later shard's sole copy of a shared span is
-            # silently excised (round-7 advice item)
-            droppers_after = [
-                s for s in ("gate", "classify", "dedup", "neardup",
-                            "semdedup", "decontam", "cap", "sample")
-                if s in stages
-            ]
-            if droppers_after:
-                raise SystemExit(
-                    "--seen-grams cannot be combined with doc-dropping "
-                    f"stages after spandedup ({', '.join(droppers_after)}): "
-                    "run them in a prior pass, then incremental spandedup "
-                    "on its output"
-                )
-        # same shape as linededup: the operator references its input twice,
-        # so materialize eagerly here (observation correctness) and skip its
-        # internal lazy checkpoint
-        df = df.localCheckpoint(eager=True)
-        if getattr(args, "seen_grams", None):
-            seen = spark.read.parquet(args.seen_grams)
-            rewritten, new_grams = D.incremental_span_dedup(
-                df, seen, k=args.span_k, id_col=args.id_col,
-                text_col=args.text_col, checkpoint_input=False,
-            )
-            # side-path appendix (crash-safe by construction: the user
-            # unions it in only after the output commit)
-            new_grams.write.mode("overwrite").parquet(args.new_grams)
-            df = observed(rewritten, "spandedup")
-        else:
-            df = observed(
-                D.remove_duplicate_spans(
-                    df, k=args.span_k, id_col=args.id_col,
-                    text_col=args.text_col, checkpoint_input=False,
-                ),
-                "spandedup",
-            )
-    if "pii" in stages:
-        df = P.redact(df, text_col=args.text_col)
-    if "gate" in stages:
-        df = observed(T.apply_quality_gate(df, text_col=args.text_col), "gate")
-    if "classify" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import (
-            quality_clf as QC,
-        )
-
-        # materialize the pipeline-so-far: the score aggregate and the
-        # semi-join's probe side both reference it (AQE compiles the
-        # subplans independently -- same hazard as neardup/semdedup).
-        # EAGER everywhere in this CLI: a LAZY localCheckpoint completes
-        # every upstream Observation with rows=0 before any data flows
-        # (measured), silently zeroing the per-stage counters; eager
-        # materialization costs nothing extra (the pipeline always
-        # executes) and the observations fire with real values
-        weights, bias = QC.load_classifier(spark, args.clf_weights)
-        df = df.localCheckpoint(eager=True)
-        df = observed(
-            QC.apply_classifier(
-                df, weights, bias=bias, threshold=args.clf_threshold,
-                text_col=args.text_col, id_col=args.id_col,
-                top_frac=getattr(args, "clf_top_frac", None),
-            ),
-            "classify",
-        )
-    if "dedup" in stages:
-        if getattr(args, "fps_table", None):
-            # bucketed-table incremental mode: the corpus-sized state side
-            # of the anti-join is read pre-partitioned (no shuffle), and
-            # the appendix goes back into the SAME table (safe -- the
-            # appender materializes the shard-sized rows first)
-            n_buckets = int(getattr(args, "fps_buckets", 256))
-            fps_key = getattr(args, "fps_key", "content")
-            legacy_schema = False
-            if spark.catalog.tableExists(args.fps_table):
-                # key-space provenance is validated inside
-                # incremental_dedup (check_fps_key); here we only detect
-                # the legacy fingerprint-only schema so the appendix
-                # matches it (Spark validates append schemas)
-                seen = spark.table(args.fps_table)
-                legacy_schema = "fp_key" not in seen.columns
-            else:
-                seen = spark.createDataFrame([], "fingerprint string")
-            survivors, _ = D.incremental_dedup(
-                df, seen, id_col=args.id_col, text_col=args.text_col,
-                method=getattr(args, "fps_method", "join"),
-                key=fps_key,
-                url_col=getattr(args, "url_col", "url"),
-            )
-            # one materialization serves the appendix AND the output write
-            # (the append is an eager action; without this the whole
-            # upstream stage chain executes twice)
-            survivors = survivors.localCheckpoint(eager=True)
-            # the appendix itself runs POST-COMMIT (see post_commit above):
-            # state must only record docs whose curated rows are durable
-            post_commit.append(
-                lambda s=survivors, nb=n_buckets, k=(
-                    None if legacy_schema else fps_key
-                ): D.append_fingerprints(
-                    s.select("fingerprint"), args.fps_table,
-                    n_buckets=nb, key=k,
-                )
-            )
-            df = survivors.drop("fingerprint")
-        elif args.seen_fps:
-            fps_key = getattr(args, "fps_key", "content")
-            # mergeSchema: an accumulated fps dir can mix pre-stamp
-            # (fingerprint-only) and stamped shard files; without it the
-            # read picks one footer's schema nondeterministically
-            seen = spark.read.option("mergeSchema", "true").parquet(
-                args.seen_fps
-            )
-            survivors, _ = D.incremental_dedup(
-                df, seen, id_col=args.id_col, text_col=args.text_col,
-                method=getattr(args, "fps_method", "join"),
-                key=fps_key,
-                url_col=getattr(args, "url_col", "url"),
-            )
-            survivors = survivors.localCheckpoint(eager=True)
-            survivors.select(
-                "fingerprint", F.lit(fps_key).alias("fp_key"),
-            ).write.mode("overwrite").parquet(args.new_fps)
-            df = survivors.drop("fingerprint")
-        else:
-            canon = D.exact_dedup(df, id_col=args.id_col, text_col=args.text_col)
-            df = df.join(
-                canon.select(F.col("canonical_id").alias(args.id_col)), args.id_col
-            )
-    if "neardup" in stages:
-        # keep the min-id canonical of each LSH connected component; the
-        # cluster table is (doc_id, cluster_id) for EVERY doc, so the
-        # survivor filter is a doc_id equi-join, never a text re-hash.
-        # Materialize the pipeline-so-far first: the iterative label
-        # propagation (and both sides of the survivor join) would
-        # otherwise re-execute the whole clean/pii/gate/dedup chain from
-        # the source once per round -- the per-stage re-execution the
-        # counters comment below calls wrong at curation scale
-        df = df.localCheckpoint(eager=True)
-        if getattr(args, "seen_buckets", None):
-            seen = spark.read.parquet(args.seen_buckets)
-            survivors, new_buckets = D.incremental_near_dedup(
-                df, seen, id_col=args.id_col, text_col=args.text_col,
-                hash_family=args.hash_family,
-                persist_buckets=getattr(args, "bucket_persist", "cluster"),
-            )
-            new_buckets.write.mode("overwrite").parquet(args.new_buckets)
-            df = observed(survivors, "neardup")
-        else:
-            clusters = D.dedup_clusters(
-                df, id_col=args.id_col, text_col=args.text_col,
-                hash_family=args.hash_family,
-                threshold=getattr(args, "lsh_threshold", None),
-            )
-            df = observed(
-                df.join(
-                    clusters.where(F.col("doc_id") == F.col("cluster_id"))
-                    .select(F.col("doc_id").alias(args.id_col)),
-                    args.id_col,
-                ),
-                "neardup",
-            )
-    if "semdedup" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import (
-            similarity as S,
-        )
-
-        # materialize the pipeline-so-far: the KMeans fit, the iterative
-        # component labeling, and the survivor join all reference it
-        df = df.localCheckpoint(eager=True)
-        if getattr(args, "embeddings", None):
-            embt = spark.read.parquet(args.embeddings)
-            eid = getattr(args, "embedding_id_col", None)
-            if eid and eid != args.id_col:
-                embt = embt.withColumnRenamed(eid, args.id_col)
-            if args.id_col not in embt.columns:
-                raise SystemExit(
-                    f"semdedup: --embeddings table has no {args.id_col!r} "
-                    f"column (columns: {embt.columns}) -- pass "
-                    "--embedding-id-col to name its id column"
-                )
-        else:
-            embt = df
-        emb_col = getattr(args, "embedding_col", "embedding")
-        if emb_col not in embt.columns:
-            raise SystemExit(
-                f"semdedup: column {emb_col!r} not found "
-                f"{'in --embeddings' if getattr(args, 'embeddings', None) else 'on the input'}"
-                " -- pass --embedding-col or --embeddings"
-            )
-        if getattr(args, "embeddings", None):
-            # only ids still alive in the pipeline: a semantic rep must
-            # never be a doc an earlier stage already removed
-            embt = embt.join(df.select(args.id_col), args.id_col, "left_semi")
-        sem = S.semantic_dedup(
-            embt,
-            threshold=getattr(args, "semdedup_threshold", 0.9),
-            n_clusters=getattr(args, "semdedup_clusters", 16),
-            id_col=args.id_col, vec_col=emb_col,
-        )
-        keep = sem.where(F.col("rep_id") == F.col(args.id_col))
-        cap_n = int(getattr(args, "semdedup_cap", 0) or 0)
-        if cap_n > 0:
-            # method='exact': the CLI promises AT MOST cap survivors per
-            # coarse cell (and a non-empty cell keeps something). The rate
-            # form is only ~cap in expectation and can zero out a small
-            # cell. Cells are bounded (~n/k by construction), so the
-            # per-key window is safe here -- matching the reference
-            # composition in test_similarity.
-            keep = T.cap_per_stratum(
-                keep, cap=cap_n, stratum_col="cid", id_col=args.id_col,
-                method="exact",
-            )
-        df = observed(
-            df.join(keep.select(args.id_col), args.id_col), "semdedup"
-        )
-    if "decontam" in stages:
-        bench = _load_benchmark(spark, args)
-        flagged = D.decontaminate(
-            df, bench,
-            min_overlap_frac=getattr(args, "decontam_overlap", 0.3),
-            id_col=args.id_col, text_col=args.text_col,
-        )
-        # the flagged set is small (leaked docs), so the anti-join
-        # broadcasts it and the corpus streams map-only
-        df = observed(
-            df.join(
-                F.broadcast(
-                    flagged.select(
-                        F.col("train_id").alias(args.id_col)
-                    ).distinct()
-                ),
-                args.id_col, "left_anti",
-            ),
-            "decontam",
-        )
-    if "cap" in stages:
-        # materialize first (eager -- see the classify note): the cap's
-        # count aggregate and keep filter then share one materialization,
-        # and cap_per_stratum's own LAZY checkpoint (which would zero the
-        # upstream Observations) is skipped
-        cap_stratum = args.stratum_col
-        if getattr(args, "cap_by_domain", False):
-            from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-            # derive the registered domain row-wise (staged projections --
-            # the inlined PSL CASE would blow up the plan); NULL
-            # (unparseable) is one stratum -- cap_per_stratum's sentinel
-            # handles it
-            df = U.with_url_columns(df, args.url_col, url_domain="_cap_domain")
-            cap_stratum = "_cap_domain"
-        df = df.localCheckpoint(eager=True)
-        df = observed(
-            T.cap_per_stratum(
-                df, cap=args.cap_per_source, stratum_col=cap_stratum,
-                id_col=args.id_col, checkpoint=False,
-            ),
-            "cap",
-        )
-        if cap_stratum == "_cap_domain":
-            df = df.drop("_cap_domain")
-    if "split" in stages:
-        df = T.stable_split(df, id_col=args.id_col)
-    if "sample" in stages:
-        if getattr(args, "mix_temperature", None) is not None:
-            if args.rate:
-                # argparse validates this in main(); defensive for direct
-                # run_pipeline callers (tests, notebooks)
-                raise SystemExit("--mix-temperature and --rate are exclusive")
-            # materialize the pipeline-so-far once: the rate derivation is
-            # an eager aggregate over it, and the sample filter reads it
-            # again for the write
-            df = df.localCheckpoint(eager=True)
-            rates = T.temperature_mix_rates(
-                df, stratum_col=args.stratum_col,
-                temperature=args.mix_temperature,
-                keep_fraction=getattr(args, "mix_keep_frac", 1.0),
-            )
-        else:
-            rates = {}
-            for spec in args.rate:
-                k, _, v = spec.partition("=")
-                rates[k] = float(v)
-        df = T.stratified_sample(
-            df, rates=rates, stratum_col=args.stratum_col,
-            id_col=args.id_col, default_rate=args.default_rate,
-        )
+    df = run.apply(df)
 
     writer = df
     part_col = getattr(args, "partition_output_by", None)
@@ -1070,9 +1126,9 @@ def run_pipeline(spark, args, stages) -> dict:
     # the curated output is durable from here on: apply deferred state
     # mutations (fps-table appendix) -- a crash BEFORE this point reruns
     # cleanly because the state table never saw the shard
-    for fn in post_commit:
+    for fn in run.post_commit:
         fn()
-    for stage, obs, frame in observations:
+    for stage, obs, frame in run.observations:
         # When a stage empties the corpus, AQE empty-relation propagation
         # can replace the downstream subtree (incl. the CollectMetrics
         # node) with an empty LocalRelation, so the observation never
@@ -1155,24 +1211,22 @@ def run_pipeline(spark, args, stages) -> dict:
         result["report"] = row
     return result
 
-
-
 def run_pipeline_resumable(spark, args, stages) -> dict:
-    """Checkpoint-resumable batch curation -- the curation analog of
-    ``plans.lineage.run_resumable`` (north_rule: per-partition lineage +
-    counters enabling checkpoint-resumable restarts), sharing its lineage
-    commit/skip machinery.
+    """Checkpoint-resumable batch curation over
+    ``plans.lineage.run_bucketed`` -- the exactly-once bucket loop the
+    extraction runner shares (north_rule: per-partition lineage + counters
+    enabling checkpoint-resumable restarts).
 
     The corpus is sharded into ``--buckets`` hash buckets; every pending
     bucket is written in ONE ``partitionBy('bucket')`` pass by default
     (one input scan per resume cycle; ``--bucket-batch`` bounds crash
     recomputation at one extra scan per batch), and each bucket's lineage
-    record (rows, id range) is committed atomically AFTER its data write:
-    a restart lists the lineage dir and skips completed buckets --
-    exactly-once per bucket despite crashes between batches.
+    record (``counters``: rows, min_id, max_id of its written rows) is
+    committed atomically AFTER its data write: a restart lists the lineage
+    dir and skips completed buckets.
 
     Bucket-local processing must equal the one-shot pipeline, hence the
-    main() stage guard (RESUMABLE_STAGES). The one subtle case is exact
+    stage table's resumable refusals. The one subtle case is exact
     dedup: the bucket key is the dedup FINGERPRINT (md5 of the normalized
     post-clean/pii text -- the text dedup itself sees) rather than the
     doc id, so every duplicate group lands whole in one bucket and
@@ -1187,325 +1241,67 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
     ``fail_after_batches`` (Namespace attr, test hook): raise after N
     batches to simulate a crash; the next call resumes.
     """
-    import time as _time
-
-    # the bucket-local == global invariant is owned HERE, not just by the
-    # argparse layer: a programmatic caller passing a cross-bucket stage
-    # (spandedup, neardup, ...) must get a loud error, never an output
-    # stamped with a stage that silently never ran (review-pass-7 class,
-    # same as the --clf-top-frac fix)
-    bad = sorted(set(stages) - set(RESUMABLE_STAGES))
-    if bad:
-        raise SystemExit(
-            f"stages not resumable (bucket-local result != global): "
-            f"{','.join(bad)}; resumable runs support "
-            f"{','.join(RESUMABLE_STAGES)}"
-        )
-
     from pyspark.sql import functions as F
 
-    from action_pdf_accessibility_paddle_docker_spark.operators import dedup as D
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        linefilter as L,
-    )
-    from action_pdf_accessibility_paddle_docker_spark.operators import pii as P
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        textstats as T,
-    )
     from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
-        _commit_lineage,
-        _delete_bucket_dirs,
-        completed_buckets,
-        ensure_run_config,
+        run_bucketed,
     )
 
-    df = spark.read.parquet(args.input)
-    if "urlfilter" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-        df = U.filter_blocked_domains(
-            df, _read_blocked_domains(args.blocked_domains),
-            url_col=args.url_col,
-        )
-    if "clean" in stages:
-        df = L.apply_line_filter(
-            df, text_col=args.text_col, min_kept_lines=args.min_kept_lines
-        )
-    if "pii" in stages:
-        df = P.redact(df, text_col=args.text_col)
-    if "classify" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import (
-            quality_clf as _QC,
-        )
-
-        # own the invariant here, not just at the argparse layer: the
-        # top-fraction cutpoint is a GLOBAL score quantile, and this
-        # function scores bucket-locally -- silently filtering by the
-        # fixed threshold instead would produce a different corpus
-        if getattr(args, "clf_top_frac", None) is not None:
-            raise ValueError(
-                "clf_top_frac is incompatible with the resumable pipeline: "
-                "the cutpoint is a global score quantile and buckets are "
-                "scored independently; run the classify stage as a "
-                "one-shot pass (run_pipeline) or use the fixed threshold"
-            )
-        clf_weights, clf_bias = _QC.load_classifier(spark, args.clf_weights)
+    run = _Run(spark, args, stages, "resumable")
+    df = run.apply(spark.read.parquet(args.input), _PRE_BUCKET)
+    per_batch = [s for s in stages if s not in _PRE_BUCKET]
     n_buckets = int(getattr(args, "buckets", 64))
     key = (F.md5(D.normalized(F.col(args.text_col))) if "dedup" in stages
            else F.col(args.id_col).cast("string"))
     part = df.withColumn(
         "bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     )
-
     # pin everything a bucket index's MEANING depends on: the count, the
-    # key kind (dedup fingerprints over the post-clean/pii text vs raw
-    # ids), and the stage/column set that shapes that key. A resume under
-    # different values would silently skip wrong buckets and leave stale
-    # partitions from the old keying in <output>/data.
-    # row-set-shaping parameters are pinned per stage actually present:
-    # committed buckets keep the values they ran under, so a resume with
-    # (say) a stricter --min-kept-lines would yield an inconsistent corpus
-    # with no error. The input path is pinned too (a resume against a
-    # different --input silently mixes corpora AND loses every new-input
-    # row hashing into an already-committed bucket). Stages pin in the
-    # CANONICAL applied order so a reordered --stages listing of the same
-    # set does not spuriously block a legitimate resume.
-    shaping: dict = {}
-    if "clean" in stages:
-        shaping["min_kept_lines"] = int(args.min_kept_lines)
-    if "urlfilter" in stages:
-        shaping["url_col"] = args.url_col
-        shaping["blocked_domains"] = getattr(args, "blocked_domains", None)
-    if "classify" in stages:
-        shaping["clf_weights"] = args.clf_weights
-        shaping["clf_threshold"] = float(getattr(args, "clf_threshold", 0.5))
-    if "sample" in stages:
-        shaping["rates"] = sorted(getattr(args, "rate", []) or [])
-        shaping["default_rate"] = float(getattr(args, "default_rate", 1.0))
-        shaping["stratum_col"] = args.stratum_col
-    ensure_run_config(
-        args.output,
-        {
-            "kind": "corpus",
-            "n_buckets": int(n_buckets),
-            "bucket_key": ("fingerprint" if "dedup" in stages else "id"),
-            "stages": [st for st in STAGES if st in set(stages)],
-            "id_col": args.id_col,
-            "text_col": args.text_col,
-            "input": args.input,
-            **shaping,
-        },
-        spark,
-    )
-    done = completed_buckets(args.output, spark)
-    pending = [b for b in range(n_buckets) if b not in done]
-    data_root = args.output.rstrip("/") + "/data"
-    step = int(getattr(args, "bucket_batch", None) or 0) or max(1, len(pending))
-    batches = [pending[i:i + step] for i in range(0, len(pending), step)]
-    fail_after = getattr(args, "fail_after_batches", None)
-    summary = {
-        "mode": "corpus-resumable", "stages": stages,
-        "resumed_buckets": len(done), "ran_buckets": 0, "input_scans": 0,
+    # key kind, the stage/column set that shapes the key, the input path,
+    # and each present stage's row-set-shaping parameters (committed
+    # buckets keep the values they ran under). Stages pin in the CANONICAL
+    # order so a reordered --stages listing of the same set still resumes.
+    config = {
+        "kind": "corpus",
+        "n_buckets": n_buckets,
+        "bucket_key": ("fingerprint" if "dedup" in stages else "id"),
+        "stages": [st.name for st in run.stages],
+        "id_col": args.id_col,
+        "text_col": args.text_col,
+        "input": args.input,
     }
-
-    n_done = 0
-    for batch in batches:
-        if fail_after is not None and n_done >= fail_after:
-            raise RuntimeError(f"injected failure after {n_done} batches")
-        out = part.filter(F.col("bucket").isin([int(b) for b in batch])) \
-            if len(batch) < n_buckets else part
-        if "gate" in stages:
-            out = T.apply_quality_gate(out, text_col=args.text_col)
-        if "classify" in stages:
-            # per-document under FIXED weights, so bucket-local == global;
-            # the weights LocalRelation re-broadcasts per batch (tiny)
-            out = _QC.apply_classifier(
-                out, clf_weights, bias=clf_bias,
-                threshold=args.clf_threshold,
-                text_col=args.text_col, id_col=args.id_col,
-            )
-        if "dedup" in stages:
-            # bucket-local exact dedup == global: see the docstring
-            canon = D.exact_dedup(out, id_col=args.id_col,
-                                  text_col=args.text_col)
-            out = out.join(
-                canon.select(F.col("canonical_id").alias(args.id_col)),
-                args.id_col,
-            )
-        if "split" in stages:
-            out = T.stable_split(out, id_col=args.id_col)
-        if "sample" in stages:
-            rates = {}
-            for spec in args.rate:
-                k, _, v = spec.partition("=")
-                rates[k] = float(v)
-            out = T.stratified_sample(
-                out, rates=rates, stratum_col=args.stratum_col,
-                id_col=args.id_col, default_rate=args.default_rate,
-            )
-        # spread each bucket across tasks by id (one-partition-per-bucket
-        # would serialize a big bucket's write); partitionBy splits the
-        # files per bucket dir regardless of task layout
-        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
-        # clear the batch's (pending, uncommitted) partition dirs first:
-        # dynamic overwrite only replaces partitions it writes rows to, so
-        # a crashed attempt's rows would survive a re-run that now yields
-        # zero rows for that bucket -- committed lineage over stale data
-        _delete_bucket_dirs(spark, data_root, [int(b) for b in batch])
-        (
-            out.repartition(n_write, "bucket", args.id_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(data_root)
-        )
-        summary["input_scans"] += 1
-        stamp = _time.time()
-        # counters derived from the just-written output: a
-        # partition-pruned, column-pruned read, never a chain re-execution.
-        # When every row of the batch was dropped upstream the data root
-        # may not exist at all (dynamic overwrite writes no dirs) -- the
-        # zero-row lineage records must still commit so resume skips.
-        # ONLY AnalysisException (missing path / no schema) means that; a
-        # transient storage error must propagate, or rows=0 records would
-        # be committed over intact data -- permanently wrong metadata.
-        from pyspark.errors import AnalysisException
-
-        try:
-            written = spark.read.parquet(data_root)
-        except AnalysisException:  # path not yet created (zero-row batch)
-            written = None
-        got = {} if written is None else {
-            int(r["bucket"]): r.asDict()
-            for r in written
-            .where(F.col("bucket").isin([int(b) for b in batch]))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min(args.id_col).alias("min_id"),
-                F.max(args.id_col).alias("max_id"),
-            )
-            .collect()
-        }
-        for b in batch:
-            rec = got.get(int(b), {"rows": 0, "min_id": None, "max_id": None})
-            rec.pop("bucket", None)
-            _commit_lineage(
-                args.output, int(b),
-                {"bucket": int(b), "stamp": stamp,
-                 "rows": int(rec["rows"]),
-                 "min_id": rec["min_id"], "max_id": rec["max_id"]},
-                spark,
-            )
-        summary["ran_buckets"] += len(batch)
-        n_done += 1
-
+    for st in run.stages:
+        if st.pins is not None:
+            config.update(st.pins(args))
+    summary = run_bucketed(
+        spark, args.output, config, part, n_buckets,
+        lambda rows, batch: (run.apply(rows, per_batch), None),
+        {"rows": F.count(F.lit(1)), "min_id": F.min(args.id_col),
+         "max_id": F.max(args.id_col)},
+        {"rows": 0, "min_id": None, "max_id": None},
+        cluster_by=(args.id_col,),
+        bucket_batch=getattr(args, "bucket_batch", None) or None,
+        fail_after_batches=getattr(args, "fail_after_batches", None),
+    )
+    result = {"mode": "corpus-resumable", "stages": stages, **summary}
     try:
-        summary["output"] = spark.read.parquet(data_root).count()
+        result["output"] = spark.read.parquet(
+            args.output.rstrip("/") + "/data").count()
     except Exception:  # noqa: BLE001 -- nothing survived any stage
-        summary["output"] = 0
-    return summary
+        result["output"] = 0
+    return result
 
 
 def run_pipeline_streaming(spark, args, stages) -> dict:
-    """Streaming curation over arriving document files. clean / pii / gate /
-    split / sample are stateless projections (they stream unchanged); dedup
-    becomes the watermarked streaming exact dedup, its state bounded by
-    --dedup-horizon. Checkpointed availableNow run: re-running drains only
-    new files, exactly once."""
-    from pyspark.sql import functions as F
-
-    from action_pdf_accessibility_paddle_docker_spark.operators import dedup as D
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        linefilter as L,
-    )
-    from action_pdf_accessibility_paddle_docker_spark.operators import pii as P
-    from action_pdf_accessibility_paddle_docker_spark.operators import (
-        textstats as T,
-    )
-
+    """Streaming curation over arriving document files: the streamable
+    stages of the table (stateless projections stream unchanged; dedup and
+    urldedup become watermarked first-seen dedups bounded by
+    --dedup-horizon; neardup the stateless corpus probe). Checkpointed
+    availableNow run: re-running drains only new files, exactly once."""
+    run = _Run(spark, args, stages, "streaming")
     schema = spark.read.parquet(args.input).schema
-    df = spark.readStream.schema(schema).parquet(args.input)
-
-    if "urlfilter" in stages:
-        from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-        df = U.filter_blocked_domains(
-            df, _read_blocked_domains(args.blocked_domains),
-            url_col=args.url_col,
-        )
-    if "urldedup" in stages:
-        # streaming analog: FIRST-seen survives (not min-id -- arrival
-        # order is the only order a stream has); watermark-bounded state
-        # shared with the dedup horizon. Unparseable URLs get a per-row
-        # unique key (NULL would merge them all into one survivor).
-        from action_pdf_accessibility_paddle_docker_spark.operators import urls as U
-
-        ts = (F.col(args.ts_col) if args.ts_col in schema.names
-              else F.current_timestamp())
-        key = F.coalesce(
-            F.md5(U.normalize_url_from(F.col("_u_s"))),
-            F.concat(F.lit("row:"), F.col(args.id_col).cast("string")),
-        )
-        df = (
-            df.withColumn("_ts", ts)
-            .withColumn("_u_s", U.stripped_url(F.col(args.url_col)))
-            .withColumn("_ukey", key)
-            .withWatermark("_ts", args.dedup_horizon)
-            .dropDuplicatesWithinWatermark(["_ukey"])
-            .drop("_ukey", "_ts", "_u_s")
-        )
-    if "clean" in stages:
-        df = L.apply_line_filter(
-            df, text_col=args.text_col, min_kept_lines=args.min_kept_lines
-        )
-    if "pii" in stages:
-        df = P.redact(df, text_col=args.text_col)
-    if "gate" in stages:
-        df = T.apply_quality_gate(df, text_col=args.text_col)
-    if "dedup" in stages:
-        ts = (F.col(args.ts_col) if args.ts_col in schema.names
-              else F.current_timestamp())
-        df = (
-            df.withColumn("_ts", ts)
-            .withColumn(
-                # NULL-text docs must never merge (dropDuplicates treats
-                # NULL keys as EQUAL): per-row fallback, the urldedup guard
-                "fingerprint",
-                F.coalesce(
-                    F.md5(D.normalized(F.col(args.text_col))),
-                    F.concat(F.lit("row:"),
-                             F.col(args.id_col).cast("string")),
-                ),
-            )
-            .withWatermark("_ts", args.dedup_horizon)
-            .dropDuplicatesWithinWatermark(["fingerprint"])
-            .drop("fingerprint", "_ts")
-        )
-    if "neardup" in stages:
-        # stateless corpus probe (argparse guarantees --seen-buckets):
-        # drop arriving docs near ANYTHING the batch corpus has seen;
-        # within-stream near-dups are the simhash watermark path's job
-        from action_pdf_accessibility_paddle_docker_spark.streaming.stream import (
-            streaming_near_dedup_against_corpus,
-        )
-
-        seen = spark.read.parquet(args.seen_buckets)
-        df = streaming_near_dedup_against_corpus(
-            df, seen, text_col=args.text_col, hash_family=args.hash_family,
-        )
-    if "split" in stages:
-        df = T.stable_split(df, id_col=args.id_col)
-    if "sample" in stages:
-        rates = {}
-        for spec in args.rate:
-            k, _, v = spec.partition("=")
-            rates[k] = float(v)
-        df = T.stratified_sample(
-            df, rates=rates, stratum_col=args.stratum_col,
-            id_col=args.id_col, default_rate=args.default_rate,
-        )
-
+    run.input_columns = schema.names
+    df = run.apply(spark.readStream.schema(schema).parquet(args.input))
     q = (
         df.writeStream.format("parquet")
         .option("path", args.output)

@@ -369,3 +369,42 @@ def test_carry_columns_ride_the_single_scan(spark):
         if "Scan parquet" in ln and "documents" in ln
     ]
     assert len(doc_scans) == 1, final
+
+
+def test_two_scorings_join_under_different_weights(spark):
+    """Two score_documents outputs built with the same parameters but
+    different weights tables join on doc_id: the cached expression
+    fragments must not make the two sides' output columns ambiguous."""
+    docs = _docs(spark, [(i, t) for i, t in enumerate(GOOD + BAD)])
+    w_good = spark.createDataFrame(
+        [("quick", 3.0), ("morning", 3.0), ("book", 3.0), ("committee", 3.0)],
+        "term string, weight double",
+    )
+    w_bad = spark.createDataFrame(
+        [("cheap", 3.0), ("free", 3.0), ("click", 3.0), ("winner", 3.0)],
+        "term string, weight double",
+    )
+    a = C.score_documents(docs, w_good, bias=-1.0)
+    b = C.score_documents(docs, w_bad, bias=-1.0)
+    joined = a.alias("a").join(b.alias("b"), "doc_id").select(
+        "doc_id",
+        F.col("a.clf_keep").alias("keep_good"),
+        F.col("b.clf_keep").alias("keep_bad"),
+        (F.col("a.clf_score") - F.col("b.clf_score")).alias("delta"),
+    )
+    rows = {r["doc_id"]: r for r in joined.collect()}
+    assert len(rows) == len(GOOD) + len(BAD)
+    for i in range(len(GOOD)):
+        assert rows[i]["keep_good"] and not rows[i]["keep_bad"]
+        assert rows[i]["delta"] > 0
+    for i in range(len(GOOD), len(GOOD) + len(BAD)):
+        assert rows[i]["keep_bad"] and not rows[i]["keep_good"]
+        assert rows[i]["delta"] < 0
+    # columns picked by DataFrame reference must resolve to their own side
+    plain = a.join(b, "doc_id").select(
+        "doc_id", a["clf_score"].alias("sa"), b["clf_score"].alias("sb")
+    )
+    got = {r["doc_id"]: (r["sa"], r["sb"]) for r in plain.collect()}
+    assert all(got[i][0] > got[i][1] for i in range(len(GOOD)))
+    assert all(got[i][0] < got[i][1]
+               for i in range(len(GOOD), len(GOOD) + len(BAD)))

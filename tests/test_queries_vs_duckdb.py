@@ -75,3 +75,38 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "extracted_text" in df.columns
+
+
+def test_sketch_accuracy_half_cent_medians_match_duckdb(spark, tmp_path):
+    """Two-row groups whose median lands on a half cent: both engines
+    compute the same double, so p50_exact must round it the way the
+    registry's DuckDB SQL does (the scaled double), in both directions."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(20260)
+    status, cust, price = [], [], []
+    for g in range(3000):
+        cents = rng.randint(100, 50_000_000)
+        # one customer per group: the HLL verdict is then exact, and the
+        # comparison isolates the median's rounding
+        for v in (cents, cents + 1):
+            status.append(f"g{g:04d}")
+            cust.append(g)
+            price.append(v / 100)
+    pq.write_table(
+        pa.table({"o_orderstatus": status, "o_custkey": cust,
+                  "o_totalprice": price}),
+        str(tmp_path / "orders.parquet"),
+    )
+    sdf = entrymod.queries()["q_sketch_accuracy"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'")
+    rel = con.sql(entrymod.oracle_sql()["q_sketch_accuracy"])
+    a = _rows_to_set([c.lower() for c in sdf.columns], [tuple(r) for r in sdf.collect()])
+    b = _rows_to_set([c.lower() for c in rel.columns], rel.fetchall())
+    assert len(a) == 3000
+    diff = [(x, y) for x, y in zip(a, b) if x != y]
+    assert not diff, f"{len(diff)} groups differ, first: {diff[:3]}"
