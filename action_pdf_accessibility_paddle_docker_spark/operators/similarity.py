@@ -261,18 +261,25 @@ def fit_quantizer(
     the result as ``centers=`` to ivf_topk / ivf_assignments when several
     probes share one quantizer (e.g. an exhaustive and an approximate
     probe of the same index) -- re-fitting is deterministic at a fixed
-    seed but doubles the most expensive step."""
+    seed but doubles the most expensive step.
+
+    A one-row corpus returns that row's vector as the only centroid:
+    MLlib's fit on a single row fails in the JVM
+    (ArrayIndexOutOfBoundsException) whatever ``n_centroids`` is."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     train = corpus.select(
         array_to_vector(_as_double(F.col(vec_col))).alias("features")
     )
-    if train.isEmpty():
+    # the limit-2 probe is noise next to the iterative full-corpus fit
+    head = train.limit(2).collect()
+    if len(head) == 1:
+        return np.asarray(head[0]["features"], dtype=np.float64)[None, :]
+    if not head:
         # MLlib's fit on zero rows dies deep in the JVM summarizer
         # ("Nothing has been added to this summarizer") -- fail with the
-        # actual cause instead. The limit-1 probe is noise next to the
-        # iterative full-corpus fit that follows.
+        # actual cause instead
         raise ValueError(
             "fit_quantizer: corpus has no rows -- an upstream stage "
             "(gate/dedup/semi-join) emptied the pipeline, or the "

@@ -111,7 +111,9 @@ def make_extraction_kernel(
     turn_idx, role, tool, ts) are re-emitted as the INPUT Arrow arrays,
     zero-copy, skipping the arrow->pandas->numpy->pandas->arrow round trip
     mapInPandas imposed on every byte of them. Measured 1.3x on the 489k-turn
-    bench (best-of-mode, paired run, scripts/arrow_kernel_probe.py); output
+    bench (best-of-mode, paired run against the former mapInPandas kernel;
+    a traced perfbench extract_mixed run reports the Arrow share as
+    plans.extraction.arrow_s); output
     value-identical row-for-row (part_id may differ -- AQE coalesces the
     range shuffle per plan shape, and partition lineage is physical by
     definition)."""

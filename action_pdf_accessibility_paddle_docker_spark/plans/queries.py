@@ -3144,6 +3144,31 @@ EAGER_BUILDERS = frozenset(
     }
 )
 
+# The headline queries bench.py times on every run (perfbench's
+# corpus_queries adds q_dedup_clusters). q_ngram_jaccard stays out: it is the
+# deliberately quadratic exactness baseline (36M+ pair rows at sf0.1 on the
+# tiny-vocab corpus); its scale path is q_minhash_lsh.
+HEADLINE = (
+    "q_pricing_summary",
+    "q_region_revenue",
+    "q_reading_order_window",
+    "q_asof_join",
+    "q_theta_range_join",
+    "q_threshold_filter",
+    "q_dedup_exact",
+    "q_minhash_lsh",
+    "q_simhash",
+    "q_doc_stats",
+    "q_ann_topk",
+    "q_pii_redact",
+    "q_line_filter",
+    "q_dup_ngrams",
+    "q_chunk_dedup",
+    "q_sketch_accuracy",
+    "q_quality_gate",
+    "q_lm_quality",
+)
+
 
 def queries() -> dict[str, Builder]:
     return {name: fn for name, (fn, _sql) in REGISTRY.items()}

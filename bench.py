@@ -33,31 +33,6 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 DO_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 REPO = os.path.dirname(os.path.abspath(__file__))
 
-HEADLINE_QUERIES = [
-    "q_pricing_summary",
-    "q_region_revenue",
-    "q_reading_order_window",
-    "q_asof_join",
-    "q_theta_range_join",
-    "q_threshold_filter",
-    "q_dedup_exact",
-    # q_ngram_jaccard is the deliberately-quadratic exactness baseline
-    # (36M+ pair rows at sf0.1 on the tiny-vocab corpus); the scale path is
-    # q_minhash_lsh -- the exact variant stays in the sf0.01 correctness run.
-    "q_minhash_lsh",
-    "q_simhash",
-    "q_doc_stats",
-    "q_ann_topk",
-    # round-3 additions
-    "q_pii_redact",
-    "q_line_filter",
-    "q_dup_ngrams",
-    "q_chunk_dedup",
-    "q_sketch_accuracy",
-    "q_quality_gate",
-    "q_lm_quality",
-]
-
 GEN_VERSION = 2  # bump to invalidate the cached synthetic transcripts
 
 
@@ -222,16 +197,16 @@ def run_queries(spark) -> tuple[dict[str, float], dict[str, list[float]], dict]:
     Returns (min per query, per-round timings per query, control block)."""
     import multiprocessing as mp
 
-    from action_pdf_accessibility_paddle_docker_spark.plans.queries import REGISTRY
+    from action_pdf_accessibility_paddle_docker_spark.plans.queries import HEADLINE, REGISTRY
 
     rounds = int(os.environ.get("SPARK_GRAFT_QUERY_ROUNDS", "3"))
     per_core = int(os.environ.get("SPARK_GRAFT_QCTL_TURNS", "2000"))
     texts = _gen_control_texts(per_core * CPUS)
     chunks = [texts[i * per_core:(i + 1) * per_core] for i in range(CPUS)]
-    for name in HEADLINE_QUERIES:
+    for name in HEADLINE:
         fn, _sql = REGISTRY[name]
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    times: dict[str, list[float]] = {name: [] for name in HEADLINE_QUERIES}
+    times: dict[str, list[float]] = {name: [] for name in HEADLINE}
     ctl_rounds: list[float] = []
     with mp.Pool(CPUS) as pool:
         pool.map(_control_worker, [c[:100] for c in chunks])  # warm imports
@@ -239,7 +214,7 @@ def run_queries(spark) -> tuple[dict[str, float], dict[str, list[float]], dict]:
             t0 = time.perf_counter()
             pool.map(_control_worker, chunks)
             ctl_rounds.append(round(time.perf_counter() - t0, 3))
-            for name in HEADLINE_QUERIES:
+            for name in HEADLINE:
                 fn, _sql = REGISTRY[name]
                 t0 = time.perf_counter()
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()

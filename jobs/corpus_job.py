@@ -584,6 +584,9 @@ def check_args(args, stages, mode: str) -> None:
                          "curated output, then run later shards against it")
     if "spandedup" in stages and g("span_k", 50) < 2:
         raise SystemExit("--span-k must be >= 2")
+    if "semdedup" in stages and g("semdedup_clusters", 16) < 2:
+        # MLlib KMeans refuses k < 2 from inside the JVM
+        raise SystemExit("--semdedup-clusters must be >= 2")
     if "spandedup" in stages and bool(g("seen_grams")) != bool(g("new_grams")):
         raise SystemExit("--seen-grams and --new-grams come together (the "
                          "shard's appendix goes to a side path; union it in "

@@ -279,6 +279,59 @@ def test_semdedup_stage_with_side_embeddings_table(spark, tmp_path):
     assert res2["counters"]["after_semdedup"] == len(kept2)
 
 
+def test_semdedup_after_stages_that_leave_one_doc(spark, tmp_path):
+    """gate -> classify -> neardup -> semdedup where the earlier stages
+    leave a single document: semdedup keeps it instead of failing inside
+    the KMeans fit."""
+    from action_pdf_accessibility_paddle_docker_spark.operators import (
+        quality_clf as C,
+    )
+
+    spam = (
+        "buy now and get the cheap pills at a discount for the best price.\n"
+        "click here to claim the free offer and the bonus prize in an hour.\n"
+        "the cash deal is waiting for you so act on the offer and buy it now."
+    )
+    labeled = spark.createDataFrame(
+        [(i, GOOD + f" extra word {i}", 1.0) for i in range(4)]
+        + [(100 + i, spam + f" extra word {i}", 0.0) for i in range(4)],
+        "doc_id long, text string, label double",
+    )
+    model = tmp_path / "model"
+    C.save_classifier(*C.train_quality_classifier(
+        labeled, vocab_size=512, reg_param=1e-3, max_iter=100), str(model))
+
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_docs(src / "p.parquet", [
+        dict(doc_id=0, text=GOOD, source="web"),
+        dict(doc_id=1, text=GOOD.upper().replace(" ", "   "),  # neardup of 0
+             source="web"),
+        dict(doc_id=2, text=spam, source="web"),           # classified out
+        dict(doc_id=3, text="tiny.\nnope", source="web"),  # fails the gate
+    ])
+    embp = tmp_path / "emb"
+    embp.mkdir()
+    pq.write_table(pa.Table.from_pylist(
+        [dict(doc_id=i, embedding=[float(i), 1.0, 0.0]) for i in range(4)]
+    ), str(embp / "p.parquet"))
+
+    res = run_pipeline(
+        spark,
+        _ns(input=str(src), output=str(tmp_path / "out"),
+            clf_weights=str(model), clf_threshold=0.5,
+            embeddings=str(embp), embedding_col="embedding",
+            semdedup_threshold=0.95, semdedup_clusters=2, semdedup_cap=0),
+        ["gate", "classify", "neardup", "semdedup"],
+    )
+    assert res["counters"] == {
+        "input": 4, "after_gate": 3, "after_classify": 2, "after_neardup": 1,
+        "after_semdedup": 1, "output": 1,
+    }
+    assert [r["doc_id"] for r in
+            spark.read.parquet(str(tmp_path / "out")).collect()] == [0]
+
+
 def test_streaming_neardup_corpus_probe(spark, tmp_path):
     """--streaming + neardup + --seen-buckets: the stateless stream-static
     corpus probe drops arriving docs near persisted corpus content while
@@ -1199,9 +1252,9 @@ def test_report_domains(spark, tmp_path):
 
 
 def test_url_keep_and_fps_key_guards():
-    """main() rejects --url-keep longest in streaming (first-seen only)
-    and --fps-key without an incremental mode (it would be silently
-    ignored by plain exact dedup)."""
+    """main() rejects --url-keep longest in streaming (first-seen only),
+    --fps-key without an incremental mode (it would be silently ignored by
+    plain exact dedup) and --semdedup-clusters below MLlib's k >= 2."""
     import subprocess
     import sys
 
@@ -1209,6 +1262,8 @@ def test_url_keep_and_fps_key_guards():
         (["--streaming", "--checkpoint", "/tmp/c", "--stages", "urldedup",
           "--url-keep", "longest"], "batch-only"),
         (["--stages", "dedup", "--fps-key", "url"], "incremental"),
+        (["--stages", "semdedup", "--embeddings", "/tmp/e",
+          "--semdedup-clusters", "1"], "--semdedup-clusters must be >= 2"),
     ]
     for argv, frag in checks:
         r = subprocess.run(

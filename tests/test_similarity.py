@@ -378,3 +378,23 @@ def test_semantic_dedup_empty_input_yields_empty_not_jvm_crash(spark):
     }
     with pytest.raises(ValueError, match="no rows"):
         fit_quantizer(empty, n_centroids=4)
+
+
+def test_semantic_dedup_one_row_input(spark):
+    """A single surviving row is its own representative: MLlib's KMeans fit
+    on one row fails in the JVM (ArrayIndexOutOfBoundsException) for any k,
+    so fit_quantizer returns that row's vector as the only centroid."""
+    import numpy as np
+
+    from action_pdf_accessibility_paddle_docker_spark.operators.similarity import (
+        fit_quantizer,
+        semantic_dedup,
+    )
+
+    one = spark.createDataFrame([(7, [1.0, 2.0, 3.0])],
+                                "vec_id long, embedding array<double>")
+    np.testing.assert_array_equal(
+        fit_quantizer(one, n_centroids=2), [[1.0, 2.0, 3.0]])
+    out = semantic_dedup(one, threshold=0.9, n_clusters=2)
+    assert [r.asDict() for r in out.collect()] == [
+        {"vec_id": 7, "cid": 0, "rep_id": 7}]

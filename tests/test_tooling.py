@@ -1,0 +1,53 @@
+"""The measurement tooling beside the package: the headline query lists stay
+in step, every script compiles, and the scale probe parses its arguments
+before it builds a session."""
+
+import ast
+import glob
+import os
+import py_compile
+import subprocess
+import sys
+
+import pytest
+
+from action_pdf_accessibility_paddle_docker_spark.plans.queries import (
+    HEADLINE,
+    REGISTRY,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_perfbench_queries_are_the_headline_plus_dedup_clusters():
+    # perfbench is a directory of scripts, not a package (workloads.py does
+    # ``from inputs import ...``), so its list is read from the source
+    with open(os.path.join(REPO, "perfbench", "workloads.py")) as f:
+        tree = ast.parse(f.read())
+    queries = next(
+        ast.literal_eval(node.value) for node in tree.body
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["QUERIES"]
+    )
+    assert queries == list(HEADLINE) + ["q_dedup_clusters"]
+    assert set(queries) <= set(REGISTRY)
+
+
+@pytest.mark.parametrize("path", sorted(
+    os.path.relpath(p, REPO) for p in glob.glob(os.path.join(REPO, "scripts", "*.py"))
+) + ["bench.py", "__spark_entry__.py"])
+def test_tooling_compiles(path, tmp_path):
+    py_compile.compile(os.path.join(REPO, path),
+                       cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+def test_scale_probe_help_lists_targets_without_a_session():
+    r = subprocess.run(
+        [sys.executable, "-X", "importtime",
+         os.path.join(REPO, "scripts", "scale_probe.py"), "--help"],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert r.returncode == 0, r.stderr[-500:]
+    assert "pyspark" not in r.stderr  # the import log: no session was built
+    assert "{dupline,queries,semdedup,spandedup}" in r.stdout
+    assert "--replicate" in r.stdout
