@@ -11,12 +11,16 @@ fixes it structurally:
 * ONE detector instance per (model, thresholds, model_dir) per Python worker
   process (keyed singleton, created lazily inside the mapInArrow kernel),
   each model loaded at most once per worker.
-* BATCHED scoring: the kernel plans a whole Arrow batch up front
-  (operators/payload.py:_plan_batch) and drives the ``*_many`` hooks below,
-  so PaddleX sees every page of the batch in ONE ``predict(input=[...],
+* BATCHED scoring: the Detector interface is three batched hooks
+  (``detect_pages`` / ``table_cells_many`` / ``formula_latex_many``). The
+  kernel plans a chunk of the Arrow batch up front
+  (operators/payload.py:plan_pages), calling each hook once, so PaddleX
+  sees every page of the chunk in ONE ``predict(input=[...],
   batch_size=N)`` call per model (the reference's own cost split says model
   inference is ~80% of wall time, src/constants.py:7-9 -- page-at-a-time
-  batch_size=1 is THE production bottleneck at scale).
+  batch_size=1 is THE production bottleneck at scale). The page pipeline
+  (payload.extract_pages) then reads that plan as plain data and calls no
+  detector.
 * The detector is a seam: tests/bench use ``StubDetector`` (parses the
   deterministic structured payloads into the exact shapes PaddleX emits --
   boxes {label, score, coordinate:[x0,y0,x1,y1]} per src/ai.py:79-153,
@@ -44,25 +48,23 @@ CROP_OFFSET_PX = 1
 
 
 class Detector(Protocol):
-    def detect_page(self, page: dict[str, Any]) -> list[dict[str, Any]]:
-        """Return PaddleX-shaped boxes for one page, thresholds applied (M1)."""
+    """The model seam: three batched hooks, each called once per chunk of
+    pages by the planner (payload.plan_pages). A ``req`` is a (page, box)
+    pair."""
+
+    def detect_pages(self, pages: list[dict[str, Any]]) -> list[list[dict[str, Any]]]:
+        """PaddleX-shaped boxes per page, thresholds applied (M1)."""
         ...
 
-    def table_cells(self, page: dict[str, Any], box: dict[str, Any]) -> list[dict[str, Any]] | None:
-        """Cell boxes (crop-local coordinates) for one table region, or None
+    def table_cells_many(self, reqs: list[tuple]) -> list[list[dict[str, Any]] | None]:
+        """Cell boxes (crop-local coordinates) per table region, or None
         (M2 wired/wireless classification + M3 cell detection)."""
         ...
 
-    def formula_latex(self, page: dict[str, Any], box: dict[str, Any]) -> str | None:
-        """LaTeX string for one formula region, or None (M4)."""
+    def formula_latex_many(self, reqs: list[tuple]) -> list[str | None]:
+        """LaTeX string per formula region, or None (M4)."""
         ...
 
-    # Batch hooks (driven by the Arrow-batch planner in payload.extract_series;
-    # see BatchHooks for the default loop implementations):
-    #   detect_pages(pages) -> list[boxes]
-    #   table_cells_many(reqs) -> list[cells|None]     reqs: [(page, box), ...]
-    #   formula_latex_many(reqs) -> list[str|None]
-    #
     # Optional hook (dispatched by hasattr in extract_series): a detector
     # that can rasterize RAW %PDF- bytes implements
     #   detect_pdf_bytes(text: str, ...) -> extraction-result dict
@@ -71,9 +73,8 @@ class Detector(Protocol):
 
 
 class BatchHooks:
-    """Default batch hooks: loop the singular hooks. Detectors with a real
-    batched runtime (PaddleXDetector) override these with one model call per
-    batch; the planner is detector-agnostic either way."""
+    """The batched hooks for a detector that answers one page or one box at
+    a time: loop its ``detect_page`` / ``table_cells`` / ``formula_latex``."""
 
     def detect_pages(self, pages: list[dict[str, Any]]) -> list[list[dict[str, Any]]]:
         return [self.detect_page(p) for p in pages]
@@ -130,7 +131,7 @@ def crop_region(image: np.ndarray, coordinate: list[float], offset: int = CROP_O
     return image[y0:y1, x0:x1]
 
 
-class PaddleXDetector(BatchHooks):
+class PaddleXDetector:
     """Production detector: the four PaddleX models, each loaded ONCE per
     Python worker per config and reused across every page/region of every
     Arrow batch (fixing the reference's per-call re-creation), scoring
@@ -271,17 +272,6 @@ class PaddleXDetector(BatchHooks):
             for r in results
         ]
 
-    # ---- singular hooks (delegate to the batched path) ----
-
-    def detect_page(self, page: dict[str, Any]) -> list[dict[str, Any]]:
-        return self.detect_pages([page])[0]
-
-    def table_cells(self, page: dict[str, Any], box: dict[str, Any]) -> list[dict[str, Any]] | None:
-        return self.table_cells_many([(page, box)])[0]
-
-    def formula_latex(self, page: dict[str, Any], box: dict[str, Any]) -> str | None:
-        return self.formula_latex_many([(page, box)])[0]
-
     def detect_pdf_bytes(
         self, text: str, process_table: bool = True, process_formula: bool = True,
     ) -> dict[str, Any]:
@@ -310,7 +300,7 @@ class PaddleXDetector(BatchHooks):
         still hold real ``bytes`` should pass them directly (used as-is,
         no candidates)."""
         from ..config import PAYLOAD_KIND_PDF_BYTES
-        from .payload import _plan_batch, extract_pages
+        from .payload import extract_pages, plan_pages
         from .rasterize import open_pdf_pages
 
         if isinstance(text, (bytes, bytearray)):
@@ -337,12 +327,11 @@ class PaddleXDetector(BatchHooks):
                     raise
         assert pages is not None and close is not None
         try:
-            planned = _plan_batch(self, pages, process_table, process_formula)
+            planned = plan_pages(self, [pages], process_table, process_formula)[0]
+            fill_text_layer(pages, planned)
             res = extract_pages(
-                pages, zoom=self.zoom,
+                pages, planned, zoom=self.zoom,
                 page_h_px=pages[0]["page_h"] if pages else 1584.0,
-                det=TextLayerDetector(planned),
-                process_table=process_table, process_formula=process_formula,
             )
         finally:
             close()
@@ -350,46 +339,33 @@ class PaddleXDetector(BatchHooks):
         return res
 
 
-class TextLayerDetector:
-    """Decorates a detector with PDF text-layer reads: after the base
-    detector returns region boxes / table cells (geometry only -- layout and
-    cell-det models emit no text), fill each ``text`` from the page's
-    ``text_lookup`` accessor (raster-pixel bbox -> text-layer string). This
-    is the open-source analog of the reference pulling element text out of
-    PDFix (src/template_json.py:219-382); pages without a text layer (pure
-    scans) keep empty text, exactly like the reference without OCR."""
-
-    def __init__(self, base):
-        self._base = base
-
-    def detect_page(self, page: dict[str, Any]) -> list[dict[str, Any]]:
-        boxes = self._base.detect_page(page)
+def fill_text_layer(pages: list[dict[str, Any]], planned: list) -> None:
+    """Fill the planned region boxes and table cells of rasterized PDF pages
+    (geometry only -- layout and cell-det models emit no text) from each
+    page's ``text_lookup`` accessor (raster-pixel bbox -> text-layer
+    string). This is the open-source analog of the reference pulling
+    element text out of PDFix (src/template_json.py:219-382); pages without
+    a text layer (pure scans) keep empty text, exactly like the reference
+    without OCR."""
+    for page, (boxes, raws) in zip(pages, planned):
         lookup = page.get("text_lookup")
-        if lookup is not None:
-            for b in boxes:
-                if not b.get("text"):
-                    c = b["coordinate"]
-                    b["text"] = lookup(c[0], c[1], c[2], c[3])
-        return boxes
-
-    def table_cells(self, page: dict[str, Any], box: dict[str, Any]):
-        cells = self._base.table_cells(page, box)
-        lookup = page.get("text_lookup")
-        if cells is not None and lookup is not None:
-            # cell-det coordinates are crop-local; the crop origin is the
-            # region bbox minus the 1px offset (clamped), so map back to
-            # page raster px before the text-layer read
-            ox = max(0, int(box["coordinate"][0]) - CROP_OFFSET_PX)
-            oy = max(0, int(box["coordinate"][1]) - CROP_OFFSET_PX)
-            for c in cells:
-                if not c.get("text"):
-                    cc = c["coordinate"]
-                    c["text"] = lookup(ox + cc[0], oy + cc[1],
-                                       ox + cc[2], oy + cc[3])
-        return cells
-
-    def formula_latex(self, page: dict[str, Any], box: dict[str, Any]):
-        return self._base.formula_latex(page, box)
+        if lookup is None:
+            continue
+        for b, raw in zip(boxes, raws):
+            c = b["coordinate"]
+            if not b.get("text"):
+                b["text"] = lookup(c[0], c[1], c[2], c[3])
+            if raw is not None and str(b["label"]).lower() == "table":
+                # cell-det coordinates are crop-local; the crop origin is the
+                # region bbox minus the 1px offset (clamped), so map back to
+                # page raster px before the text-layer read
+                ox = max(0, int(c[0]) - CROP_OFFSET_PX)
+                oy = max(0, int(c[1]) - CROP_OFFSET_PX)
+                for cell in raw:
+                    if not cell.get("text"):
+                        cc = cell["coordinate"]
+                        cell["text"] = lookup(ox + cc[0], oy + cc[1],
+                                              ox + cc[2], oy + cc[3])
 
 
 def get_detector(thresholds: dict[int, float], kind: str = "stub", **kw) -> Detector:

@@ -53,6 +53,7 @@ from ..config import (
 )
 from ..functions.mathml import latex_to_mathml
 from . import kernels as VK
+from .detector import StubDetector
 from .html_extract import extract_html
 
 # Region row layout (tuple order must match REGION_DDL in plans/extraction.py).
@@ -141,56 +142,52 @@ def extract_pdf_turn(
     process_table: bool = True,
     process_formula: bool = True,
     detector=None,
-    reading_order: str = "reference",
     payload: dict | None = None,
+    planned: list | None = None,
 ) -> dict[str, Any]:
     """Extract one PDF-shaped turn with vectorized kernels.
 
     detector: a Detector (operators/detector.py); defaults to the
     deterministic StubDetector. Production injects the per-worker PaddleX
     singleton via make_extraction_kernel.
-    reading_order: "reference" (the reference's (top, 1000-left) sort,
-    bit-exact parity -- the default) or "xycut" (recursive XY-cut,
-    operators/xycut.py; better on multi-column layouts).
-    payload: pre-parsed payload dict (the batched planner in extract_series
-    parses once and passes it through; standalone callers omit it)."""
-    from .detector import StubDetector
-
-    det = detector if detector is not None else StubDetector(thresholds)
+    payload: pre-parsed payload dict; planned: its pages' plan from
+    plan_pages (extract_series parses and plans a whole chunk and passes
+    both through). Without a plan the turn plans its own pages; with one
+    the detector is not called."""
     if payload is None:
         payload = _loads(text[len(PDF_PAYLOAD_SENTINEL):])
     zoom = float(payload.get("zoom", 2.0))
     page_h_px = float(payload.get("page_h", 1584))
-    return extract_pages(
-        payload.get("pages", []), zoom, page_h_px, det,
-        process_table, process_formula, reading_order,
-    )
+    pages = payload.get("pages", [])
+    if planned is None:
+        det = detector if detector is not None else StubDetector(thresholds)
+        planned = plan_pages(det, [pages], process_table, process_formula)[0]
+    return extract_pages(pages, planned, zoom, page_h_px)
 
 
 def extract_pages(
     pages,
+    planned: list,
     zoom: float,
     page_h_px: float,
-    det,
-    process_table: bool = True,
-    process_formula: bool = True,
-    reading_order: str = "reference",
 ) -> dict[str, Any]:
-    """The page pipeline over a list of page dicts -- the shared core behind
-    BOTH entry points: structured %LAYOUT1% payloads (extract_pdf_turn) and
-    rasterized raw-PDF pages (PaddleXDetector.detect_pdf_bytes, where each
-    page dict carries an ``image`` ndarray and a per-page ``page_h``)."""
+    """The page pipeline over a list of page dicts and their plan (see
+    plan_pages: per page, its boxes and per box the raw cells or LaTeX) --
+    the shared core behind BOTH entry points: structured %LAYOUT1% payloads
+    (extract_pdf_turn) and rasterized raw-PDF pages
+    (PaddleXDetector.detect_pdf_bytes, where each page dict carries an
+    ``image`` ndarray and a per-page ``page_h``). Calls no detector."""
     all_regions: list[tuple] = []
     formulas: list[tuple[int, str]] = []
     page_texts: list[str] = []
     n_artifacts = 0
     ordinal = 0
 
-    for page in pages:
+    for page_idx, page in enumerate(pages):
         page_number = int(page["page"])
         ph = float(page.get("page_h", page_h_px))
-        # detect stage (threshold pushdown happens detector-side, P1)
-        boxes = det.detect_page(page)
+        # detected boxes (threshold pushdown happened detector-side, P1)
+        boxes, raws = planned[page_idx]
         if not boxes:
             page_texts.append("")
             continue
@@ -199,26 +196,23 @@ def extract_pages(
         coords = np.array([b["coordinate"] for b in boxes], dtype=np.float64)
         texts = [b.get("text", "") or "" for b in boxes]
 
-        # table / formula sub-pipelines -> "custom" payloads, driven through
-        # the detector seam (M2-M4): the stub reads cells/latex from the
-        # payload, PaddleXDetector runs table-cls -> cell-det / PP-FormulaNet
-        # on region crops -- one shared code path, only the detector differs
-        # (reference: src/ai.py:108-148, custom computed BEFORE NMS).
+        # table / formula sub-pipelines -> "custom" payloads from the
+        # planned M2-M4 answers (the stub reads cells/latex from the payload,
+        # PaddleXDetector runs table-cls -> cell-det / PP-FormulaNet on
+        # region crops; reference: src/ai.py:108-148, custom computed BEFORE
+        # NMS). A raw is set only on table/formula boxes that were asked for.
         customs: list[Any] = [None] * len(boxes)
-        for k, b in enumerate(boxes):
-            lbl = labels[k]
-            if lbl == "table" and process_table:
-                cells = det.table_cells(page, b)
-                if cells is not None:
-                    cc = np.array([c["coordinate"] for c in cells], dtype=np.float64)
-                    ct = [c.get("text", "") or "" for c in cells]
-                    customs[k] = VK.table_grid_np(cc, ct, coords[k])
-            elif lbl == "formula" and process_formula:
-                latex = det.formula_latex(page, b)
-                if latex is not None:
-                    mathml = latex_to_mathml(latex)
-                    if mathml != "":
-                        customs[k] = mathml
+        for k, raw in enumerate(raws):
+            if raw is None:
+                continue
+            if labels[k] == "table":
+                cc = np.array([c["coordinate"] for c in raw], dtype=np.float64)
+                ct = [c.get("text", "") or "" for c in raw]
+                customs[k] = VK.table_grid_np(cc, ct, coords[k])
+            else:
+                mathml = latex_to_mathml(raw)
+                if mathml != "":
+                    customs[k] = mathml
 
         # NMS (J1/J2/A2/A3)
         if len(coords):
@@ -251,7 +245,6 @@ def extract_pages(
 
             is_text = np.array([lbl == "text" for lbl in labels])
             is_formula = np.array([lbl == "formula" for lbl in labels])
-            kept_idx: list[int] = []
             for i in range(n):
                 neigh = np.nonzero(ov[i])[0]
                 neigh = [j for j in neigh if j != i and not same_content(i, j)]
@@ -270,20 +263,12 @@ def extract_pages(
                         )
                         for j in f_over
                     ]
-                kept_idx.append(i)
                 elements.append(el)
 
-        # W1 reading order (stable); "xycut" mode uses the recursive cut
-        # over device coords instead of the reference's single sort
+        # W1 reading order (stable)
         if elements:
-            if reading_order == "xycut":
-                from .xycut import xycut_order
-
-                order = xycut_order(coords[np.array(kept_idx)])
-            else:
-                eb = np.array([e["bbox"] for e in elements], dtype=np.float64)
-                order = VK.reading_order_np(eb)
-            elements = [elements[i] for i in order]
+            eb = np.array([e["bbox"] for e in elements], dtype=np.float64)
+            elements = [elements[i] for i in VK.reading_order_np(eb)]
         for rank, el in enumerate(elements, start=1):
             el["reading_rank"] = rank
 
@@ -316,7 +301,6 @@ def extract_pages(
                     el["row_num"], el["col_num"],
                 )
             )
-            parent_ord = ordinal
             ordinal += 1
             for nested in el["nested"]:
                 all_regions.append(
@@ -346,7 +330,6 @@ def extract_pages(
                         )
                     )
                     ordinal += 1
-            _ = parent_ord
 
         page_texts.append("\n".join(contributions))
 
@@ -397,68 +380,45 @@ def extract_text_value(text: str | None) -> dict[str, Any]:
     }
 
 
-_MISSING = object()
+def plan_pages(
+    det, page_lists: list, process_table: bool, process_formula: bool,
+) -> list[list]:
+    """Batch-level inference planning over ``page_lists`` (the ``pages``
+    list of each PDF turn): M1 over EVERY dict page in one ``detect_pages``
+    call, then M2-M3 over every table box and M4 over every formula box in
+    one call each. For the stub this reorganizes the same cheap dict reads;
+    for PaddleXDetector it is the difference between ``batch_size=1``
+    page-at-a-time and one model invocation per batch -- inference is ~80%
+    of the reference's wall time (src/constants.py:7-9).
 
-
-class _ReplayDetector:
-    """Serves the batched planner's precomputed model results back through
-    the singular Detector hooks, so extract_pages stays ONE code path whether
-    inference ran page-at-a-time or batch-at-a-time. Keyed by object identity
-    (the planner and extract_pages see the same parsed page/box objects; the
-    keepalive list pins them so ids cannot be recycled). Unknown objects fall
-    through to the base detector."""
-
-    __slots__ = ("_base", "_boxes", "_cells", "_latex", "_keepalive")
-
-    def __init__(self, base, boxes, cells, latex, keepalive):
-        self._base = base
-        self._boxes = boxes
-        self._cells = cells
-        self._latex = latex
-        self._keepalive = keepalive
-
-    def detect_page(self, page):
-        got = self._boxes.get(id(page), _MISSING)
-        return got if got is not _MISSING else self._base.detect_page(page)
-
-    def table_cells(self, page, box):
-        got = self._cells.get(id(box), _MISSING)
-        return got if got is not _MISSING else self._base.table_cells(page, box)
-
-    def formula_latex(self, page, box):
-        got = self._latex.get(id(box), _MISSING)
-        return got if got is not _MISSING else self._base.formula_latex(page, box)
-
-
-def _plan_batch(det, pages: list, process_table: bool, process_formula: bool):
-    """Batch-level inference planning: run M1 over EVERY page of the Arrow
-    batch in one detector call, then M2-M4 over every table/formula region in
-    one call each, and wrap the results in a replay detector. On any planner
-    failure fall back to the direct per-page detector (which reproduces the
-    exact per-turn error rows). For the stub this reorganizes the same cheap
-    dict reads; for PaddleXDetector it is the difference between
-    ``batch_size=1`` page-at-a-time and one model invocation per batch --
-    inference is ~80% of the reference's wall time (src/constants.py:7-9)."""
-    try:
-        boxes_per_page = det.detect_pages(pages)
-        boxes_map: dict[int, list] = {}
-        treqs: list[tuple] = []
-        freqs: list[tuple] = []
-        for page, boxes in zip(pages, boxes_per_page):
-            boxes_map[id(page)] = boxes
-            for b in boxes:
-                lbl = str(b["label"]).lower()
-                if lbl == "table" and process_table:
-                    treqs.append((page, b))
-                elif lbl == "formula" and process_formula:
-                    freqs.append((page, b))
-        cells = det.table_cells_many(treqs) if treqs else []
-        latex = det.formula_latex_many(freqs) if freqs else []
-        cmap = {id(b): c for (_, b), c in zip(treqs, cells)}
-        lmap = {id(b): v for (_, b), v in zip(freqs, latex)}
-        return _ReplayDetector(det, boxes_map, cmap, lmap, (pages, boxes_per_page))
-    except Exception:  # noqa: BLE001 -- per-turn error contract via fallback
-        return det
+    Returns one plan per page list, matched by position: per page,
+    ``(boxes, raws)`` with ``raws[k]`` the raw cells (table) or LaTeX
+    (formula) of ``boxes[k]``, None when not asked for or not found; a
+    non-dict page plans to None (extract_pages rejects it before reading
+    its plan)."""
+    pages = [p for pl in page_lists for p in pl if isinstance(p, dict)]
+    boxes_per_page = det.detect_pages(pages) if pages else []
+    raws_per_page = [[None] * len(boxes) for boxes in boxes_per_page]
+    tables: list[tuple] = []
+    formulas: list[tuple] = []
+    for page, boxes, raws in zip(pages, boxes_per_page, raws_per_page):
+        for k, b in enumerate(boxes):
+            lbl = str(b["label"]).lower()
+            if lbl == "table" and process_table:
+                tables.append((page, b, raws, k))
+            elif lbl == "formula" and process_formula:
+                formulas.append((page, b, raws, k))
+    for reqs, hook in ((tables, det.table_cells_many),
+                       (formulas, det.formula_latex_many)):
+        if reqs:
+            answers = hook([(page, b) for page, b, _, _ in reqs])
+            for (_, _, raws, k), raw in zip(reqs, answers):
+                raws[k] = raw
+    planned = iter(zip(boxes_per_page, raws_per_page))
+    return [
+        [next(planned) if isinstance(p, dict) else None for p in pl]
+        for pl in page_lists
+    ]
 
 
 def extract_series(
@@ -467,16 +427,17 @@ def extract_series(
     process_table: bool = True,
     process_formula: bool = True,
     detector=None,
-    reading_order: str = "reference",
 ) -> Iterator[dict[str, Any]]:
     """Extract a pandas Series of turn payloads (one Arrow batch column).
 
     Two-phase: (1) parse the structured-PDF payloads of a CHUNK of the
     batch and run BATCHED inference over all its pages/regions
-    (_plan_batch); (2) run the per-turn geometry pipeline against the
-    precomputed results, then drop the chunk before planning the next one.
-    Stub and production detectors share this path; only the batch hooks
-    differ.
+    (plan_pages); (2) run the per-turn geometry pipeline (extract_pages)
+    on each turn's slice of that plan, then drop the chunk before planning
+    the next one. Stub and production detectors share this path; only the
+    batch hooks differ. If planning a chunk raises, each PDF turn of the
+    chunk plans its own pages inside its own try, so one malformed turn is
+    one error row.
 
     Chunking bounds worker memory: planning the WHOLE Arrow batch at once
     pins every parsed page (incl. decoded page rasters on the production
@@ -485,13 +446,12 @@ def extract_series(
     pages pinned at any moment while keeping inference batched (one predict
     per model per chunk, not per turn); paddlex deployments with very large
     page rasters can lower it via SPARK_GRAFT_PLAN_CHUNK_PAGES."""
-    from .detector import StubDetector
-
     th = thresholds if thresholds is not None else effective_thresholds()
     det = detector if detector is not None else StubDetector(th)
 
     items: list[tuple] = []
-    batch_pages: list = []
+    page_lists: list[list] = []
+    n_pages = 0
     for text in texts:
         if text is not None and text.startswith(PDF_PAYLOAD_SENTINEL):
             # Malformed payload -> error column, never a task failure: a
@@ -500,25 +460,24 @@ def extract_series(
             # error row, so catch Exception, not a narrow tuple.
             try:
                 payload = _loads(text[len(PDF_PAYLOAD_SENTINEL):])
-                items.append((PDF, text, payload))
-                if isinstance(payload, dict):
-                    pl = payload.get("pages", [])
-                    if isinstance(pl, list):
-                        batch_pages.extend(p for p in pl if isinstance(p, dict))
             except Exception as e:  # noqa: BLE001
                 items.append((PDF_ERR, text, e))
+            else:
+                items.append((PDF, text, payload))
+                pl = payload.get("pages", []) if isinstance(payload, dict) else []
+                pl = pl if isinstance(pl, list) else []
+                page_lists.append(pl)
+                n_pages += sum(1 for p in pl if isinstance(p, dict))
         else:
             items.append((OTHER, text, None))
-        if len(batch_pages) >= PLAN_CHUNK_PAGES:
+        if n_pages >= PLAN_CHUNK_PAGES:
             yield from _extract_chunk(
-                items, batch_pages, det, th, process_table, process_formula,
-                reading_order,
+                items, page_lists, det, th, process_table, process_formula,
             )
-            items, batch_pages = [], []
+            items, page_lists, n_pages = [], [], 0
 
     yield from _extract_chunk(
-        items, batch_pages, det, th, process_table, process_formula,
-        reading_order,
+        items, page_lists, det, th, process_table, process_formula,
     )
 
 
@@ -531,25 +490,25 @@ PLAN_CHUNK_PAGES = int(os.environ.get("SPARK_GRAFT_PLAN_CHUNK_PAGES", "512"))
 
 def _extract_chunk(
     items: list[tuple],
-    batch_pages: list,
+    page_lists: list[list],
     det,
     th: dict[int, float],
     process_table: bool,
     process_formula: bool,
-    reading_order: str,
 ) -> Iterator[dict[str, Any]]:
     """Plan one chunk's pages, then emit its turns in input order."""
-    replay = (
-        _plan_batch(det, batch_pages, process_table, process_formula)
-        if batch_pages else det
-    )
+    try:
+        plans = iter(plan_pages(det, page_lists, process_table, process_formula))
+    except Exception:  # noqa: BLE001 -- each PDF turn then plans its own pages
+        plans = None
 
     for tag, text, data in items:
         if tag == PDF:
+            planned = next(plans) if plans is not None else None
             try:
                 yield extract_pdf_turn(
-                    text, th, process_table, process_formula, replay,
-                    reading_order, payload=data,
+                    text, th, process_table, process_formula, det,
+                    payload=data, planned=planned,
                 )
             except Exception as e:  # noqa: BLE001 -- per-turn error contract
                 bad = extract_text_value(text)

@@ -216,6 +216,40 @@ def make_extraction_kernel(
     return kernel
 
 
+# The per-row counters of extracted rows, defined once: record key ->
+# (aggregate, column; None counts rows). lineage_metrics and the resumable
+# lineage records carry all of them; build_extraction observes the first
+# four on the same pass.
+ROW_COUNTERS = {
+    "turns": ("count", None),
+    "regions": ("sum", "n_regions"),
+    "artifacts": ("sum", "n_artifacts"),
+    "pages": ("sum", "n_pages"),
+    "errors": ("count", "error"),  # count() skips nulls
+    "min_conv_id": ("min", "conv_id"),
+    "max_conv_id": ("max", "conv_id"),
+}
+OBSERVED_COUNTERS = ("turns", "regions", "artifacts", "errors")
+
+
+def row_counters(*names: str) -> dict[str, Column]:
+    """ROW_COUNTERS (all, or ``names``) as aggregate Columns aliased to
+    their keys."""
+    out = {}
+    for name in names or ROW_COUNTERS:
+        agg, col = ROW_COUNTERS[name]
+        out[name] = getattr(F, agg)(F.lit(1) if col is None else col).alias(name)
+    return out
+
+
+def empty_row_counters() -> dict:
+    """ROW_COUNTERS over zero rows: counts and sums 0, min/max None."""
+    return {
+        name: None if agg in ("min", "max") else 0
+        for name, (agg, _) in ROW_COUNTERS.items()
+    }
+
+
 def salt_expr(salt: int) -> Column:
     """Salted co-partitioning key: keeps conv locality at bucket granularity
     while splitting a mega-conversation across ``salt`` buckets."""
@@ -280,13 +314,7 @@ def build_extraction(
     out = src.mapInArrow(kernel, schema=ddl)
 
     if observation is not None:
-        out = out.observe(
-            observation,
-            F.count(F.lit(1)).alias("turns"),
-            F.sum("n_regions").alias("regions"),
-            F.sum("n_artifacts").alias("artifacts"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("errors"),
-        )
+        out = out.observe(observation, *row_counters(*OBSERVED_COUNTERS).values())
 
     return out
 

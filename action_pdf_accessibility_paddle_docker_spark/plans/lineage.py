@@ -52,20 +52,12 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .extraction import build_extraction
+from .extraction import build_extraction, empty_row_counters, row_counters
 
 
 def lineage_metrics(extracted: DataFrame) -> DataFrame:
     """Reduce kernel-stamped rows to one lineage row per executor partition."""
-    return extracted.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("turns"),
-        F.sum("n_regions").alias("regions"),
-        F.sum("n_artifacts").alias("artifacts"),
-        F.sum("n_pages").alias("pages"),
-        F.count(F.when(F.col("error").isNotNull(), 1)).alias("errors"),
-        F.min("conv_id").alias("min_conv_id"),
-        F.max("conv_id").alias("max_conv_id"),
-    )
+    return extracted.groupBy("part_id").agg(*row_counters().values())
 
 
 def bucket_expr(n_buckets: int):
@@ -448,17 +440,7 @@ def run_resumable(
         spark, output_root, config,
         spark.read.parquet(input_path).withColumn("bucket", bucket_expr(n_buckets)),
         n_buckets, extract,
-        {
-            "turns": F.count(F.lit(1)),
-            "regions": F.sum("n_regions"),
-            "artifacts": F.sum("n_artifacts"),
-            "pages": F.sum("n_pages"),
-            "errors": F.count(F.when(F.col("error").isNotNull(), 1)),
-            "min_conv_id": F.min("conv_id"),
-            "max_conv_id": F.max("conv_id"),
-        },
-        {"turns": 0, "regions": 0, "artifacts": 0, "pages": 0, "errors": 0,
-         "min_conv_id": None, "max_conv_id": None},
+        row_counters(), empty_row_counters(),
         cluster_by=("conv_id",), sort_by=("conv_id", "turn_idx"),
         bucket_batch=bucket_batch, fail_after_batches=fail_after_batches,
         iceberg_table=iceberg_table, totals=("turns", "errors"),

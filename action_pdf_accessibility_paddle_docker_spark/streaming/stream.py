@@ -14,30 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.extraction import OUTPUT_DDL, make_extraction_kernel
-
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from ..plans.extraction import TRANSCRIPT_INPUT_DDL, build_extraction
 
 
 def read_transcript_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 8
 ) -> DataFrame:
     return (
-        spark.readStream.schema(TRANSCRIPT_DDL)
+        spark.readStream.schema(TRANSCRIPT_INPUT_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
-    )
-
-
-def build_streaming_extraction(
-    stream: DataFrame, thresholds: dict[int, float] | None = None
-) -> DataFrame:
-    """Stateless streaming extraction (same kernel as batch)."""
-    kernel = make_extraction_kernel(thresholds)
-    return stream.select("conv_id", "turn_idx", "role", "tool", "ts", "text").mapInArrow(
-        kernel, schema=OUTPUT_DDL
     )
 
 
@@ -363,11 +349,17 @@ def run_stream_to_parquet(
     checkpoint_path: str,
     thresholds: dict[int, float] | None = None,
     timeout_sec: float | None = None,
+    detector_kind: str = "stub",
+    detector_kw: dict | None = None,
 ):
-    """End-to-end streaming job: file source -> extraction -> parquet sink
-    with checkpointing (restart-safe). Returns the terminated query."""
+    """End-to-end streaming job: file source -> extraction (the batch plan's
+    kernel and detector, unordered) -> parquet sink with checkpointing
+    (restart-safe). Returns the terminated query."""
     stream = read_transcript_stream(spark, input_path)
-    out = build_streaming_extraction(stream, thresholds)
+    out = build_extraction(
+        stream, thresholds=thresholds, order_output=False,
+        detector_kind=detector_kind, detector_kw=detector_kw,
+    )
     q = (
         out.writeStream.format("parquet")
         .option("path", output_path)

@@ -95,6 +95,24 @@ def main() -> None:
                          "--input is a parquet of (media_id bigint, payload binary) "
                          "formula images; writes (media_id, latex, mathml) to --output")
     args = ap.parse_args()
+    # refuse flags the chosen mode would silently ignore, before any session
+    mode = "--streaming" if args.streaming else "--resumable" if args.resumable else None
+    if mode:
+        ignored = [flag for flag, given in (
+            ("--resumable", args.streaming and args.resumable),
+            ("--salt", args.salt), ("--no-order", args.no_order),
+            ("--template", args.template), ("--tag-tree", args.tag_tree),
+            ("--debug-images", args.debug_images),
+            ("--format iceberg", args.format == "iceberg"),
+        ) if given]
+        if ignored:
+            ap.error(f"{mode} ignores {', '.join(ignored)}")
+    if args.streaming and not args.checkpoint:
+        ap.error("--streaming requires --checkpoint")
+    if args.iceberg_table and not args.resumable:
+        ap.error("--iceberg-table requires --resumable")
+    if args.salt and not args.no_order:
+        ap.error("--salt requires --no-order (ordered output does not salt)")
 
     from pyspark.sql import Observation, SparkSession
 
@@ -172,9 +190,10 @@ def main() -> None:
             run_stream_to_parquet,
         )
 
-        if not args.checkpoint:
-            sys.exit("--streaming requires --checkpoint")
-        run_stream_to_parquet(spark, args.input, args.output, args.checkpoint, thresholds)
+        run_stream_to_parquet(
+            spark, args.input, args.output, args.checkpoint, thresholds,
+            detector_kind=args.detector, detector_kw=detector_kw,
+        )
         # an availableNow run over an empty/no-match input commits zero
         # batches; the sink dir then has no data files to infer a schema
         # from -- report 0 rows instead of crashing after a clean stream

@@ -82,15 +82,14 @@ def test_paddlex_detector_integration():  # pragma: no cover
     det = PaddleXDetector.get("PP-DocLayout-L", effective_thresholds(), model_root)
     image = np.full((320, 240, 3), 255, dtype=np.uint8)
     page = {"page": 1, "image": image}
-    boxes = det.detect_page(page)
+    [boxes] = det.detect_pages([page])
     assert isinstance(boxes, list)
-    for b in boxes:
-        if b["label"] == "table":
-            cells = det.table_cells(page, b)
-            assert cells is None or all("coordinate" in c for c in cells)
-        if b["label"] == "formula":
-            latex = det.formula_latex(page, b)
-            assert latex is None or isinstance(latex, str)
+    tables = [(page, b) for b in boxes if b["label"] == "table"]
+    formulas = [(page, b) for b in boxes if b["label"] == "formula"]
+    for cells in det.table_cells_many(tables):
+        assert cells is None or all("coordinate" in c for c in cells)
+    for latex in det.formula_latex_many(formulas):
+        assert latex is None or isinstance(latex, str)
 
 
 def test_get_detector_dispatch():

@@ -14,7 +14,7 @@ What these tests pin:
 * PaddleXDetector.get() keyed on (model, thresholds, model_dir, ...): two
   jobs in one long-lived worker with different thresholds must NOT alias.
 * detect_pdf_bytes: raw %PDF- bytes -> pypdfium2 rasterize -> the same
-  extract_pages pipeline -> region rows (not an error row).
+  plan_pages + extract_pages pipeline -> region rows (not an error row).
 """
 
 from __future__ import annotations
@@ -209,13 +209,6 @@ def test_formula_latex_many_single_call(fake_paddlex):
     assert len(fake_paddlex.models[PaddleXDetector.FORMULA_MODEL].calls) == 1
 
 
-def test_singular_hooks_delegate_to_batched(fake_paddlex):
-    det = PaddleXDetector.get("PP-DocLayout-L", effective_thresholds(), "/m")
-    page = _pages(1)[0]
-    assert len(det.detect_page(page)) == 3
-    assert det.formula_latex(page, {"coordinate": [0.0, 0.0, 10.0, 10.0]}) == "x^{2}+1"
-
-
 def test_detect_pdf_bytes_rasterizes_and_extracts(fake_paddlex, monkeypatch):
     monkeypatch.setitem(sys.modules, "pypdfium2", _fake_pdfium(n_pages=2))
     det = PaddleXDetector.get("PP-DocLayout-L", effective_thresholds(), "/m",
@@ -241,38 +234,26 @@ def test_detect_pdf_bytes_rasterizes_and_extracts(fake_paddlex, monkeypatch):
 def test_text_layer_fills_cells_from_crop_local_coords(fake_paddlex, monkeypatch):
     monkeypatch.setitem(sys.modules, "pypdfium2", _fake_pdfium(n_pages=1))
     from action_pdf_accessibility_paddle_docker_spark.operators.detector import (
-        TextLayerDetector,
+        fill_text_layer,
+    )
+    from action_pdf_accessibility_paddle_docker_spark.operators.payload import (
+        plan_pages,
     )
     from action_pdf_accessibility_paddle_docker_spark.operators.rasterize import (
         open_pdf_pages,
     )
 
-    base = PaddleXDetector.get("PP-DocLayout-L", effective_thresholds(), "/m",
-                               zoom=1.0)
+    det = PaddleXDetector.get("PP-DocLayout-L", effective_thresholds(), "/m",
+                              zoom=1.0)
     pages, close = open_pdf_pages(b"%PDF-1.7 x", scale=1.0)
     try:
-        det = TextLayerDetector(base)
-
-        class _GeomOnly:
-            """cell-det twin that emits empty text (like the real model)."""
-
-            def detect_page(self, page):
-                return base.detect_page(page)
-
-            def table_cells(self, page, box):
-                cells = base.table_cells(page, box)
-                for c in cells:
-                    c["text"] = ""
-                return cells
-
-            def formula_latex(self, page, box):
-                return base.formula_latex(page, box)
-
-        det = TextLayerDetector(_GeomOnly())
-        page = pages[0]
-        boxes = det.detect_page(page)
-        table_box = next(b for b in boxes if b["label"] == "table")
-        cells = det.table_cells(page, table_box)
+        planned = plan_pages(det, [pages], True, True)[0]
+        [(boxes, raws)] = planned
+        k = next(k for k, b in enumerate(boxes) if b["label"] == "table")
+        table_box, cells = boxes[k], raws[k]
+        for c in cells:  # like the real cell-det model: geometry, no text
+            c["text"] = ""
+        fill_text_layer(pages, planned)
         assert cells and all(c["text"].startswith("layer[") for c in cells)
         # crop-local (0,0) maps back to the table bbox origin (minus offset)
         ox = int(table_box["coordinate"][0]) - 1

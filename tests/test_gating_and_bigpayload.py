@@ -4,6 +4,8 @@ robustness."""
 import json
 from datetime import datetime
 
+import pytest
+
 from action_pdf_accessibility_paddle_docker_spark.config import PDF_PAYLOAD_SENTINEL
 from action_pdf_accessibility_paddle_docker_spark.oracle.extract import extract_turn
 from action_pdf_accessibility_paddle_docker_spark.plans.extraction import build_extraction
@@ -201,3 +203,58 @@ def test_planner_chunking_bounds_pinned_pages():
     assert len(det.page_calls) >= 3  # genuinely chunked, not one big plan
     assert sum(det.page_calls) == total_pages  # partition: nothing pinned twice
     assert max(det.page_calls) <= chunk + P_MAX - 1, det.page_calls
+
+
+def test_failed_chunk_plan_retries_each_turn():
+    """When planning a chunk raises (a malformed turn's box has no score or
+    no label), every PDF turn of that chunk plans its own pages: the
+    well-formed turns still equal the oracle, and each malformed turn is
+    one error row."""
+    import pandas as pd
+
+    from action_pdf_accessibility_paddle_docker_spark.config import (
+        PAYLOAD_KIND_PDF,
+        classify_payload,
+    )
+    from action_pdf_accessibility_paddle_docker_spark.operators import payload as P
+    from action_pdf_accessibility_paddle_docker_spark.operators.detector import (
+        StubDetector,
+    )
+    from action_pdf_accessibility_paddle_docker_spark.sources.transcripts import (
+        iter_rows,
+    )
+
+    from tests.util import flatten_oracle_regions, flatten_region_rows
+
+    good = [r["text"] for r in iter_rows(12, 5, seed=5)
+            if classify_payload(r["text"]) == PAYLOAD_KIND_PDF][:6]
+    assert len(good) == 6
+
+    def bad(box):
+        return PDF_PAYLOAD_SENTINEL + json.dumps(
+            {"pages": [{"page": 1, "boxes": [box]}]})
+
+    malformed = [
+        bad({"label": "text", "score": None, "coordinate": [0, 0, 9, 9]}),
+        bad({"score": 0.9, "coordinate": [0, 0, 9, 9]}),
+    ]
+    texts = [good[0], malformed[0], good[1], good[2], malformed[1]] + good[3:]
+    det = StubDetector(P.effective_thresholds())
+    page_lists = [json.loads(t[len(PDF_PAYLOAD_SENTINEL):])["pages"] for t in texts]
+    assert sum(len(pl) for pl in page_lists) < P.PLAN_CHUNK_PAGES  # one chunk
+    with pytest.raises((TypeError, KeyError)):
+        P.plan_pages(det, page_lists, True, True)
+
+    rows = list(P.extract_series(pd.Series(texts), detector=det))
+    assert len(rows) == len(texts)
+    for text, row in zip(texts, rows):
+        if text in malformed:
+            assert row["error"].startswith("pdf-payload-parse:"), row["error"]
+            continue
+        exp = extract_turn(text)
+        assert row.get("error") is None
+        assert row["extracted_text"] == exp["extracted_text"]
+        assert list(row["mathml"]) == list(exp["mathml"])
+        assert flatten_region_rows(row["regions"]) == flatten_oracle_regions(exp)
+        assert row["n_artifacts"] == exp["n_artifacts"]
+        assert row["n_pages"] == exp["n_pages"]

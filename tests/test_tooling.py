@@ -1,9 +1,10 @@
 """The measurement tooling beside the package: the headline query lists stay
-in step, every script compiles, and the scale probe parses its arguments
-before it builds a session."""
+in step, perfbench's traced names exist, every script compiles, and the
+scale probe parses its arguments before it builds a session."""
 
 import ast
 import glob
+import importlib
 import os
 import py_compile
 import subprocess
@@ -19,18 +20,47 @@ from action_pdf_accessibility_paddle_docker_spark.plans.queries import (
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_perfbench_queries_are_the_headline_plus_dedup_clusters():
-    # perfbench is a directory of scripts, not a package (workloads.py does
-    # ``from inputs import ...``), so its list is read from the source
-    with open(os.path.join(REPO, "perfbench", "workloads.py")) as f:
+def _perfbench_list(filename: str, name: str):
+    # perfbench is a directory of scripts, not a package: read from source
+    with open(os.path.join(REPO, "perfbench", filename)) as f:
         tree = ast.parse(f.read())
-    queries = next(
+    return next(
         ast.literal_eval(node.value) for node in tree.body
         if isinstance(node, ast.Assign)
-        and [getattr(t, "id", None) for t in node.targets] == ["QUERIES"]
+        and [getattr(t, "id", None) for t in node.targets] == [name]
     )
+
+
+def test_perfbench_queries_are_the_headline_plus_dedup_clusters():
+    queries = _perfbench_list("workloads.py", "QUERIES")
     assert queries == list(HEADLINE) + ["q_dedup_clusters"]
     assert set(queries) <= set(REGISTRY)
+
+
+@pytest.mark.parametrize("table", ["KERNEL", "DRIVER"])
+def test_perfbench_traced_names_resolve(table):
+    """A traced run patches each (module, attr) and crashes on a missing one;
+    a rename must fail here instead."""
+    targets = _perfbench_list("tracing.py", table)
+    assert targets
+    for module, attr in targets:
+        owner = importlib.import_module(
+            f"action_pdf_accessibility_paddle_docker_spark.{module}")
+        for part in attr.split("."):
+            owner = getattr(owner, part, None)
+            assert owner is not None, (module, attr)
+        assert callable(owner), (module, attr)
+
+
+def test_stub_detector_runs_the_traced_batch_hook():
+    from action_pdf_accessibility_paddle_docker_spark.operators.detector import (
+        BatchHooks,
+        StubDetector,
+    )
+
+    assert ("operators.detector", "BatchHooks.detect_pages") in _perfbench_list(
+        "tracing.py", "KERNEL")
+    assert StubDetector.detect_pages is BatchHooks.detect_pages
 
 
 @pytest.mark.parametrize("path", sorted(
