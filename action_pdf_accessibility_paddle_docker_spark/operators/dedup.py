@@ -712,11 +712,11 @@ def span_gram_table(
     text_col: str = "text",
 ) -> DataFrame:
     """The persisted CDC state for incremental span dedup: the corpus's
-    DISTINCT k-gram hash set, stamped with k. Bootstrap it once over the
-    curated corpus, then run arriving shards through
-    ``incremental_span_dedup`` and union each shard's ``new_grams`` appendix
-    in after its output commits (the side-path appendix pattern -- a crashed
-    shard run never poisons the state)."""
+    DISTINCT k-gram hash set, stamped with k. Run arriving shards through
+    ``incremental_span_dedup`` and add each shard's ``new_grams`` appendix
+    to the state only after its output commits, so a crashed shard run
+    never poisons the state (``corpus_job --state`` commits it that way;
+    an empty state needs no bootstrap)."""
     base = _span_base(df, id_col, text_col, k)
     return (
         _span_gram_occurrences(base, k)
@@ -726,31 +726,64 @@ def span_gram_table(
     )
 
 
-def check_span_k(seen_grams: DataFrame, k: int) -> None:
-    """Fail loudly when a span-gram table was built under a different k.
-    Foreign-stamp filter (the check_fps_key/check_bucket_family pattern):
-    the stamp is a per-file constant, so parquet row-group min/max stats
-    prune every healthy file and a clean table costs footer reads only."""
-    if SPAN_K_STAMP_COL not in seen_grams.columns:
+#: why a foreign value of each provenance stamp must fail the run
+_STAMP_WHY = {
+    "fp_key": "content md5s and url md5s never match each other",
+    "hash_family": "bucket values never match across families",
+    "banding": "band indices and slice hashes never match across bandings",
+    SPAN_K_STAMP_COL: "gram hashes are k-specific, so a mismatched k matches "
+                      "nothing (build the table with dedup.span_gram_table)",
+}
+#: stamps a state table must carry; the others pass when absent or NULL
+_REQUIRED_STAMPS = (SPAN_K_STAMP_COL,)
+
+
+def check_stamps(state: DataFrame, expected: dict) -> None:
+    """Fail loudly when a persisted state table's provenance stamps differ
+    from what this run computes with -- the one guard of every incremental
+    operator (``expected``: stamp column -> this run's value). A foreign
+    stamp means the probe silently matches nothing: every seen document,
+    near-dup or span admitted again, a second key space appended.
+
+    ONE foreign-stamp filter (``stamp != expected``) in one Spark job:
+    stamps are per-file constants, so parquet row-group stats prune every
+    healthy file and a clean table costs footer reads only (a ``head(1)``
+    sample could land on a legacy-NULL row and mask a mismatch).
+    ``fp_key``, ``hash_family`` and ``banding`` pass when absent or NULL
+    (unknown, pre-stamp provenance); ``span_k`` is required, so an
+    unstamped gram table raises."""
+    for col in _REQUIRED_STAMPS:
+        if col in expected and col not in state.columns:
+            state = state.withColumn(col, F.lit(None))
+    cols = [c for c in expected if c in state.columns]
+    if not cols:
+        return
+    pred = None
+    for c in cols:
+        bad = F.col(c) != F.lit(expected[c])
+        bad = (F.col(c).isNull() | bad) if c in _REQUIRED_STAMPS else bad
+        pred = bad if pred is None else pred | bad
+    rows = state.select(*cols).where(pred).distinct().collect()
+    for c in cols:
+        foreign = {r[c] for r in rows if r[c] != expected[c]}
+        if None in foreign and c in _REQUIRED_STAMPS:
+            raise ValueError(
+                f"state table has rows without a {c!r} stamp "
+                f"({_STAMP_WHY[c]}); an unstamped table cannot be validated"
+            )
+        foreign = sorted(foreign - {None})
+        if not foreign:
+            continue
+        if len(foreign) > 1:
+            raise ValueError(
+                f"state table carries MULTIPLE foreign {c} stamps "
+                f"{foreign!r} -- several key spaces were appended into one "
+                f"table; it must be rebuilt (split by {c}) before further use"
+            )
         raise ValueError(
-            "span-gram table has no 'span_k' stamp column -- build it with "
-            "dedup.span_gram_table (gram hashes are k-specific; an "
-            "unstamped table cannot be validated)"
-        )
-    foreign = (
-        seen_grams.where(
-            F.col(SPAN_K_STAMP_COL).isNull()
-            | (F.col(SPAN_K_STAMP_COL) != int(k))
-        )
-        .select(SPAN_K_STAMP_COL)
-        .head(1)
-    )
-    if foreign:
-        raise ValueError(
-            f"span-gram table was built under span_k="
-            f"{foreign[0][SPAN_K_STAMP_COL]!r}, probe asked for k={k}: "
-            "a mismatched k matches nothing and would silently admit every "
-            "duplicated span -- rebuild the table or pass the stamped k"
+            f"state table carries {c}={foreign[0]!r} but this run uses "
+            f"{expected[c]!r}; {_STAMP_WHY[c]} -- re-run with the table's "
+            "parameters or rebuild the table"
         )
 
 
@@ -774,8 +807,8 @@ def incremental_span_dedup(
 
     Returns ``(rewritten_shard, new_grams)``: the shard with spans excised
     (byte-exact passthrough for untouched docs) and the appendix of unseen
-    gram hashes, stamped with k -- write it to a SIDE path and union it into
-    the state after the output commits.
+    gram hashes, stamped with k -- add it to the state only after the
+    output commits.
 
     The appendix is derived from the REWRITTEN text, never the raw shard:
     a straddle gram (a window crossing the boundary of an excised span)
@@ -799,7 +832,7 @@ def incremental_span_dedup(
     gram set is TOKEN-count-sized (~one md5 per shard token): size shards
     so it fits the broadcast budget (~10M grams per GB), or pass
     ``broadcast_shard=False`` to fall back to shuffle joins."""
-    check_span_k(seen_grams, k)
+    check_stamps(seen_grams, {SPAN_K_STAMP_COL: int(k)})
     maybe_bc = F.broadcast if broadcast_shard else (lambda d: d)
     if checkpoint_input:
         shard = shard.localCheckpoint(eager=False)
@@ -1100,7 +1133,7 @@ def minhash_band_buckets(
     threshold is also rejected rather than silently overridden: a
     persisted bucket table keyed under one banding never matches another,
     so the choice must be deliberate -- and it is STAMPED in the
-    ``banding`` column so ``check_bucket_family`` can refuse a mismatched
+    ``banding`` column so ``check_stamps`` can refuse a mismatched
     probe)."""
     if threshold is not None and bands is not None:
         raise ValueError(
@@ -1120,7 +1153,7 @@ def minhash_band_buckets(
         # band slices under one banding never match another's, so either
         # mismatch between a persisted table and a later shard run would
         # silently match nothing; the stamps let the incremental path
-        # fail loudly instead (check_bucket_family)
+        # fail loudly instead (check_stamps)
         F.lit(hash_family).alias("hash_family"),
         F.lit(f"{num_hashes}x{bands}").alias("banding"),
     )
@@ -1352,54 +1385,6 @@ def dedup_clusters(
     return connected_component_labels(nodes, pairs, max_iter=max_iter)
 
 
-def check_bucket_family(
-    seen_buckets: DataFrame, hash_family: str, banding: Optional[str] = None,
-) -> None:
-    """Fail loudly when a persisted bucket table's provenance stamps
-    (when present) differ from what this run would signature with:
-
-    * ``hash_family``: bucket values are md5 hex in every family, so a
-      family mismatch silently admits near-dups of corpus content
-      instead of erroring.
-    * ``banding`` (round 7, stamped as ``"<num_hashes>x<bands>"``): band
-      indices and slice hashes under one banding never match another's
-      (a 16x4 probe against a 16x2 table matches NOTHING), so a banding
-      mismatch -- now an advertised path via ``threshold=`` -- is the
-      same silent-admission failure.
-
-    Both probes are FOREIGN-stamp filters (``stamp != expected``), the
-    ``check_fps_key`` posture: the stamps are per-file constants, so
-    parquet row-group stats prune every healthy file and a clean table
-    costs footer reads only; a ``head(1)`` sample could land on a
-    legacy-NULL row of a mergeSchema mix and mask a real mismatch.
-    Absent columns are unknown provenance and pass. Shared by the batch
-    (``incremental_near_dedup``) and streaming
-    (``streaming_incremental_near_dedup``) probes."""
-    checks = [("hash_family", hash_family,
-               "bucket values never match across families")]
-    if banding is not None:
-        checks.append(("banding", banding,
-                       "band indices and slice hashes never match across "
-                       "bandings"))
-    for col_name, expected, why in checks:
-        if col_name not in seen_buckets.columns:
-            continue
-        foreign = sorted(
-            r[col_name]
-            for r in seen_buckets.select(col_name)
-            .where(F.col(col_name).isNotNull()
-                   & (F.col(col_name) != F.lit(expected)))
-            .distinct()
-            .collect()
-        )
-        if foreign:
-            raise ValueError(
-                f"seen bucket table carries {col_name}={foreign[0]!r} but "
-                f"this run uses {expected!r}; {why} -- re-run with the "
-                "table's parameters or rebuild the table"
-            )
-
-
 def adopt_banding(
     seen_buckets: DataFrame,
     num_hashes: Optional[int],
@@ -1408,7 +1393,7 @@ def adopt_banding(
     """Resolve the (num_hashes, bands) a probe must signature with.
 
     Explicit arguments win (both must then match the table's stamp, which
-    ``check_bucket_family`` enforces). When the caller leaves them None
+    ``check_stamps`` enforces). When the caller leaves them None
     and the table carries a ``banding`` stamp, ADOPT it -- a table built
     under a tuned banding (``threshold=``) stays probe-able without the
     caller re-deriving the numbers (the stamp IS the source of truth;
@@ -1480,10 +1465,8 @@ def incremental_near_dedup(
     gap vs batch CC is a future doc near such a member's NON-overlapping
     region, which stays admitted.
 
-    The seen table's ``hash_family`` stamp (when present) must match this
-    run's family: bucket values are md5 hex strings in EVERY family, so a
-    mismatch would silently match nothing -- near-dups of corpus content
-    admitted, the appendix poisoning the table -- instead of erroring.
+    The seen table's ``hash_family``/``banding`` stamps must match this
+    run's (``check_stamps``).
 
     Scale shape: the within-shard pass is shard-sized (the reason this
     operator exists); the cross-corpus check is a bucket equi-join
@@ -1501,9 +1484,8 @@ def incremental_near_dedup(
     # (a tuned table stays probe-able without re-deriving its numbers);
     # then validate -- explicit args that mismatch the stamp still error
     num_hashes, bands = adopt_banding(seen_buckets, num_hashes, bands)
-    check_bucket_family(
-        seen_buckets, hash_family, banding=f"{num_hashes}x{bands}"
-    )
+    check_stamps(seen_buckets, {"hash_family": hash_family,
+                                "banding": f"{num_hashes}x{bands}"})
     buckets = minhash_band_buckets(
         new_df, num_hashes, bands, id_col, text_col, hash_family
     ).localCheckpoint(eager=False)
@@ -1844,10 +1826,9 @@ def incremental_dedup(
     # stamp-mismatch against a perfectly fine table
     if key not in ("content", "url"):
         raise ValueError(f"key must be 'content' or 'url', got {key!r}")
-    # key-space provenance guard at the LIBRARY level (the
-    # incremental_near_dedup/check_bucket_family pattern) so every caller
-    # -- CLI, notebook, future job -- is protected, not just corpus_job
-    check_fps_key(seen_fps, key)
+    # key-space provenance guard at the LIBRARY level so every caller --
+    # CLI, notebook, future job -- is protected, not just corpus_job
+    check_stamps(seen_fps, {"fp_key": key})
     if key == "url":
         # recrawl CDC: the state table is every CANONICAL URL ever kept;
         # unparseable URLs fall back to the content fingerprint (they must
@@ -1912,34 +1893,38 @@ def incremental_dedup(
 
 
 def write_fingerprint_table(
-    fps: DataFrame, table: str, n_buckets: int = 256, mode: str = "append",
-    key: Optional[str] = "content",
+    fps: DataFrame, table: str, n_buckets: Optional[int] = None,
+    mode: str = "append", key: Optional[str] = "content",
 ) -> None:
     """Create-or-append the persisted fingerprint table in the BUCKETED
     layout ``incremental_dedup`` exploits (see the section comment above).
 
     ``n_buckets`` fixes the join parallelism of every future anti-join
     against the table (Spark requires the probe side shuffled to exactly
-    this count): size it for the TARGET corpus, not the first shard --
-    256 buckets of a 32 TB end-state table are ~125 GB each, further split
-    by parquet row groups. Measured planner gotcha: when n_buckets is
-    BELOW the session's ``spark.sql.shuffle.partitions`` at read time,
-    ``DisableUnnecessaryBucketedScan`` silently drops the bucketed scan
-    (``Bucketed: false (disabled by query planner)``) and the corpus
-    re-shuffles after all -- pick n_buckets >= the shuffle parallelism of
-    the consuming jobs (equal gives the clean one-exchange plan the test
-    pins). Appends must reuse the creating spec (Spark validates); the
-    repartition keeps each append to one file per bucket instead of one
-    per (task x bucket).
+    this count). Left None, an append reuses the count the catalog holds
+    (Spark validates an append's spec) and a new table gets the session's
+    ``spark.sql.shuffle.partitions``: measured, n_buckets BELOW the reader's
+    shuffle partitions makes ``DisableUnnecessaryBucketedScan`` silently
+    drop the bucketed scan and the corpus re-shuffles after all, while an
+    equal count gives the clean one-exchange plan the test pins. The
+    repartition keeps each append to one file per bucket.
 
     ``key`` stamps the table with the fingerprint KEY SPACE it was built
     under ('content' or 'url') as a constant ``fp_key`` column (RLE —
     bytes-free in parquet): content md5s and url md5s never match each
     other, so a key switch between shard runs would silently admit every
-    previously-seen document AND pollute the state forever. The
-    ``check_bucket_family`` pattern; ``check_fps_key`` validates on read.
-    Pass ``key=None`` to write the legacy fingerprint-only schema (needed
-    to append to pre-stamp tables — Spark validates append schemas)."""
+    previously-seen document AND pollute the state forever;
+    ``check_stamps`` validates it on read. Pass ``key=None`` to write the
+    legacy fingerprint-only schema (needed to append to pre-stamp tables —
+    Spark validates append schemas)."""
+    spark = fps.sparkSession
+    if n_buckets is None and mode == "append" and spark.catalog.tableExists(table):
+        n_buckets = next(
+            int(r["data_type"])
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+            if r["col_name"] == "Num Buckets"
+        )
+    n_buckets = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col("fingerprint")]
     if key is not None:
         cols.append(F.lit(key).alias("fp_key"))
@@ -1954,68 +1939,18 @@ def write_fingerprint_table(
     )
 
 
-def check_fps_key(seen_fps: DataFrame, key: str) -> None:
-    """Fail loudly when a persisted fingerprint table's ``fp_key`` stamp
-    (when present) differs from the key space this run would stamp with:
-    content md5s and url md5s never match each other, so a mismatch
-    silently treats every seen document as new and appends a second key
-    space into the state forever.
-
-    Absent or all-NULL stamps are UNKNOWN provenance and pass — the
-    ``check_bucket_family`` posture: pre-stamp state exists under BOTH
-    keys (the url key predates the stamp), so asserting a key for it
-    would reject valid chains and falsely bless invalid ones; mixed
-    legacy+stamped directories read with mergeSchema carry NULL fp_key on
-    the legacy rows. Validation scans for FOREIGN stamps (round 7,
-    revised): every non-NULL stamp must equal ``key``, so the probe is a
-    filter ``fp_key != key`` — a ``head(1)`` sample could land on a
-    legacy-NULL row and mask a mismatched stamped append, and a blanket
-    ``distinct()`` would pay a full-column pass on every shard run of an
-    ever-growing state table. The stamp is written as a per-file CONSTANT
-    (``F.lit`` at append time), so parquet row-group min/max stats prune
-    every matching file at the reader: a healthy table costs footer reads
-    only, and only genuinely foreign files are ever scanned (then we
-    raise anyway). The foreign-stamp set is at most the number of key
-    spaces ever appended, so the collect stays bounded."""
-    if "fp_key" not in seen_fps.columns:
-        return
-    foreign = sorted(
-        r["fp_key"]
-        for r in seen_fps.select("fp_key")
-        .where(F.col("fp_key").isNotNull() & (F.col("fp_key") != F.lit(key)))
-        .distinct()
-        .collect()
-    )
-    if not foreign:
-        return
-    if len(foreign) > 1:
-        raise ValueError(
-            f"fingerprint state table carries MULTIPLE foreign fp_key "
-            f"stamps {foreign!r} -- several key spaces were appended into "
-            "one table; it must be rebuilt (split by fp_key) before "
-            "further use"
-        )
-    raise ValueError(
-        f"fingerprint state table carries fp_key={foreign[0]!r} but this "
-        f"run uses key={key!r}; the two key spaces never match -- "
-        "re-run with the table's key or rebuild the table (a mix of "
-        f"{foreign[0]!r} and {key!r} stamps likewise means the table is "
-        "polluted)"
-    )
-
-
 def append_fingerprints(
-    new_fps: DataFrame, table: str, n_buckets: int = 256,
+    new_fps: DataFrame, table: str, n_buckets: Optional[int] = None,
     key: Optional[str] = "content",
 ) -> None:
     """Append a shard's new fingerprints to the bucketed table IN PLACE.
 
-    Safe where the parquet-path appendix is not (corpus_job refuses
-    ``--new-fps`` == ``--seen-fps``): the rows are eagerly materialized
-    into executor blocks FIRST (``localCheckpoint`` -- bounded, the frame
-    is shard-sized), severing the plan's read of the very table being
-    appended to; the insert then scans only the checkpoint. ``key=None``
-    appends in the legacy fingerprint-only schema."""
+    Safe where an in-place parquet-path write is not: the rows are eagerly
+    materialized into executor blocks FIRST (``localCheckpoint`` --
+    bounded, the frame is shard-sized), severing the plan's read of the
+    very table being appended to; the insert then scans only the
+    checkpoint. ``n_buckets`` None appends with the table's own bucket
+    count. ``key=None`` appends in the legacy fingerprint-only schema."""
     write_fingerprint_table(
         new_fps.select("fingerprint").localCheckpoint(), table,
         n_buckets=n_buckets, mode="append", key=key,

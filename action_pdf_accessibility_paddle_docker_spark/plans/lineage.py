@@ -28,6 +28,9 @@ Design:
   driver's local disk) only AFTER its data write commits. A restart lists the
   lineage dir and skips completed buckets: exactly-once per bucket despite
   crashes between batches.
+* ``StateStore`` is the cross-run state of the incremental curation stages
+  (``jobs/corpus_job.py --state``): one versioned appendix per run, each
+  committed by the same atomic record write after the run's output lands.
 
 At 100 TB / 1000 executors the bucket count is the resume granularity knob;
 recomputation after a crash is bounded by one batch (default: the whole
@@ -47,6 +50,7 @@ per output root (the same rule every dynamic-overwrite pipeline has).
 from __future__ import annotations
 
 import json
+import re
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -82,8 +86,10 @@ def _lineage_dir(output_root: str) -> str:
     return output_root.rstrip("/") + "/_lineage"
 
 
-#: a real lineage record is always bucket_<int>.json by construction
-_BUCKET_FILE_RE = __import__("re").compile(r"^bucket_(\d+)\.json$")
+#: a real lineage record is always bucket_<int>.json by construction, and
+#: a state-store commit record _commits/<int>.json
+_BUCKET_FILE_RE = re.compile(r"^bucket_(\d+)\.json$")
+_COMMIT_FILE_RE = re.compile(r"^(\d+)\.json$")
 
 
 def _active_spark() -> SparkSession:
@@ -93,65 +99,72 @@ def _active_spark() -> SparkSession:
     return spark
 
 
+def _records(spark: SparkSession, d: str, name_re) -> dict:
+    """``{n: Hadoop path}`` of the files in ``d`` named by ``name_re``'s
+    integer group. The match is strict: debris like 'bucket_3 (1).json'
+    (editor save-as, object-store copy tools) must be IGNORED, not crash
+    int() and brick every subsequent resume."""
+    fs, dpath, _jvm = _fs_and_path(spark, d)
+    if not fs.exists(dpath):
+        return {}
+    return {int(m.group(1)): st.getPath() for st in fs.listStatus(dpath)
+            if (m := name_re.match(st.getPath().getName()))}
+
+
 def completed_buckets(output_root: str, spark: SparkSession | None = None) -> set[int]:
-    spark = spark or _active_spark()
-    fs, d, _jvm = _fs_and_path(spark, _lineage_dir(output_root))
-    if not fs.exists(d):
-        return set()
-    out: set[int] = set()
-    for status in fs.listStatus(d):
-        # strict match: debris like 'bucket_3 (1).json' (editor save-as,
-        # object-store copy tools) must be IGNORED, not crash int() and
-        # brick every subsequent resume
-        m = _BUCKET_FILE_RE.match(status.getPath().getName())
-        if m:
-            out.add(int(m.group(1)))
-    return out
+    return set(_records(spark or _active_spark(), _lineage_dir(output_root),
+                        _BUCKET_FILE_RE))
 
 
-def read_lineage(output_root: str, spark: SparkSession | None = None) -> dict[int, dict]:
-    """All committed per-bucket lineage records."""
-    spark = spark or _active_spark()
-    fs, d, jvm = _fs_and_path(spark, _lineage_dir(output_root))
-    out: dict[int, dict] = {}
-    if not fs.exists(d):
-        return out
-    for status in fs.listStatus(d):
-        name = status.getPath().getName()
-        if _BUCKET_FILE_RE.match(name):
-            stream = fs.open(status.getPath())
-            try:
-                data = bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            finally:
-                stream.close()
-            rec = json.loads(data)
-            out[int(rec["bucket"])] = rec
-    return out
+def _read_json(spark: SparkSession, path) -> dict:
+    """One JSON record through the Hadoop FileSystem API (``path`` is a
+    string or a Hadoop Path)."""
+    fs, hpath, jvm = _fs_and_path(spark, str(path))
+    stream = fs.open(hpath)
+    try:
+        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    return json.loads(data.decode("utf-8"))
 
 
-def _commit_lineage(
-    output_root: str, bucket: int, record: dict, spark: SparkSession | None = None
-) -> None:
-    spark = spark or _active_spark()
-    d = _lineage_dir(output_root)
+def _write_json(spark: SparkSession, path: str, record: dict,
+                sort_keys: bool = False) -> None:
+    """Commit one JSON record atomically: write ``.<name>.tmp`` beside it,
+    then rename over any previous version (the lineage, run-config and
+    state-store commit records all land this way)."""
+    d, name = path.rstrip("/").rsplit("/", 1)
     fs, dpath, jvm = _fs_and_path(spark, d)
     fs.mkdirs(dpath)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{d}/.bucket_{bucket}.json.tmp")
-    final = jvm.org.apache.hadoop.fs.Path(f"{d}/bucket_{bucket}.json")
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{d}/.{name}.tmp")
+    final = jvm.org.apache.hadoop.fs.Path(path)
     stream = fs.create(tmp, True)
     try:
-        stream.write(bytearray(json.dumps(record).encode("utf-8")))
+        stream.write(bytearray(
+            json.dumps(record, sort_keys=sort_keys).encode("utf-8")))
     finally:
         stream.close()
     if fs.exists(final):
         fs.delete(final, False)
     # Hadoop FileSystem.rename reports failure by RETURNING false, not by
-    # raising; ignoring it would leave the bucket uncommitted while the run
+    # raising; ignoring it would leave the record uncommitted while the run
     # proceeds -- unbounded re-extraction on every future resume
     if not fs.rename(tmp, final):
-        raise IOError(f"lineage commit rename failed: {tmp} -> {final}")
+        raise IOError(f"commit rename failed: {tmp} -> {final}")
+
+
+def read_lineage(output_root: str, spark: SparkSession | None = None) -> dict[int, dict]:
+    """All committed per-bucket lineage records."""
+    spark = spark or _active_spark()
+    return {b: _read_json(spark, path) for b, path in _records(
+        spark, _lineage_dir(output_root), _BUCKET_FILE_RE).items()}
+
+
+def _commit_lineage(
+    output_root: str, bucket: int, record: dict, spark: SparkSession | None = None
+) -> None:
+    _write_json(spark or _active_spark(),
+                f"{_lineage_dir(output_root)}/bucket_{bucket}.json", record)
 
 
 def ensure_run_config(
@@ -177,18 +190,9 @@ def ensure_run_config(
     config = json.loads(json.dumps(config, sort_keys=True))
     spark = spark or _active_spark()
     d = _lineage_dir(output_root)
-    fs, dpath, jvm = _fs_and_path(spark, d)
-    final = jvm.org.apache.hadoop.fs.Path(f"{d}/run_config.json")
+    fs, final, _jvm = _fs_and_path(spark, f"{d}/run_config.json")
     if fs.exists(final):
-        stream = fs.open(final)
-        try:
-            stored = json.loads(
-                bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            )
-        finally:
-            stream.close()
+        stored = _read_json(spark, final)
         if stored != config:
             raise ValueError(
                 "resume configuration mismatch: this output was started "
@@ -215,15 +219,7 @@ def ensure_run_config(
             f"them to {d}/run_config.json "
             f"(this invocation would have pinned {config!r})"
         )
-    fs.mkdirs(dpath)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{d}/.run_config.json.tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(config, sort_keys=True).encode("utf-8")))
-    finally:
-        stream.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"run-config commit rename failed: {tmp} -> {final}")
+    _write_json(spark, f"{d}/run_config.json", config, sort_keys=True)
 
 
 def _delete_bucket_dirs(
@@ -373,6 +369,59 @@ def run_bucketed(
         for k in totals:
             summary[k] += got.get(k, 0)
     return summary
+
+
+class StateStore:
+    """One stage's cross-run (CDC) state under ``root`` (``<state>/<stage>``):
+    ``v=<n>/`` is one run's appendix (parquet) and ``_commits/<n>.json``
+    (``{version, input, output, rows, committed_at}``) commits it; only
+    committed versions are read, so a run that dies before its commit
+    leaves no state behind. A run ``(input, output)`` that a record already
+    carries is a retry: it re-derives THAT version against the versions
+    below it and rewrites it in place, so it reproduces its output and
+    neither double-counts nor drains. Any other run appends max+1 (0 on an
+    empty store); ``run=None`` reads every committed version. ``schema`` is
+    the DDL the state reads as: columns an appendix lacks read as NULL, and
+    an empty store is an empty frame of it (the first run needs no
+    bootstrap)."""
+
+    def __init__(self, spark: SparkSession, root: str, schema: str,
+                 run: tuple | None = None):
+        self.spark, self.root, self.schema, self.run = (
+            spark, root.rstrip("/"), schema, run)
+        commits = {n: _read_json(spark, path) for n, path in _records(
+            spark, f"{self.root}/_commits", _COMMIT_FILE_RE).items()}
+        mine = [n for n, rec in commits.items()
+                if run is not None and [rec["input"], rec["output"]] == list(run)]
+        self.version = mine[0] if mine else max(commits, default=-1) + 1
+        self.visible = sorted(n for n in commits if n < self.version)
+
+    def read(self) -> DataFrame:
+        """The committed versions below this run's, as one frame."""
+        if not self.visible:
+            return self.spark.createDataFrame([], self.schema)
+        return (
+            self.spark.read.schema(f"{self.schema}, v int").parquet(self.root)
+            .where(F.col("v").isin(self.visible)).drop("v")
+        )
+
+    def commit(self, appendix: DataFrame, partition_by: tuple = ()) -> None:
+        """Write ``appendix`` as this run's version, then commit it. Call
+        only after the run's output landed."""
+        fs, _root, jvm = _fs_and_path(self.spark, self.root)
+        record = f"{self.root}/_commits/{self.version}.json"
+        data = f"{self.root}/v={self.version}"
+        # a retry uncommits its version before rewriting it, so a crash
+        # mid-rewrite leaves it uncommitted, never torn; an uncommitted
+        # v=<n> dir is a dead run's debris (the _delete_bucket_dirs rule)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(record), False)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(data), True)
+        appendix.write.partitionBy(*partition_by).parquet(data)
+        rows = self.spark.read.schema(self.schema).parquet(data).count()
+        _write_json(self.spark, record, {
+            "version": self.version, "input": self.run[0],
+            "output": self.run[1], "rows": rows, "committed_at": time.time(),
+        })
 
 
 def run_resumable(

@@ -271,14 +271,13 @@ def streaming_near_dedup_against_corpus(
     micro-batch-sized; Spark broadcasts it when small. The appendix
     (persisting the survivors' buckets back) is deliberately NOT done
     here -- a stream updating the table it joins against would race its
-    own micro-batches; run the batch ``incremental_near_dedup`` over the
-    accumulated output to advance the table.
+    own micro-batches; ``corpus_job --streaming --state`` reads the
+    committed neardup state read-only, and batch runs advance it.
 
-    The table's ``hash_family`` stamp (when present) must match, exactly
-    as in the batch path: bucket values are md5 hex in every family, so a
-    mismatch silently admits near-dups of corpus content."""
+    The table's stamps must match, exactly as in the batch path
+    (``dedup.check_stamps``)."""
     from ..operators.dedup import (
-        adopt_banding, check_bucket_family, minhash_buckets_col,
+        adopt_banding, check_stamps, minhash_buckets_col,
     )
 
     # adopt the static table's stamped banding (a tuned table stays
@@ -291,10 +290,9 @@ def streaming_near_dedup_against_corpus(
     # instead; stamp columns are per-file constants, so the filter costs
     # row-group-stats reads on healthy files.
     num_hashes, bands = adopt_banding(seen_buckets, None, None)
-    expected_banding = f"{num_hashes}x{bands}"
-    check_bucket_family(seen_buckets, hash_family, banding=expected_banding)
-    for col_name, expected in (("hash_family", hash_family),
-                               ("banding", expected_banding)):
+    stamps = {"hash_family": hash_family, "banding": f"{num_hashes}x{bands}"}
+    check_stamps(seen_buckets, stamps)
+    for col_name, expected in stamps.items():
         if col_name in seen_buckets.columns:
             seen_buckets = seen_buckets.where(
                 F.when(F.col(col_name).isNull()

@@ -28,10 +28,9 @@ stage's ``modes:`` line names the run modes it supports (batch, --resumable,
            tokens is removed except its corpus-first occurrence
            (min doc_id, position); modified docs are rejoined with
            single spaces, untouched docs pass through byte-exact.
-           Incremental (CDC) mode: --seen-grams <k-stamped gram table>
-           + --new-grams <appendix side path> -- the shard loses every
-           corpus-seen span plus its own internal duplicates, and the
-           corpus is never rescanned
+           With --state the shard loses every span of the committed
+           gram state plus its own internal duplicates, and the corpus
+           is never rescanned
            modes: batch
   pii      redact emails / IPv4 / payment cards / SSNs / intl + dashed
            phones in place
@@ -42,17 +41,17 @@ stage's ``modes:`` line names the run modes it supports (batch, --resumable,
            doc under a trained linear model (--clf-weights, written by
            jobs/train_clf_job.py) and keep docs scoring >= --clf-threshold
            modes: batch, resumable
-  dedup    exact dedup (min-id canonical survives) or incremental vs a
-           persisted fingerprint table (--seen-fps parquet dir + --new-fps
-           appendix, or --fps-table: a catalog table BUCKETED on the
-           fingerprint so the corpus-sized state never re-shuffles and the
-           appendix lands in place); streaming: watermarked first-seen
-           dedup bounded by --dedup-horizon
+  dedup    exact dedup (min-id canonical survives) or incremental vs the
+           committed fingerprint state (--state, or --fps-table: a catalog
+           table BUCKETED on the fingerprint so the corpus-sized state
+           never re-shuffles and the appendix lands in place); streaming:
+           watermarked first-seen dedup bounded by --dedup-horizon
            modes: batch, resumable, streaming
   neardup  MinHash-LSH near-duplicate removal: connected components over
            the candidate graph, keep the min-id canonical per cluster
            (--hash-family md5mix|md5|xxhash64 picks the signature family);
-           streaming: the stateless probe against --seen-buckets
+           --state: incremental against the committed band buckets;
+           streaming: the read-only probe against that state
            modes: batch, streaming
   semdedup SemDeDup-style semantic dedup over an embedding column
            (--embeddings side table or --embedding-col on the input):
@@ -79,10 +78,12 @@ Examples:
       --input /data/documents --output /data/curated \
       --stages clean,pii,gate,dedup,split
 
-  # incremental shard against the running fingerprint table
+  # incremental shard: deduped against every committed shard of
+  # /data/state, whose dedup/ store gains this shard's appendix once the
+  # output lands (rerunning the same --input/--output reproduces it)
   spark-submit --py-files pkg.zip jobs/corpus_job.py \
       --input /data/shard42 --output /data/curated_shard42 \
-      --stages dedup --seen-fps /data/fingerprints --new-fps /data/fp42
+      --stages dedup --state /data/state
 
   # checkpoint-resumable run: per-bucket lineage under <output>/_lineage,
   # data under <output>/data partitioned by bucket; reruns skip
@@ -130,7 +131,8 @@ class Stage:
     measured -- so it is never lazy here) after ``prepare`` ran, and
     ``observe`` counts the stage's output rows as ``after_<name>``.
     ``pins(args)`` are the row-set-shaping parameters a resumable run must
-    resume under."""
+    resume under. ``state`` is the schema the stage's ``--state`` store
+    reads as (None: the stage keeps no cross-run state)."""
 
     name: str
     build: Callable
@@ -140,6 +142,7 @@ class Stage:
     observe: bool = False
     prepare: Callable | None = None
     pins: Callable | None = None
+    state: str | None = None
 
 
 def _event_time(run):
@@ -202,15 +205,11 @@ def _linededup(run, df):
 
 def _spandedup(run, df):
     a = run.args
-    if getattr(a, "seen_grams", None):
-        rewritten, new_grams = D.incremental_span_dedup(
-            df, run.spark.read.parquet(a.seen_grams), k=a.span_k,
-            id_col=a.id_col, text_col=a.text_col, checkpoint_input=False,
-        )
-        # side-path appendix (crash-safe by construction: the user unions
-        # it in only after the output commit)
-        new_grams.write.mode("overwrite").parquet(a.new_grams)
-        return rewritten
+    if getattr(a, "state", None):
+        return run.incremental("spandedup", lambda seen: D.incremental_span_dedup(
+            df, seen, k=a.span_k, id_col=a.id_col, text_col=a.text_col,
+            checkpoint_input=False,
+        ))
     return D.remove_duplicate_spans(
         df, k=a.span_k, id_col=a.id_col, text_col=a.text_col,
         checkpoint_input=False,
@@ -261,53 +260,38 @@ def _dedup(run, df):
             .drop("fingerprint", "_ts")
         )
     fps_key = getattr(a, "fps_key", "content")
-    if getattr(a, "fps_table", None):
-        # bucketed-table incremental mode: the corpus-sized state side of
-        # the anti-join is read pre-partitioned (no shuffle), and the
-        # appendix goes back into the SAME table
-        legacy_schema = False
-        if spark.catalog.tableExists(a.fps_table):
-            # key-space provenance is validated inside incremental_dedup
-            # (check_fps_key); here we only detect the legacy
-            # fingerprint-only schema so the appendix matches it (Spark
-            # validates append schemas)
-            seen = spark.table(a.fps_table)
-            legacy_schema = "fp_key" not in seen.columns
-        else:
-            seen = spark.createDataFrame([], "fingerprint string")
-    elif getattr(a, "seen_fps", None):
-        # mergeSchema: an accumulated fps dir can mix pre-stamp
-        # (fingerprint-only) and stamped shard files; without it the read
-        # picks one footer's schema nondeterministically
-        seen = spark.read.option("mergeSchema", "true").parquet(a.seen_fps)
-    else:
+
+    def step(seen):
+        survivors, _ = D.incremental_dedup(
+            df, seen, id_col=a.id_col, text_col=a.text_col,
+            method=getattr(a, "fps_method", "join"), key=fps_key,
+            url_col=getattr(a, "url_col", "url"),
+        )
+        # one materialization serves the appendix AND the output write
+        # (without it the whole upstream stage chain executes twice)
+        survivors = survivors.localCheckpoint(eager=True)
+        return (survivors.drop("fingerprint"),
+                survivors.select("fingerprint", F.lit(fps_key).alias("fp_key")))
+
+    if getattr(a, "state", None):
+        return run.incremental("dedup", step)
+    if not getattr(a, "fps_table", None):
         canon = D.exact_dedup(df, id_col=a.id_col, text_col=a.text_col)
         return df.join(
             canon.select(F.col("canonical_id").alias(a.id_col)), a.id_col
         )
-    survivors, _ = D.incremental_dedup(
-        df, seen, id_col=a.id_col, text_col=a.text_col,
-        method=getattr(a, "fps_method", "join"), key=fps_key,
-        url_col=getattr(a, "url_col", "url"),
-    )
-    # one materialization serves the appendix AND the output write
-    # (without it the whole upstream stage chain executes twice)
-    survivors = survivors.localCheckpoint(eager=True)
-    if getattr(a, "fps_table", None):
-        # the table appendix runs POST-COMMIT: state must only record docs
-        # whose curated rows are durable
-        run.post_commit.append(
-            lambda s=survivors, nb=int(getattr(a, "fps_buckets", 256)), k=(
-                None if legacy_schema else fps_key
-            ): D.append_fingerprints(
-                s.select("fingerprint"), a.fps_table, n_buckets=nb, key=k,
-            )
-        )
-    else:
-        survivors.select(
-            "fingerprint", F.lit(fps_key).alias("fp_key"),
-        ).write.mode("overwrite").parquet(a.new_fps)
-    return survivors.drop("fingerprint")
+    # bucketed-table incremental mode: the corpus-sized state side of the
+    # anti-join is read pre-partitioned (no shuffle), and the appendix goes
+    # back into the SAME table once the output lands
+    seen = (spark.table(a.fps_table) if spark.catalog.tableExists(a.fps_table)
+            else spark.createDataFrame([], STAGE_TABLE["dedup"].state))
+    out, appendix = step(seen)
+    # a legacy fingerprint-only table takes a legacy appendix (Spark
+    # validates append schemas)
+    key = fps_key if "fp_key" in seen.columns else None
+    run.post_commit.append(
+        lambda: D.append_fingerprints(appendix, a.fps_table, key=key))
+    return out
 
 
 def _neardup(run, df):
@@ -323,17 +307,17 @@ def _neardup(run, df):
         )
 
         return streaming_near_dedup_against_corpus(
-            df, run.spark.read.parquet(a.seen_buckets),
+            df, run.store("neardup").read(),
             text_col=a.text_col, hash_family=a.hash_family,
         )
-    if getattr(a, "seen_buckets", None):
-        survivors, new_buckets = D.incremental_near_dedup(
-            df, run.spark.read.parquet(a.seen_buckets), id_col=a.id_col,
-            text_col=a.text_col, hash_family=a.hash_family,
+    if getattr(a, "state", None):
+        # band-partitioned versions: the streaming probe's per-band joins
+        # each scan only their band
+        return run.incremental("neardup", lambda seen: D.incremental_near_dedup(
+            df, seen, id_col=a.id_col, text_col=a.text_col,
+            hash_family=a.hash_family,
             persist_buckets=getattr(a, "bucket_persist", "cluster"),
-        )
-        new_buckets.write.mode("overwrite").parquet(a.new_buckets)
-        return survivors
+        ), partition_by=("band",))
     # keep the min-id canonical of each LSH connected component; the
     # cluster table is (doc_id, cluster_id) for EVERY doc, so the survivor
     # filter is a doc_id equi-join, never a text re-hash
@@ -483,7 +467,8 @@ STAGE_TABLE = {st.name: st for st in (
                      "a corpus-wide aggregate",
         "streaming": "the corpus-first occurrence of a line is a corpus-wide "
                      "aggregate with unbounded streaming state"}),
-    Stage("spandedup", _spandedup, checkpoint=True, observe=True, refuse={
+    Stage("spandedup", _spandedup, checkpoint=True, observe=True,
+          state="gh string, span_k int", refuse={
         "resumable": f"{_CROSS_BUCKET}: a span's corpus-first occurrence is "
                      "a corpus-wide aggregate",
         "streaming": "the corpus-first occurrence of a token span is a "
@@ -498,8 +483,9 @@ STAGE_TABLE = {st.name: st for st in (
                      "followed by a semi-join, neither of which streams in "
                      "append mode; gate streams, classify in the batch pass "
                      "over the stream's output"}),
-    Stage("dedup", _dedup, drops=True),
+    Stage("dedup", _dedup, drops=True, state="fingerprint string, fp_key string"),
     Stage("neardup", _neardup, drops=True, checkpoint=True, observe=True,
+          state="band int, bucket string, hash_family string, banding string",
           refuse={
         "resumable": f"{_CROSS_BUCKET}: near-duplicate clusters span "
                      "buckets"}),
@@ -562,60 +548,34 @@ def check_args(args, stages, mode: str) -> None:
             g("partition_output_by") or g("output_files")):
         raise SystemExit("--shuffle-output orders the whole output; it is "
                          "exclusive with --partition-output-by/--output-files")
-    if "dedup" in stages and g("seen_fps") and not g("new_fps"):
-        raise SystemExit("--seen-fps requires --new-fps")
     if g("fps_key", "content") != "content" and not (
-            g("seen_fps") or g("fps_table")):
+            g("state") or g("fps_table")):
         raise SystemExit("--fps-key composes with incremental dedup only "
-                         "(--seen-fps or --fps-table); for within-shard URL "
+                         "(--state or --fps-table); for within-shard URL "
                          "dedup use the urldedup stage")
-    if g("fps_table") and (g("seen_fps") or g("new_fps")):
-        raise SystemExit("--fps-table and --seen-fps/--new-fps are exclusive: "
-                         "the table IS the persisted state, appended in place")
-    if "neardup" in stages and g("seen_buckets") and not g("new_buckets") \
-            and not streaming:
-        raise SystemExit("--seen-buckets requires --new-buckets (batch "
-                         "incremental mode writes the shard's appendix; only "
-                         "the --streaming corpus probe runs appendix-less)")
-    if g("new_buckets") and not g("seen_buckets"):
-        raise SystemExit("--new-buckets requires --seen-buckets: plain neardup "
-                         "writes no appendix -- bootstrap a bucket table with "
-                         "operators.dedup.minhash_band_buckets over the "
-                         "curated output, then run later shards against it")
+    if g("fps_table") and g("state"):
+        raise SystemExit("--fps-table and --state are exclusive: the table "
+                         "IS dedup's persisted state, appended in place")
+    if g("state") and not any(STAGE_TABLE[s].state for s in stages):
+        raise SystemExit("--state holds the state of the "
+                         + ", ".join(s for s in STAGES if STAGE_TABLE[s].state)
+                         + " stages; none of them is in --stages")
     if "spandedup" in stages and g("span_k", 50) < 2:
         raise SystemExit("--span-k must be >= 2")
     if "semdedup" in stages and g("semdedup_clusters", 16) < 2:
         # MLlib KMeans refuses k < 2 from inside the JVM
         raise SystemExit("--semdedup-clusters must be >= 2")
-    if "spandedup" in stages and bool(g("seen_grams")) != bool(g("new_grams")):
-        raise SystemExit("--seen-grams and --new-grams come together (the "
-                         "shard's appendix goes to a side path; union it in "
-                         "after the output commits). Bootstrap a gram table "
-                         "with operators.dedup.span_gram_table")
-    if (g("seen_grams") or g("new_grams")) and "spandedup" not in stages:
-        raise SystemExit("--seen-grams/--new-grams only apply to the "
-                         "spandedup stage")
     # incremental_span_dedup's precondition: every doc-dropping stage must
     # run BEFORE the appendix is derived, or it marks grams of documents
     # that never ship and a later shard's sole copy of a shared span is
     # silently excised (permanent content loss)
     droppers = [s for s in STAGES[STAGES.index("spandedup") + 1:]
                 if s in stages and STAGE_TABLE[s].drops]
-    if g("seen_grams") and droppers:
-        raise SystemExit("--seen-grams cannot be combined with doc-dropping "
-                         f"stages that run after spandedup ({', '.join(droppers)}): "
-                         "run them in a prior pass, then the incremental "
-                         "spandedup pass on its output")
-    for new_p, seen_p, names in (
-        (g("new_fps"), g("seen_fps"), "--new-fps/--seen-fps"),
-        (g("new_buckets"), g("seen_buckets"), "--new-buckets/--seen-buckets"),
-        (g("new_grams"), g("seen_grams"), "--new-grams/--seen-grams"),
-    ):
-        # updating in place would delete the parquet dir the plan still
-        # reads lazily: at best a late failure, at worst a destroyed table
-        if new_p and seen_p and os.path.abspath(new_p) == os.path.abspath(seen_p):
-            raise SystemExit(f"{names} must be different paths: write the "
-                             "appendix to a fresh path and union afterwards")
+    if g("state") and "spandedup" in stages and droppers:
+        raise SystemExit("incremental spandedup (--state) cannot be combined "
+                         "with doc-dropping stages that run after it "
+                         f"({', '.join(droppers)}): run them in a prior pass, "
+                         "then the incremental spandedup pass on its output")
     if "decontam" in stages and not g("benchmark"):
         raise SystemExit("the decontam stage requires --benchmark")
     if "classify" in stages and not g("clf_weights"):
@@ -636,7 +596,7 @@ def check_args(args, stages, mode: str) -> None:
             raise SystemExit("--lsh-threshold only applies to the neardup stage")
         if not 0.0 < g("lsh_threshold") < 1.0:
             raise SystemExit("--lsh-threshold must be in (0, 1)")
-        if g("seen_buckets") or streaming:
+        if g("state") or streaming:
             raise SystemExit("--lsh-threshold is for the within-corpus batch "
                              "form only: incremental and streaming probes "
                              "must match the persisted table's stamped banding")
@@ -657,7 +617,8 @@ def check_args(args, stages, mode: str) -> None:
         raise SystemExit("--mix-keep-frac must be > 0")
     if batch:
         return
-    for flag, on in (("--seen-fps/--fps-table", g("seen_fps") or g("fps_table")),
+    for flag, on in (("--fps-table", g("fps_table")),
+                     ("--state", resumable and g("state")),
                      ("--report", g("report")),
                      ("--shuffle-output", g("shuffle_output") is not None),
                      ("--partition-output-by", g("partition_output_by")),
@@ -679,15 +640,11 @@ def check_args(args, stages, mode: str) -> None:
                          "query: each needs its own watermark on the event "
                          "column and Spark disallows redefining a watermark; "
                          "run one of them in a second hop (or batch)")
-    if "neardup" in stages and not g("seen_buckets"):
-        raise SystemExit("streaming neardup requires --seen-buckets: what "
-                         "streams is the stateless probe against the "
-                         "persisted band-bucket table; within-stream "
-                         "connected components are batch-only")
-    if "neardup" in stages and g("new_buckets"):
-        raise SystemExit("--new-buckets is batch-only: a stream updating the "
-                         "bucket table it joins against would race its own "
-                         "micro-batches")
+    if ("neardup" in stages) != bool(g("state")):
+        raise SystemExit("streaming neardup requires --state, and only it "
+                         "reads --state in a stream: what streams is the "
+                         "read-only probe against the committed neardup "
+                         "state (within-stream components are batch-only)")
     if not g("checkpoint"):
         raise SystemExit("--streaming requires --checkpoint")
 
@@ -728,16 +685,14 @@ def main() -> None:
                     help="spandedup: minimum duplicated run length in "
                          "whitespace tokens (Lee et al. 2021 use 50); "
                          "shorter repeats always survive")
-    ap.add_argument("--seen-grams", default=None, metavar="DIR",
-                    help="spandedup: persisted corpus span-gram table "
-                         "(parquet, built by dedup.span_gram_table, "
-                         "k-stamped) -- incremental mode: the shard loses "
-                         "every corpus-seen span plus its own internal "
-                         "duplicates; no corpus rescan")
-    ap.add_argument("--new-grams", default=None, metavar="DIR",
-                    help="spandedup incremental: side path for the shard's "
-                         "unseen-gram appendix; union into --seen-grams "
-                         "after the output commits")
+    ap.add_argument("--state", default=None, metavar="DIR",
+                    help="incremental (CDC) dedup, neardup and spandedup: "
+                         "DIR/<stage> holds one version per run (--input, "
+                         "--output), committed after its output lands; a "
+                         "shard is deduped against every committed version "
+                         "(empty DIR: the first shard), and rerunning the "
+                         "same --input/--output reproduces its output. "
+                         "Streaming neardup probes it read-only")
     ap.add_argument("--cap-by-domain", action="store_true",
                     help="cap: stratify by the registered domain derived "
                          "from --url-col (the RefinedWeb per-domain "
@@ -760,25 +715,17 @@ def main() -> None:
                          "the TOP fraction of docs by classifier score "
                          "(the DCLM selection rule; calibration-free). "
                          "Batch-only: the cutpoint is a GLOBAL quantile")
-    ap.add_argument("--seen-fps", default=None,
-                    help="dedup: persisted fingerprint table (parquet); when "
-                         "set, dedup is INCREMENTAL against it")
-    ap.add_argument("--new-fps", default=None,
-                    help="dedup: where to write the fingerprints this shard "
-                         "adds (required with --seen-fps)")
     ap.add_argument("--fps-table", default=None, metavar="NAME",
-                    help="dedup: catalog name of a BUCKETED fingerprint "
-                         "table (created on first use; bucketBy on "
-                         "fingerprint). Incremental like --seen-fps, but "
-                         "the corpus-sized state side of the anti-join is "
-                         "read pre-partitioned -- no corpus shuffle per "
-                         "shard, ever -- and the shard's new fingerprints "
-                         "are APPENDED in place (safe: materialized before "
-                         "the insert). Enables Hive catalog support so the "
-                         "table outlives the job (locally a derby metastore "
-                         "in the driver's cwd -- run shards from one "
-                         "directory; on a cluster the shared metastore). "
-                         "Exclusive with --seen-fps/--new-fps")
+                    help="dedup: catalog name of a fingerprint table "
+                         "BUCKETED on fingerprint (created on first use with "
+                         "the session's shuffle partition count). "
+                         "Incremental like --state, but the corpus-sized "
+                         "state side of the anti-join is read "
+                         "pre-partitioned and the shard's fingerprints are "
+                         "appended in place. Enables Hive catalog support "
+                         "(locally a derby metastore in the driver's cwd -- "
+                         "run shards from one directory). Exclusive with "
+                         "--state")
     ap.add_argument("--fps-method", default="join", choices=("join", "probe"),
                     help="incremental dedup cross-corpus strategy: 'join' "
                          "(LeftAnti; pair with --fps-table so the corpus "
@@ -794,10 +741,6 @@ def main() -> None:
                          "--url-col; the recrawl case -- one capture per "
                          "URL across the corpus's lifetime; unparseable "
                          "URLs fall back to a salted content hash)")
-    ap.add_argument("--fps-buckets", type=int, default=256,
-                    help="fps-table: bucket count, fixed at creation; size "
-                         "for the TARGET corpus (it pins the anti-join "
-                         "parallelism for the table's lifetime)")
     ap.add_argument("--rate", action="append", default=[], metavar="SOURCE=RATE",
                     help="sample: per-source keep rate, e.g. --rate web=0.1")
     ap.add_argument("--mix-temperature", type=float, default=None, metavar="T",
@@ -827,15 +770,6 @@ def main() -> None:
                          "small-files control: a 32-task shuffle writing "
                          "per-source dirs otherwise emits up to 32 tiny "
                          "files per source")
-    ap.add_argument("--seen-buckets", default=None,
-                    help="neardup: persisted MinHash band-bucket table "
-                         "(parquet); when set, neardup is INCREMENTAL -- "
-                         "the arriving shard is collapsed within itself, "
-                         "then its canonicals are dropped on any bucket "
-                         "hit against the corpus (never re-signatured)")
-    ap.add_argument("--new-buckets", default=None,
-                    help="neardup: where to write the bucket rows this "
-                         "shard adds (required with --seen-buckets)")
     ap.add_argument("--embeddings", default=None,
                     help="semdedup: parquet side table of (<id-col>, "
                          "<embedding-col>) rows; omitted = the input "
@@ -877,7 +811,7 @@ def main() -> None:
                          "TRAINING doc's shingle set")
     ap.add_argument("--bucket-persist", default="cluster",
                     choices=("cluster", "canonical"),
-                    help="neardup incremental: which docs' buckets enter "
+                    help="neardup --state: which docs' buckets enter "
                          "the appendix -- 'cluster' (default) persists "
                          "every member of a surviving cluster so future "
                          "shards near a dropped within-shard dup are "
@@ -894,9 +828,9 @@ def main() -> None:
                     help="neardup (within-corpus batch form only): target "
                          "Jaccard similarity; the LSH banding is derived "
                          "via lsh_tuning instead of the 16x4 default. "
-                         "Incompatible with --seen-buckets/--streaming: "
+                         "Incompatible with --state/--streaming: "
                          "persisted/streaming probes are keyed under the "
-                         "table's stamped banding")
+                         "state's stamped banding")
     ap.add_argument("--report", default=None, metavar="PATH",
                     help="after the write, run the one-pass corpus audit "
                          "(corpus_report: totals, language mix, gate keep "
@@ -942,9 +876,9 @@ def main() -> None:
                          "stateless and stream as-is, dedup becomes the "
                          "watermarked streaming exact dedup (cross-batch state "
                          "bounded by --dedup-horizon), neardup becomes the "
-                         "stateless corpus probe against --seen-buckets "
-                         "(stream-static anti-joins, no appendix); incremental "
-                         "--seen-fps is batch-only")
+                         "read-only corpus probe against --state "
+                         "(stream-static anti-joins, no appendix); --fps-table "
+                         "is batch-only")
     ap.add_argument("--checkpoint", default=None, help="streaming checkpoint dir")
     ap.add_argument("--ts-col", default="ts",
                     help="streaming dedup event-time column (must exist on the "
@@ -1025,7 +959,7 @@ class _Run:
         self.stages = [STAGE_TABLE[s] for s in STAGES if s in stages]
         self.input_columns: list[str] = []
         self.observations: list = []
-        # e.g. the --fps-table appendix: appending the shard's fingerprints
+        # the --state and --fps-table appendices: recording the shard
         # before the output write would, on a crash in between, mark every
         # doc of the shard as seen -- a rerun would emit ZERO rows
         self.post_commit: list = []
@@ -1037,6 +971,27 @@ class _Run:
         )
 
         return QC.load_classifier(self.spark, self.args.clf_weights)
+
+    def store(self, name):
+        """Stage ``name``'s store under ``--state``: this run's version in
+        batch mode, read-only over every committed version in streaming."""
+        from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
+            StateStore,
+        )
+
+        a = self.args
+        return StateStore(
+            self.spark, f"{a.state.rstrip('/')}/{name}", STAGE_TABLE[name].state,
+            None if self.mode == "streaming" else (a.input, a.output),
+        )
+
+    def incremental(self, name, step, partition_by=()):
+        """Run ``step(seen) -> (output, appendix)`` against the stage's
+        committed state; the appendix commits after the output lands."""
+        store = self.store(name)
+        out, appendix = step(store.read())
+        self.post_commit.append(lambda: store.commit(appendix, partition_by))
+        return out
 
     def apply(self, df, names=None):
         """Run the selected stages (all, or those in ``names``) over ``df``
@@ -1127,8 +1082,8 @@ def run_pipeline(spark, args, stages) -> dict:
         except Exception:  # noqa: BLE001 -- staging leftovers are harmless
             pass
     # the curated output is durable from here on: apply deferred state
-    # mutations (fps-table appendix) -- a crash BEFORE this point reruns
-    # cleanly because the state table never saw the shard
+    # mutations (--state and --fps-table appendices) -- a crash BEFORE this
+    # point reruns cleanly because the state never saw the shard
     for fn in run.post_commit:
         fn()
     for stage, obs, frame in run.observations:

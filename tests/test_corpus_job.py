@@ -3,6 +3,7 @@ incremental-dedup shard loop) on the shared test session. The spark-submit
 surface itself is exercised by the verify drive."""
 
 import argparse
+import json
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,10 +14,10 @@ from jobs.corpus_job import run_pipeline
 def _ns(**kw):
     base = dict(
         id_col="doc_id", text_col="text", min_kept_lines=2,
-        seen_fps=None, new_fps=None, rate=[], default_rate=1.0,
+        rate=[], default_rate=1.0,
         stratum_col="source", cap_per_source=10000, hash_family="md5mix",
         line_min_chars=30, url_col="url", span_k=50,
-        seen_grams=None, new_grams=None, linededup_unit="line",
+        linededup_unit="line",
     )
     base.update(kw)
     return argparse.Namespace(**base)
@@ -58,6 +59,8 @@ def test_full_stage_composition(spark, tmp_path):
 
 
 def test_incremental_shard_loop(spark, tmp_path):
+    """--state: shard 1 runs on an empty store (no bootstrap), shard 2 is
+    deduped against shard 1's committed fingerprints."""
     shard1, shard2 = tmp_path / "s1", tmp_path / "s2"
     shard1.mkdir(), shard2.mkdir()
     _write_docs(shard1 / "p.parquet", [
@@ -68,22 +71,15 @@ def test_incremental_shard_loop(spark, tmp_path):
         dict(doc_id=10, text="FIRST   unique document body.", source="web"),  # seen
         dict(doc_id=11, text="a genuinely new document body.", source="web"),
     ])
-    empty = tmp_path / "fps0"
-    empty.mkdir()
-    pq.write_table(
-        pa.table({"fingerprint": pa.array([], pa.string())}), str(empty / "p.parquet")
-    )
-
+    state = str(tmp_path / "state")
     r1 = run_pipeline(
         spark,
-        _ns(input=str(shard1), output=str(tmp_path / "o1"),
-            seen_fps=str(empty), new_fps=str(tmp_path / "fps1")),
+        _ns(input=str(shard1), output=str(tmp_path / "o1"), state=state),
         ["dedup"],
     )
     r2 = run_pipeline(
         spark,
-        _ns(input=str(shard2), output=str(tmp_path / "o2"),
-            seen_fps=str(tmp_path / "fps1"), new_fps=str(tmp_path / "fps2")),
+        _ns(input=str(shard2), output=str(tmp_path / "o2"), state=state),
         ["dedup"],
     )
     assert r1["counters"]["output"] == 2
@@ -333,33 +329,38 @@ def test_semdedup_after_stages_that_leave_one_doc(spark, tmp_path):
 
 
 def test_streaming_neardup_corpus_probe(spark, tmp_path):
-    """--streaming + neardup + --seen-buckets: the stateless stream-static
-    corpus probe drops arriving docs near persisted corpus content while
-    fresh docs flow through; driven through the streaming pipeline body."""
+    """--streaming + neardup + --state: the read-only stream-static corpus
+    probe drops arriving docs near committed corpus content while fresh docs
+    flow through, and ignores an uncommitted version; driven through the
+    streaming pipeline body."""
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
         minhash_band_buckets,
     )
     from jobs.corpus_job import run_pipeline_streaming
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [(1, base)], "doc_id long, text string"
-    )
-    seen_path = tmp_path / "seen_nb"
-    minhash_band_buckets(corpus).write.partitionBy("band").parquet(str(seen_path))
+    fresh = "one two three four five six seven eight nine ten"
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    _write_docs(corpus / "p.parquet", [dict(doc_id=1, text=base, source="web")])
+    state = tmp_path / "state"
+    run_pipeline(spark, _ns(input=str(corpus), output=str(tmp_path / "o0"),
+                            state=str(state)), ["neardup"])
+    # a dead run's appendix (no commit record) covering the fresh doc
+    minhash_band_buckets(
+        spark.createDataFrame([(2, fresh)], "doc_id long, text string")
+    ).write.partitionBy("band").parquet(str(state / "neardup" / "v=1"))
 
     src = tmp_path / "in_snd"
     src.mkdir()
     _write_docs(src / "p.parquet", [
         dict(doc_id=10, text=base.upper(), source="web"),          # corpus hit
-        dict(doc_id=11, text="one two three four five six seven "
-                             "eight nine ten", source="web"),      # fresh
+        dict(doc_id=11, text=fresh, source="web"),                 # fresh
     ])
     ns = _ns(
         input=str(src), output=str(tmp_path / "out_snd"),
         streaming=True, checkpoint=str(tmp_path / "ck_snd"),
-        ts_col="ts", dedup_horizon="30 minutes",
-        seen_buckets=str(seen_path), new_buckets=None,
+        ts_col="ts", dedup_horizon="30 minutes", state=str(state),
     )
     res = run_pipeline_streaming(spark, ns, ["neardup"])
     kept = {r["doc_id"]
@@ -575,7 +576,7 @@ def test_fps_table_incremental_loop(spark, tmp_path):
         dict(doc_id=11, text="fresh new content here", source="web"),
         dict(doc_id=12, text="fresh  NEW content here", source="web"),  # in-shard dup
     ])
-    kw = dict(fps_table=table, fps_buckets=8)
+    kw = dict(fps_table=table)
     try:
         r1 = run_pipeline(
             spark, _ns(input=str(s1), output=str(tmp_path / "o1"), **kw),
@@ -619,7 +620,7 @@ def test_fps_table_appendix_is_post_commit(spark, tmp_path):
     # write fails after the dedup stage built (and checkpointed) survivors
     blocker = tmp_path / "blocker"
     blocker.write_text("not a directory")
-    kw = dict(fps_table=table, fps_buckets=8)
+    kw = dict(fps_table=table)
     try:
         with pytest.raises(Exception):
             run_pipeline(
@@ -636,6 +637,31 @@ def test_fps_table_appendix_is_post_commit(spark, tmp_path):
         )
         assert r["counters"]["output"] == 2
         assert spark.table(table).count() == 2
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_fps_table_append_keeps_the_table_bucket_count(spark, tmp_path):
+    """Shard 1 asks for 8 buckets, shard 2 does not: shard 2's appendix must
+    still land (it appends with the bucket count the table already has), so
+    a rerun of shard 2 drains. Before, the default 256 clashed with the
+    table's 8 after shard 2's output was written, and its fingerprints were
+    never recorded."""
+    table = "fps_nb_" + tmp_path.name.replace("-", "_")
+    s1, s2 = tmp_path / "s1", tmp_path / "s2"
+    s1.mkdir(), s2.mkdir()
+    _write_docs(s1 / "p.parquet", [dict(doc_id=0, text="alpha beta", source="web")])
+    _write_docs(s2 / "p.parquet", [dict(doc_id=1, text="gamma delta", source="web")])
+    try:
+        run_pipeline(spark, _ns(input=str(s1), output=str(tmp_path / "o1"),
+                                fps_table=table, fps_buckets=8), ["dedup"])
+        r2 = run_pipeline(spark, _ns(input=str(s2), output=str(tmp_path / "o2"),
+                                     fps_table=table), ["dedup"])
+        assert r2["counters"]["output"] == 1
+        assert spark.table(table).count() == 2
+        r3 = run_pipeline(spark, _ns(input=str(s2), output=str(tmp_path / "o3"),
+                                     fps_table=table), ["dedup"])
+        assert r3["counters"]["output"] == 0
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -880,23 +906,18 @@ def test_spandedup_stage(spark, tmp_path):
 
 
 def test_spandedup_incremental_loop(spark, tmp_path):
-    """spandedup CDC mode: shard 2 run against shard 1's gram table loses
-    the span shard 1 owns; each appendix goes to a side path and unions in;
-    re-running a shard against its own unioned grams drains its text."""
-    from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
-        span_gram_table,
-    )
-
+    """spandedup CDC mode over --state: shard 1 runs on the empty store,
+    shard 2 loses the span shard 1 owns, and re-running shard 2 to a new
+    output reproduces its text (the appendix claims only rewritten text)."""
     span = "alpha bravo charlie delta echo foxtrot golf hotel"  # 8 tokens
+    state = str(tmp_path / "state")
     s1 = tmp_path / "in_s1"
     s1.mkdir()
     _write_docs(s1 / "p.parquet", [
         dict(doc_id=0, text=f"{span} owner document tail", source="web"),
     ])
-    # bootstrap: gram table over shard 1 (the documented recipe)
-    span_gram_table(
-        spark.read.parquet(str(s1)), k=8
-    ).write.parquet(str(tmp_path / "grams0"))
+    run_pipeline(spark, _ns(input=str(s1), output=str(tmp_path / "out_s1"),
+                            span_k=8, state=state), ["spandedup"])
 
     s2 = tmp_path / "in_s2"
     s2.mkdir()
@@ -907,8 +928,7 @@ def test_spandedup_incremental_loop(spark, tmp_path):
     res = run_pipeline(
         spark,
         _ns(input=str(s2), output=str(tmp_path / "out_s2"), span_k=8,
-            seen_grams=str(tmp_path / "grams0"),
-            new_grams=str(tmp_path / "grams_ap")),
+            state=state),
         ["spandedup"],
     )
     out = {r["doc_id"]: r["text"] for r in
@@ -916,15 +936,11 @@ def test_spandedup_incremental_loop(spark, tmp_path):
     assert out[10] == "later shard repeats"  # corpus-seen span excised
     assert out[11] == "a fully original second document"
     assert res["counters"]["after_spandedup"] == 2
-    # union the appendix, re-run shard 2: every gram now seen -> drained
-    merged = tmp_path / "grams1"
-    (spark.read.parquet(str(tmp_path / "grams0"))
-     .unionByName(spark.read.parquet(str(tmp_path / "grams_ap")))
-     .write.parquet(str(merged)))
+    # re-run shard 2 to a new output: every gram is now seen
     run_pipeline(
         spark,
         _ns(input=str(s2), output=str(tmp_path / "out_s2b"), span_k=8,
-            seen_grams=str(merged), new_grams=str(tmp_path / "grams_ap2")),
+            state=state),
         ["spandedup"],
     )
     out2 = {r["doc_id"]: r["text"] for r in
@@ -934,14 +950,15 @@ def test_spandedup_incremental_loop(spark, tmp_path):
     # (idempotent); doc 11 (< k tokens) never has grams
     assert out2[10] == "later shard repeats"
     assert out2[11] == "a fully original second document"
-    assert spark.read.parquet(str(tmp_path / "grams_ap2")).count() == 0
+    with open(tmp_path / "state" / "spandedup" / "_commits" / "2.json") as f:
+        assert json.load(f)["rows"] == 0
 
 
 def test_incremental_spandedup_refuses_later_doc_droppers(spark, tmp_path):
-    """--seen-grams + any doc-dropping stage that the fixed order runs
-    AFTER spandedup must error: the appendix would mark grams of documents
-    that never ship, and a later shard's sole copy of a shared span would
-    be silently excised (round-7 advice item)."""
+    """--state + spandedup + any doc-dropping stage that the fixed order
+    runs AFTER spandedup must error: the appendix would mark grams of
+    documents that never ship, and a later shard's sole copy of a shared
+    span would be silently excised (round-7 advice item)."""
     import pytest
 
     src = tmp_path / "in"
@@ -954,10 +971,10 @@ def test_incremental_spandedup_refuses_later_doc_droppers(spark, tmp_path):
         run_pipeline(
             spark,
             _ns(input=str(src), output=str(tmp_path / "out"), span_k=8,
-                seen_grams=str(tmp_path / "g0"),
-                new_grams=str(tmp_path / "ga")),
+                state=str(tmp_path / "state")),
             ["spandedup", "gate"],
         )
+    assert not (tmp_path / "state").exists()
 
 
 def test_report_contamination_block(spark, tmp_path):
@@ -1274,22 +1291,6 @@ def test_url_keep_and_fps_key_guards():
         assert r.returncode == 2 and frag in r.stderr, (argv, r.stderr[-200:])
 
 
-def test_new_buckets_without_seen_guarded():
-    """--new-buckets without --seen-buckets was silently ignored (plain
-    batch neardup writes no appendix) -- must error with the bootstrap
-    recipe instead."""
-    import subprocess
-    import sys
-
-    r = subprocess.run(
-        [sys.executable, "jobs/corpus_job.py", "--input", "/tmp/x",
-         "--output", "/tmp/y", "--stages", "neardup",
-         "--new-buckets", "/tmp/nb"],
-        capture_output=True, text=True, timeout=60,
-    )
-    assert r.returncode == 2 and "requires --seen-buckets" in r.stderr
-
-
 def test_lsh_threshold_knob(spark, tmp_path):
     """--lsh-threshold: the neardup stage under a derived banding. A very
     loose target (0.2 -> more, shorter bands) must still collapse the
@@ -1321,8 +1322,7 @@ def test_lsh_threshold_knob(spark, tmp_path):
         (["--stages", "gate", "--lsh-threshold", "0.5"], "neardup stage"),
         (["--stages", "neardup", "--lsh-threshold", "1.5"], "(0, 1)"),
         (["--stages", "neardup", "--lsh-threshold", "0.5",
-          "--seen-buckets", "/tmp/sb", "--new-buckets", "/tmp/nb"],
-         "batch form"),
+          "--state", "/tmp/state"], "batch form"),
     ]
     for argv, frag in checks:
         r = subprocess.run(

@@ -32,6 +32,9 @@ def fx(spark, tmp_path_factory):
     from action_pdf_accessibility_paddle_docker_spark.operators import (
         quality_clf as QC,
     )
+    from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
+        StateStore,
+    )
 
     root = tmp_path_factory.mktemp("stage_table")
     rows = [
@@ -53,9 +56,13 @@ def fx(spark, tmp_path_factory):
         spark.createDataFrame([("unique", 2.0)], "term string, weight double"),
         -0.5, str(root / "clf"),
     )
-    D.minhash_band_buckets(
+    # committed neardup state for the streaming probe
+    StateStore(
+        spark, str(root / "state" / "neardup"), CJ.STAGE_TABLE["neardup"].state,
+        ("fixture", "fixture"),
+    ).commit(D.minhash_band_buckets(
         spark.createDataFrame([(1, rows[2]["text"])], "doc_id long, text string")
-    ).write.partitionBy("band").parquet(str(root / "seen_nb"))
+    ), partition_by=("band",))
     return root
 
 
@@ -63,8 +70,7 @@ def _ns(fx, out, **kw):
     base = dict(
         input=str(fx / "in"), output=str(out), id_col="doc_id",
         text_col="text", url_col="url", min_kept_lines=2, line_min_chars=30,
-        linededup_unit="line", span_k=8, seen_grams=None, new_grams=None,
-        seen_fps=None, new_fps=None, rate=["s1=0.5"], default_rate=1.0,
+        linededup_unit="line", span_k=8, rate=["s1=0.5"], default_rate=1.0,
         stratum_col="source", cap_per_source=2, hash_family="md5mix",
         blocked_domains=str(fx / "blocked.txt"), clf_weights=str(fx / "clf"),
         clf_threshold=0.5, benchmark=str(fx / "bench.parquet"),
@@ -80,7 +86,7 @@ def _ns(fx, out, **kw):
 def test_stage_mode_runs_or_is_refused(spark, fx, tmp_path, stage, mode):
     kw = {}
     if stage == "neardup" and mode == "streaming":
-        kw["seen_buckets"] = str(fx / "seen_nb")  # the stateless corpus probe
+        kw["state"] = str(fx / "state")  # the read-only corpus probe
     ns = _ns(fx, tmp_path / "out", **kw)
     if mode in CJ.STAGE_TABLE[stage].refuse:
         with pytest.raises(SystemExit, match=rf"not \w+: {stage} \("):

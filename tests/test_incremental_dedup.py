@@ -378,7 +378,7 @@ def test_fps_key_stamp_validates(spark, tmp_path):
     import pytest
 
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
-        check_fps_key,
+        check_stamps,
         write_fingerprint_table,
     )
 
@@ -388,9 +388,9 @@ def test_fps_key_stamp_validates(spark, tmp_path):
         write_fingerprint_table(fps, table, n_buckets=4, mode="overwrite",
                                 key="url")
         seen = spark.table(table)
-        check_fps_key(seen, "url")  # matching key passes
+        check_stamps(seen, {"fp_key": "url"})  # matching key passes
         with pytest.raises(ValueError, match="fp_key"):
-            check_fps_key(seen, "content")
+            check_stamps(seen, {"fp_key": "content"})
         # an INVALID key against a stamped table fails as "invalid key",
         # not as a confusing stamp mismatch (key validated first)
         shard = spark.createDataFrame(
@@ -401,16 +401,16 @@ def test_fps_key_stamp_validates(spark, tmp_path):
         # legacy fingerprint-only schema = UNKNOWN provenance (pre-stamp
         # state exists under BOTH keys -- the url key predates the stamp),
         # so it passes either key; validation begins at the first stamped
-        # append (the check_bucket_family posture)
+        # append (the hash_family/banding posture)
         legacy = spark.createDataFrame([("cd",)], "fingerprint string")
-        check_fps_key(legacy, "content")
-        check_fps_key(legacy, "url")
+        check_stamps(legacy, {"fp_key": "content"})
+        check_stamps(legacy, {"fp_key": "url"})
         # a NULL stamp (mixed legacy+stamped dir under mergeSchema) also
         # passes -- never a false error on a valid accumulated state dir
         mixed = spark.createDataFrame(
             [("ef", None)], "fingerprint string, fp_key string"
         )
-        check_fps_key(mixed, "url")
+        check_stamps(mixed, {"fp_key": "url"})
         # round 7: a legacy-NULL row that SORTS/SAMPLES first must not mask
         # a mismatched stamped append -- validation is against the distinct
         # non-NULL stamp set, not one sampled row
@@ -419,9 +419,9 @@ def test_fps_key_stamp_validates(spark, tmp_path):
             "fingerprint string, fp_key string",
         ).coalesce(1)  # one partition => head() would see the NULL row first
         assert masked.select("fp_key").head()[0] is None  # the masking shape
-        check_fps_key(masked, "url")
+        check_stamps(masked, {"fp_key": "url"})
         with pytest.raises(ValueError, match="fp_key"):
-            check_fps_key(masked, "content")
+            check_stamps(masked, {"fp_key": "content"})
         # two different non-NULL stamps = polluted table: fails either way.
         # Validation is a FOREIGN-stamp probe (fp_key != key, so parquet
         # row-group stats prune every healthy file): under either appended
@@ -432,9 +432,9 @@ def test_fps_key_stamp_validates(spark, tmp_path):
         )
         for k in ("url", "content"):
             with pytest.raises(ValueError, match="fp_key"):
-                check_fps_key(polluted, k)
+                check_stamps(polluted, {"fp_key": k})
         with pytest.raises(ValueError, match="MULTIPLE"):
-            check_fps_key(polluted, "sha1")
+            check_stamps(polluted, {"fp_key": "sha1"})
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 

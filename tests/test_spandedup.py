@@ -193,7 +193,7 @@ def test_incremental_span_dedup_k_stamp_guard(spark):
     import pytest
 
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
-        check_span_k,
+        check_stamps,
         incremental_span_dedup,
         span_gram_table,
     )
@@ -203,11 +203,15 @@ def test_incremental_span_dedup_k_stamp_guard(spark):
         "doc_id bigint, text string",
     )
     seen = span_gram_table(corpus, k=K)
-    check_span_k(seen, K)  # matching k passes
+    check_stamps(seen, {"span_k": K})  # matching k passes
     with pytest.raises(ValueError, match="span_k"):
         incremental_span_dedup(corpus, seen, k=K + 1)
     with pytest.raises(ValueError, match="stamp"):
-        check_span_k(seen.drop("span_k"), K)
+        check_stamps(seen.drop("span_k"), {"span_k": K})
+    # a NULL stamp on some rows is unstamped too (span_k is required)
+    with pytest.raises(ValueError, match="stamp"):
+        check_stamps(seen.unionByName(
+            seen.withColumn("span_k", seen["span_k"] * None)), {"span_k": K})
 
 
 def test_contamination_scores_union_across_benchmarks(spark):

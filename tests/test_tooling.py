@@ -7,6 +7,7 @@ import glob
 import importlib
 import os
 import py_compile
+import re
 import subprocess
 import sys
 
@@ -81,3 +82,49 @@ def test_scale_probe_help_lists_targets_without_a_session():
     assert "pyspark" not in r.stderr  # the import log: no session was built
     assert "{dupline,queries,semdedup,spandedup}" in r.stdout
     assert "--replicate" in r.stdout
+
+
+# The jobs' option sets besides --help, pinned: a new knob must edit this
+# list visibly (corpus_job: 52).
+JOB_OPTIONS = {
+    "corpus_job.py": [
+        "--input", "--output", "--stages", "--id-col", "--text-col",
+        "--url-col", "--url-keep", "--blocked-domains", "--min-kept-lines",
+        "--line-min-chars", "--linededup-unit", "--span-k", "--state",
+        "--cap-by-domain", "--shuffle-output", "--clf-weights",
+        "--clf-threshold", "--clf-top-frac", "--fps-table", "--fps-method",
+        "--fps-key", "--rate", "--mix-temperature", "--mix-keep-frac",
+        "--default-rate", "--stratum-col", "--cap-per-source",
+        "--partition-output-by", "--output-files", "--embeddings",
+        "--embedding-col", "--embedding-id-col", "--semdedup-threshold",
+        "--semdedup-clusters", "--semdedup-cap", "--benchmark",
+        "--benchmark-id-col", "--benchmark-text-col", "--decontam-overlap",
+        "--bucket-persist", "--hash-family", "--lsh-threshold", "--report",
+        "--report-domains", "--report-exact-dup", "--resumable", "--buckets",
+        "--bucket-batch", "--streaming", "--checkpoint", "--ts-col",
+        "--dedup-horizon",
+    ],
+    "extract_job.py": [
+        "--input", "--output", "--resumable", "--buckets", "--bucket-batch",
+        "--streaming", "--checkpoint", "--salt", "--no-order", "--template",
+        "--format", "--iceberg-table", "--threshold", "--detector", "--model",
+        "--model-dir", "--infer-batch-size", "--plan-chunk-pages",
+        "--tag-tree", "--debug-images", "--dump-config", "--mathml-images",
+    ],
+}
+
+
+@pytest.mark.parametrize("job", sorted(JOB_OPTIONS))
+def test_job_option_set_is_pinned(job):
+    """``--help`` lists exactly the pinned options and starts no Spark
+    session (corpus_job imports pyspark for its operators, so only the
+    session is ruled out)."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", job), "--help"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-500:]
+    assert "log4j" not in r.stderr and "SparkContext" not in r.stderr
+    listed = re.findall(r"^  (?:-h, )?(--[\w-]+)", r.stdout, re.M)
+    assert listed[0] == "--help"
+    assert sorted(listed[1:]) == sorted(JOB_OPTIONS[job])
