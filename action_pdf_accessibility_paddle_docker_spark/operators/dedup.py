@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame, functions as F
 
 NUM_MINHASHES = 16
 LSH_BANDS = 4  # 4 rows per band
+#: the one MinHash family (``minhash_signatures``), stamped on every bucket row
+MINHASH_FAMILY = "md5mix"
+#: the stamps a persisted bucket table is probed under: the incremental and
+#: streaming probes signature with the module banding only
+BUCKET_STAMPS = {"hash_family": MINHASH_FAMILY,
+                 "banding": f"{NUM_MINHASHES}x{LSH_BANDS}"}
 SIMHASH_BITS = 16
 
 
@@ -794,7 +800,6 @@ def incremental_span_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     checkpoint_input: bool = True,
-    broadcast_shard: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """CDC form of ExactSubstr span removal -- the arriving shard against
     the persisted corpus gram table, no corpus rescan ever (completes the
@@ -830,10 +835,8 @@ def incremental_span_dedup(
     referenced twice: occurrence marking + the appendix anti-join), and
     broadcast back. Unlike the fps probe (one fingerprint per DOC), the
     gram set is TOKEN-count-sized (~one md5 per shard token): size shards
-    so it fits the broadcast budget (~10M grams per GB), or pass
-    ``broadcast_shard=False`` to fall back to shuffle joins."""
+    so it fits the broadcast budget (~10M grams per GB)."""
     check_stamps(seen_grams, {SPAN_K_STAMP_COL: int(k)})
-    maybe_bc = F.broadcast if broadcast_shard else (lambda d: d)
     if checkpoint_input:
         shard = shard.localCheckpoint(eager=False)
     base = _span_base(shard, id_col, text_col, k).localCheckpoint(eager=False)
@@ -841,11 +844,11 @@ def incremental_span_dedup(
     shard_gh = occ.select("gh").distinct().localCheckpoint(eager=False)
     hits = (
         seen_grams.select("gh")
-        .join(maybe_bc(shard_gh), "gh", "left_semi")
+        .join(F.broadcast(shard_gh), "gh", "left_semi")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    corpus_dups = occ.join(maybe_bc(hits), "gh", "left_semi").select(
+    corpus_dups = occ.join(F.broadcast(hits), "gh", "left_semi").select(
         "doc_id", "pos"
     )
     dups = _non_winner_positions(occ).unionByName(corpus_dups).distinct()
@@ -860,7 +863,7 @@ def incremental_span_dedup(
         .distinct()
     )
     new_grams = (
-        rew_gh.join(maybe_bc(hits), "gh", "left_anti")
+        rew_gh.join(F.broadcast(hits), "gh", "left_anti")
         .withColumn(SPAN_K_STAMP_COL, F.lit(int(k)))
     )
     return rewritten, new_grams
@@ -972,10 +975,10 @@ def minhash_mix_constants(num_hashes: int = NUM_MINHASHES) -> list[tuple[int, in
 
 def minhash_signatures(
     df: DataFrame, num_hashes: int = NUM_MINHASHES, id_col: str = "doc_id",
-    text_col: str = "text", hash_family: str = "md5mix",
+    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, sig array<bigint>): sig[i] = min over shingles of
-    h_i(shingle), where the hash family h_i is selectable (below).
+    h_i(shingle), the md5mix family (``MINHASH_FAMILY``).
 
     Deliberately explode+groupBy, NOT a row-wise nested-transform fold:
     higher-order functions evaluate interpreted (outside whole-stage
@@ -984,68 +987,42 @@ def minhash_signatures(
     opposite trade from the cheap-per-element folds (simhash, repetition
     signals), where losing the shuffle wins.
 
-    hash_family -- all three produce equally valid (but different)
-    minima-of-uniform-hashes signatures:
-
-    * 'md5mix' (default): ONE md5 per shingle; h_i mixes its two 32-bit
-      halves with a degree-1 universal hash, h_i = (a_i*x1 % p + b_i*x2 % p
-      + c_i) % p over the Mersenne prime p = 2^61-1 (Kirsch-Mitzenmacher-
-      style double hashing). Cuts the string-hash count 16x vs 'md5' while
-      staying exactly DuckDB-replayable (plain 64-bit integer arithmetic,
-      every intermediate < 2^63 on both engines). Measured signature-stage
-      wall: ~1.1x over 'md5' at sf0.1 (explode/shuffle-bound) but 2.0x at
-      the sf1 probe (2.81 -> 1.39 s; xxhash64 0.96 s) -- the hash count is
-      the dominant cost exactly where scale makes it matter, which is why
-      this replayable family is the default. The caveat at corpus
-      scale: two shingles colliding in the full 64-bit (x1,x2) collide in
-      EVERY h_i (birthday at ~2^32 distinct shingles) -- same 64-bit
-      bucketing-hash posture as 'xxhash64', reasoned in SCALE.md; it
-      perturbs similarity estimates, never identity (fingerprints stay
-      128-bit).
-    * 'md5': the round-2..4 family, one fresh md5 per (i, shingle) --
-      per-hash independence, 16x the string-hash cost; kept for
-      reproducing historical signatures.
-    * 'xxhash64': seeded JVM intrinsic, no hex round-trip (measured 1.27x
-      over 'md5' on the signature stage at sf0.1) -- fastest, but not
-      DuckDB-replayable; production option when replay doesn't matter."""
-    sh = shingle_table(df, id_col, text_col)
-    if hash_family == "md5mix":
-        hexsig = F.md5(F.col("shingle"))
-        # project x1/x2 BEFORE the aggregate: one md5 + two convs per
-        # shingle row, guaranteed (not left to subexpression elimination
-        # across 16 aggregate expressions)
-        sh = sh.select(
-            "doc_id",
-            _hash_hex_to_long(hexsig).alias("x1"),
-            F.conv(F.substring(hexsig, 9, 8), 16, 10).cast("bigint").alias("x2"),
-        )
-    elif hash_family not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    mins, arr = _minhash_agg_exprs(num_hashes, hash_family)
+    md5mix: ONE md5 per shingle; h_i mixes its two 32-bit halves with a
+    degree-1 universal hash, h_i = (a_i*x1 % p + b_i*x2 % p + c_i) % p over
+    the Mersenne prime p = 2^61-1 (Kirsch-Mitzenmacher-style double
+    hashing). It stays exactly DuckDB-replayable (plain 64-bit integer
+    arithmetic, every intermediate < 2^63 on both engines). The caveat at
+    corpus scale: two shingles colliding in the full 64-bit (x1,x2) collide
+    in EVERY h_i (birthday at ~2^32 distinct shingles), reasoned in
+    SCALE.md; it perturbs similarity estimates, never identity
+    (fingerprints stay 128-bit)."""
+    hexsig = F.md5(F.col("shingle"))
+    # project x1/x2 BEFORE the aggregate: one md5 + two convs per shingle
+    # row, guaranteed (not left to subexpression elimination across 16
+    # aggregate expressions)
+    sh = shingle_table(df, id_col, text_col).select(
+        "doc_id",
+        _hash_hex_to_long(hexsig).alias("x1"),
+        F.conv(F.substring(hexsig, 9, 8), 16, 10).cast("bigint").alias("x2"),
+    )
+    mins, arr = _minhash_agg_exprs(num_hashes)
     sig = sh.groupBy("doc_id").agg(*mins)
     return sig.select("doc_id", arr.alias("sig"))
 
 
 @lru_cache(maxsize=None)
-def _minhash_agg_exprs(num_hashes: int, hash_family: str):
-    """The per-family min-aggregate Columns and the signature-array Column
+def _minhash_agg_exprs(num_hashes: int):
+    """The md5mix min-aggregate Columns and the signature-array Column
     (name-based, input-independent) -- compiled once per process instead of
     per call (round 8: plan CONSTRUCTION is serial driver time; 16 mix
     expressions x several py4j round-trips each, every bench round)."""
     p = MINHASH_MIX_PRIME
-    if hash_family == "md5mix":
-        mix = minhash_mix_constants(num_hashes)
-        h = lambda i: (  # noqa: E731
-            (F.lit(mix[i][0]) * F.col("x1")) % p
-            + (F.lit(mix[i][1]) * F.col("x2")) % p
-            + F.lit(mix[i][2])
-        ) % p
-    elif hash_family == "md5":
-        h = lambda i: _hash_hex_to_long(  # noqa: E731
-            F.md5(F.concat_ws(":", F.lit(i), F.col("shingle")))
-        )
-    else:  # xxhash64 (validated by the caller)
-        h = lambda i: F.xxhash64(F.lit(i), F.col("shingle"))  # noqa: E731
+    mix = minhash_mix_constants(num_hashes)
+    h = lambda i: (  # noqa: E731
+        (F.lit(mix[i][0]) * F.col("x1")) % p
+        + (F.lit(mix[i][1]) * F.col("x2")) % p
+        + F.lit(mix[i][2])
+    ) % p
     mins = tuple(F.min(h(i)).alias(f"h{i}") for i in range(num_hashes))
     arr = F.array(*[F.col(f"h{i}") for i in range(num_hashes)])
     return mins, arr
@@ -1120,7 +1097,6 @@ def minhash_band_buckets(
     bands: Optional[int] = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "md5mix",
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """(doc_id, band, bucket, hash_family, banding) LSH membership rows:
@@ -1144,17 +1120,16 @@ def minhash_band_buckets(
         bands = lsh_tuning(num_hashes, threshold)["bands"]
     elif bands is None:
         bands = LSH_BANDS
-    sig = minhash_signatures(df, num_hashes, id_col, text_col, hash_family)
+    sig = minhash_signatures(df, num_hashes, id_col, text_col)
     return sig.select(
         "doc_id", F.explode(_band_struct_array(num_hashes, bands)).alias("bb")
     ).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"),
-        # provenance stamps: bucket values are md5 hex in EVERY family and
-        # band slices under one banding never match another's, so either
-        # mismatch between a persisted table and a later shard run would
-        # silently match nothing; the stamps let the incremental path
-        # fail loudly instead (check_stamps)
-        F.lit(hash_family).alias("hash_family"),
+        # provenance stamps: a table built under another family or
+        # banding would silently match nothing in a later shard run; the
+        # stamps let the incremental path fail loudly instead
+        # (check_stamps)
+        F.lit(MINHASH_FAMILY).alias("hash_family"),
         F.lit(f"{num_hashes}x{bands}").alias("banding"),
     )
 
@@ -1208,7 +1183,6 @@ def minhash_lsh_candidates(
     bands: Optional[int] = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_family: str = "md5mix",
     threshold: Optional[float] = None,
     order_output: bool = False,
 ) -> DataFrame:
@@ -1218,8 +1192,7 @@ def minhash_lsh_candidates(
     ``order_output=True`` pre-partitions for a caller-side
     ``orderBy(id_a, id_b)`` (see ``_candidate_pairs_from_buckets``)."""
     buckets = minhash_band_buckets(
-        df, num_hashes, bands, id_col, text_col, hash_family,
-        threshold=threshold,
+        df, num_hashes, bands, id_col, text_col, threshold=threshold,
     )
     # Bucket-local pair expansion instead of a self-join: a self-join would
     # recompute the whole signature pipeline on both sides (Spark does not
@@ -1360,7 +1333,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_iter: int = 20,
-    hash_family: str = "md5mix",
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """Near-duplicate CLUSTER assignment: connected components over the
@@ -1378,39 +1350,10 @@ def dedup_clusters(
     # signature/banding pipeline would re-execute every round (the
     # semantic_dedup pair-checkpoint pattern)
     pairs = minhash_lsh_candidates(
-        df, id_col=id_col, text_col=text_col, hash_family=hash_family,
-        threshold=threshold,
+        df, id_col=id_col, text_col=text_col, threshold=threshold,
     ).localCheckpoint(eager=False)
     nodes = df.select(F.col(id_col).alias("doc_id"))
     return connected_component_labels(nodes, pairs, max_iter=max_iter)
-
-
-def adopt_banding(
-    seen_buckets: DataFrame,
-    num_hashes: Optional[int],
-    bands: Optional[int],
-) -> tuple[int, int]:
-    """Resolve the (num_hashes, bands) a probe must signature with.
-
-    Explicit arguments win (both must then match the table's stamp, which
-    ``check_stamps`` enforces). When the caller leaves them None
-    and the table carries a ``banding`` stamp, ADOPT it -- a table built
-    under a tuned banding (``threshold=``) stays probe-able without the
-    caller re-deriving the numbers (the stamp IS the source of truth;
-    uniformity is validated by the foreign-stamp check that follows).
-    Tables without the stamp (pre-round-7) resolve to the module
-    defaults, which is what wrote them."""
-    if num_hashes is not None or bands is not None:
-        return (num_hashes or NUM_MINHASHES), (bands or LSH_BANDS)
-    if "banding" in seen_buckets.columns:
-        row = (
-            seen_buckets.select("banding")
-            .where(F.col("banding").isNotNull()).head(1)
-        )
-        if row:
-            nh, b = row[0]["banding"].split("x")
-            return int(nh), int(b)
-    return NUM_MINHASHES, LSH_BANDS
 
 
 def incremental_near_dedup(
@@ -1418,11 +1361,7 @@ def incremental_near_dedup(
     seen_buckets: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: Optional[int] = None,
-    bands: Optional[int] = None,
-    hash_family: str = "md5mix",
     max_iter: int = 20,
-    persist_buckets: str = "cluster",
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental NEAR-dup dedup for an arriving shard against the
     corpus's persisted MinHash band-bucket table -- the CDC shape of
@@ -1440,33 +1379,32 @@ def incremental_near_dedup(
                     seen table (a hit on ANY member removes the whole
                     cluster -- the member is near corpus content, and the
                     canonical is near the member);
-      new_buckets = (doc_id, band, bucket, hash_family) rows to append to
-                    the bucket table for the next shard (schema-identical
-                    to ``minhash_band_buckets`` output, so the running
-                    table stays one union). Which docs contribute rows is
-                    ``persist_buckets``:
+      new_buckets = (doc_id, band, bucket, hash_family, banding) rows to
+                    append to the bucket table for the next shard
+                    (schema-identical to ``minhash_band_buckets`` output,
+                    so the running table stays one union): every member
+                    of a SURVIVING cluster, dropped within-shard dups
+                    included.
 
-    * ``'cluster'`` (default): every member of a SURVIVING cluster,
-      dropped within-shard dups included. A dropped member's buckets can
-      differ from its canonical's, and batch connected components would
-      route a future doc near that member into the canonical's component
-      -- so its buckets must stay probe-able or that future near-dup is
-      admitted (a transitive recall loss vs the batch form). Appendix
-      cardinality is bounded by the shard (each doc persists at most
-      once: a re-ingested member hits its own bucket row and its cluster
-      stops surviving, so drain-to-zero still converges).
-    * ``'canonical'``: survivors only -- the smallest table, with the
-      documented recall loss above; use when appendix size dominates.
+    A dropped member's buckets can differ from its canonical's, and batch
+    connected components would route a future doc near that member into
+    the canonical's component -- so its buckets must stay probe-able or
+    that future near-dup is admitted (a transitive recall loss vs the
+    batch form). Appendix cardinality is bounded by the shard (each doc
+    persists at most once: a re-ingested member hits its own bucket row
+    and its cluster stops surviving, so drain-to-zero still converges).
 
-    Members of corpus-HIT clusters are persisted under NEITHER mode:
-    their buckets partially overlap existing coverage, but persisting
-    them would re-append on every re-ingest of the same data (the rows
-    never enter the corpus, so nothing stops the growth) -- the residual
-    gap vs batch CC is a future doc near such a member's NON-overlapping
-    region, which stays admitted.
+    Members of corpus-HIT clusters are not persisted: their buckets
+    partially overlap existing coverage, but persisting them would
+    re-append on every re-ingest of the same data (the rows never enter
+    the corpus, so nothing stops the growth) -- the residual gap vs batch
+    CC is a future doc near such a member's NON-overlapping region, which
+    stays admitted.
 
-    The seen table's ``hash_family``/``banding`` stamps must match this
-    run's (``check_stamps``).
+    The shard is signatured under the module banding (``NUM_MINHASHES`` x
+    ``LSH_BANDS``), so the seen table's ``hash_family``/``banding`` stamps
+    must equal ``BUCKET_STAMPS`` (``check_stamps``); a table without
+    stamps (pre-round-7) is probed as written under them.
 
     Scale shape: the within-shard pass is shard-sized (the reason this
     operator exists); the cross-corpus check is a bucket equi-join
@@ -1475,19 +1413,9 @@ def incremental_near_dedup(
     partition, never a window. The shard's bucket table is computed once
     (lazy localCheckpoint) and reused for the candidate pairing, the
     cross-corpus probe, and the returned appendix."""
-    if persist_buckets not in ("cluster", "canonical"):
-        raise ValueError(
-            f"persist_buckets must be 'cluster' or 'canonical', "
-            f"got {persist_buckets!r}"
-        )
-    # adopt the table's stamped banding when the caller doesn't pin one
-    # (a tuned table stays probe-able without re-deriving its numbers);
-    # then validate -- explicit args that mismatch the stamp still error
-    num_hashes, bands = adopt_banding(seen_buckets, num_hashes, bands)
-    check_stamps(seen_buckets, {"hash_family": hash_family,
-                                "banding": f"{num_hashes}x{bands}"})
+    check_stamps(seen_buckets, BUCKET_STAMPS)
     buckets = minhash_band_buckets(
-        new_df, num_hashes, bands, id_col, text_col, hash_family
+        new_df, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=False)
     pairs = _candidate_pairs_from_buckets(buckets)
     nodes = new_df.select(F.col(id_col).alias("doc_id"))
@@ -1519,24 +1447,18 @@ def incremental_near_dedup(
     )
     # keep the internal 'doc_id' name: the appended table must stay
     # schema-identical to minhash_band_buckets output under any --id-col
-    persist_ids = (
-        surviving_members.select("doc_id") if persist_buckets == "cluster"
-        else surviving_ids
+    new_buckets = buckets.join(
+        surviving_members.select("doc_id"), "doc_id", "left_semi"
     )
-    new_buckets = buckets.join(persist_ids, "doc_id", "left_semi")
     return survivors, new_buckets
 
 
-def minhash_buckets_col(
-    text_col,
-    num_hashes: int = NUM_MINHASHES,
-    bands: int = LSH_BANDS,
-    hash_family: str = "md5mix",
-):
+def minhash_buckets_col(text_col):
     """Row-wise MinHash LSH band buckets as ONE array column
-    (``array<struct<band int, bucket string>>``) -- value-identical to the
-    exploded ``minhash_band_buckets`` table (pinned by test), computed
-    without any aggregate.
+    (``array<struct<band int, bucket string>>``) under the module banding
+    (``NUM_MINHASHES`` x ``LSH_BANDS``) -- value-identical to the exploded
+    ``minhash_band_buckets`` table (pinned by test), computed without any
+    aggregate.
 
     Like ``simhash_col``, this EXISTS FOR STREAMING: a stream cannot put a
     stateful explode+groupBy signature under a downstream join, but a
@@ -1552,40 +1474,29 @@ def minhash_buckets_col(
     bucket rows (a non-NULL placeholder would collapse every empty doc
     into one shared bucket)."""
     sh = F.filter(word_bigrams(text_col), lambda s: F.length(s) > 0)
-    if hash_family == "md5mix":
-        p = MINHASH_MIX_PRIME
-        mix = minhash_mix_constants(num_hashes)
-        # ONE md5 per shingle, hoisted: the per-hash transforms fold over
-        # the precomputed (x1, x2) pairs
-        xs = F.transform(
-            F.transform(sh, F.md5),
-            lambda h: F.struct(
-                _hash_hex_to_long(h).alias("x1"),
-                F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("x2"),
-            ),
-        )
-        h_i = lambda i: F.array_min(F.transform(  # noqa: E731
-            xs,
-            lambda x: (
-                (F.lit(mix[i][0]) * x["x1"]) % p
-                + (F.lit(mix[i][1]) * x["x2"]) % p
-                + F.lit(mix[i][2])
-            ) % p,
-        ))
-    elif hash_family == "md5":
-        h_i = lambda i: F.array_min(F.transform(  # noqa: E731
-            sh, lambda s: _hash_hex_to_long(F.md5(F.concat_ws(":", F.lit(i), s)))
-        ))
-    elif hash_family == "xxhash64":
-        h_i = lambda i: F.array_min(F.transform(  # noqa: E731
-            sh, lambda s: F.xxhash64(F.lit(i), s)
-        ))
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    sig = [h_i(i) for i in range(num_hashes)]
-    rows_per_band = num_hashes // bands
+    p = MINHASH_MIX_PRIME
+    mix = minhash_mix_constants(NUM_MINHASHES)
+    # ONE md5 per shingle, hoisted: the per-hash transforms fold over the
+    # precomputed (x1, x2) pairs
+    xs = F.transform(
+        F.transform(sh, F.md5),
+        lambda h: F.struct(
+            _hash_hex_to_long(h).alias("x1"),
+            F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("x2"),
+        ),
+    )
+    h_i = lambda i: F.array_min(F.transform(  # noqa: E731
+        xs,
+        lambda x: (
+            (F.lit(mix[i][0]) * x["x1"]) % p
+            + (F.lit(mix[i][1]) * x["x2"]) % p
+            + F.lit(mix[i][2])
+        ) % p,
+    ))
+    sig = [h_i(i) for i in range(NUM_MINHASHES)]
+    rows_per_band = NUM_MINHASHES // LSH_BANDS
     band_structs = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         bucket = F.md5(F.concat_ws(",", *[
             sig[b * rows_per_band + i].cast("string")
             for i in range(rows_per_band)

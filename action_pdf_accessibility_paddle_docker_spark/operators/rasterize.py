@@ -15,14 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def pdfium_available() -> bool:
-    try:
-        import pypdfium2  # noqa: F401
-    except Exception:
-        return False
-    return True
-
-
 def _to_rgb(arr: np.ndarray) -> np.ndarray:
     if arr.ndim == 3 and arr.shape[2] == 4:  # BGRA/RGBA -> drop alpha
         arr = arr[:, :, :3]
@@ -96,12 +88,3 @@ def open_pdf_pages(data: bytes, scale: float = 2.0):
         doc.close()
 
     return pages, close
-
-
-def rasterize_pdf_bytes(data: bytes, scale: float = 2.0) -> list[np.ndarray]:
-    """Page rasters only (no text layer); see open_pdf_pages."""
-    pages, close = open_pdf_pages(data, scale)
-    try:
-        return [p["image"] for p in pages]
-    finally:
-        close()

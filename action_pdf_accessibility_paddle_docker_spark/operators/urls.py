@@ -139,12 +139,6 @@ def _parts_from(s: Column) -> tuple[Column, Column, Column, Column]:
     return scheme, authority, path, query
 
 
-def _parts(url: Column) -> tuple[Column, Column, Column, Column]:
-    """(scheme, authority, path, query) of the fragment-stripped,
-    percent-normalized url. scheme is '' when unparseable (no ``://``)."""
-    return _parts_from(stripped_url(url))
-
-
 def _host_port(authority: Column) -> tuple[Column, Column]:
     """(lowercased host, port string or '') — userinfo dropped."""
     hp = F.regexp_replace(authority, r"^.*@", "")

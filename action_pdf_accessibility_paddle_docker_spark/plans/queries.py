@@ -419,7 +419,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sql(num_hashes: int) -> str:
-    """Replays the engine's default 'md5mix' family: ONE md5 per shingle,
+    """Replays the engine's md5mix family: ONE md5 per shingle,
     its two 32-bit halves mixed per hash index by a degree-1 universal
     hash over the Mersenne prime 2^61-1. The (a, b, c) coefficient triples
     are the same deterministic literals the Spark side embeds

@@ -247,7 +247,6 @@ def streaming_near_dedup_against_corpus(
     stream: DataFrame,
     seen_buckets: DataFrame,
     text_col: str = "text",
-    hash_family: str = "md5mix",
 ) -> DataFrame:
     """Drop arriving documents that share ANY MinHash LSH band bucket with
     the batch corpus's persisted bucket table -- the STREAMING half of the
@@ -274,25 +273,22 @@ def streaming_near_dedup_against_corpus(
     own micro-batches; ``corpus_job --streaming --state`` reads the
     committed neardup state read-only, and batch runs advance it.
 
-    The table's stamps must match, exactly as in the batch path
-    (``dedup.check_stamps``)."""
+    The table's stamps must equal ``dedup.BUCKET_STAMPS``, exactly as in
+    the batch path (``dedup.check_stamps``)."""
     from ..operators.dedup import (
-        adopt_banding, check_stamps, minhash_buckets_col,
+        BUCKET_STAMPS, LSH_BANDS, check_stamps, minhash_buckets_col,
     )
 
-    # adopt the static table's stamped banding (a tuned table stays
-    # probe-able), then validate at construction -- AND keep validating per
-    # micro-batch: the static side re-resolves its FILES every trigger, so a
-    # table rebuilt out-of-band under a different family/banding mid-run
-    # would otherwise silently admit every corpus near-dup (the probe
-    # columns would match nothing). The row-level guard below re-reads the
-    # stamp values with each micro-batch's file resolution and raises
-    # instead; stamp columns are per-file constants, so the filter costs
-    # row-group-stats reads on healthy files.
-    num_hashes, bands = adopt_banding(seen_buckets, None, None)
-    stamps = {"hash_family": hash_family, "banding": f"{num_hashes}x{bands}"}
-    check_stamps(seen_buckets, stamps)
-    for col_name, expected in stamps.items():
+    # validate at construction -- AND keep validating per micro-batch: the
+    # static side re-resolves its FILES every trigger, so a table rebuilt
+    # out-of-band under a different family/banding mid-run would otherwise
+    # silently admit every corpus near-dup (the probe columns would match
+    # nothing). The row-level guard below re-reads the stamp values with
+    # each micro-batch's file resolution and raises instead; stamp columns
+    # are per-file constants, so the filter costs row-group-stats reads on
+    # healthy files.
+    check_stamps(seen_buckets, BUCKET_STAMPS)
+    for col_name, expected in BUCKET_STAMPS.items():
         if col_name in seen_buckets.columns:
             seen_buckets = seen_buckets.where(
                 F.when(F.col(col_name).isNull()
@@ -305,23 +301,18 @@ def streaming_near_dedup_against_corpus(
                           "rebuilt table"),
                 )))
             )
-    out = stream.withColumn(
-        "_bb", minhash_buckets_col(
-            F.col(text_col), num_hashes=num_hashes, bands=bands,
-            hash_family=hash_family,
-        )
-    )
-    for b in range(bands):
+    out = stream.withColumn("_bb", minhash_buckets_col(F.col(text_col)))
+    for b in range(LSH_BANDS):
         out = out.withColumn(
             f"_bkt{b}", F.element_at(F.col("_bb"), b + 1)["bucket"]
         )
     out = out.drop("_bb")
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         sb = seen_buckets.where(F.col("band") == b).select(
             F.col("bucket").alias(f"_bkt{b}")
         )
         out = out.join(sb, f"_bkt{b}", "left_anti")
-    return out.drop(*[f"_bkt{b}" for b in range(bands)])
+    return out.drop(*[f"_bkt{b}" for b in range(LSH_BANDS)])
 
 
 def _duration_ms(s: str) -> int:

@@ -48,8 +48,7 @@ stage's ``modes:`` line names the run modes it supports (batch, --resumable,
            watermarked first-seen dedup bounded by --dedup-horizon
            modes: batch, resumable, streaming
   neardup  MinHash-LSH near-duplicate removal: connected components over
-           the candidate graph, keep the min-id canonical per cluster
-           (--hash-family md5mix|md5|xxhash64 picks the signature family);
+           the candidate graph, keep the min-id canonical per cluster;
            --state: incremental against the committed band buckets;
            streaming: the read-only probe against that state
            modes: batch, streaming
@@ -307,22 +306,19 @@ def _neardup(run, df):
         )
 
         return streaming_near_dedup_against_corpus(
-            df, run.store("neardup").read(),
-            text_col=a.text_col, hash_family=a.hash_family,
+            df, run.store("neardup").read(), text_col=a.text_col,
         )
     if getattr(a, "state", None):
         # band-partitioned versions: the streaming probe's per-band joins
         # each scan only their band
         return run.incremental("neardup", lambda seen: D.incremental_near_dedup(
             df, seen, id_col=a.id_col, text_col=a.text_col,
-            hash_family=a.hash_family,
-            persist_buckets=getattr(a, "bucket_persist", "cluster"),
         ), partition_by=("band",))
     # keep the min-id canonical of each LSH connected component; the
     # cluster table is (doc_id, cluster_id) for EVERY doc, so the survivor
     # filter is a doc_id equi-join, never a text re-hash
     clusters = D.dedup_clusters(
-        df, id_col=a.id_col, text_col=a.text_col, hash_family=a.hash_family,
+        df, id_col=a.id_col, text_col=a.text_col,
         threshold=getattr(a, "lsh_threshold", None),
     )
     return df.join(
@@ -598,8 +594,8 @@ def check_args(args, stages, mode: str) -> None:
             raise SystemExit("--lsh-threshold must be in (0, 1)")
         if g("state") or streaming:
             raise SystemExit("--lsh-threshold is for the within-corpus batch "
-                             "form only: incremental and streaming probes "
-                             "must match the persisted table's stamped banding")
+                             "form only: the neardup state is written and "
+                             "probed under the 16x4 banding only")
     if g("mix_temperature") is not None:
         if g("rate"):
             raise SystemExit("--mix-temperature and --rate are exclusive")
@@ -809,28 +805,13 @@ def main() -> None:
                          "distinct-bigram overlap with any one benchmark "
                          "doc covers at least this fraction of the "
                          "TRAINING doc's shingle set")
-    ap.add_argument("--bucket-persist", default="cluster",
-                    choices=("cluster", "canonical"),
-                    help="neardup --state: which docs' buckets enter "
-                         "the appendix -- 'cluster' (default) persists "
-                         "every member of a surviving cluster so future "
-                         "shards near a dropped within-shard dup are "
-                         "still caught (batch-CC-faithful); 'canonical' "
-                         "persists survivors only (smaller table, "
-                         "documented transitive recall loss)")
-    ap.add_argument("--hash-family", default="md5mix",
-                    choices=("md5mix", "md5", "xxhash64"),
-                    help="neardup: MinHash signature family -- md5mix "
-                         "(default; one md5 per shingle + universal mixes, "
-                         "DuckDB-replayable), md5 (historical, 16 md5s per "
-                         "shingle), xxhash64 (fastest, not replayable)")
     ap.add_argument("--lsh-threshold", type=float, default=None,
                     help="neardup (within-corpus batch form only): target "
                          "Jaccard similarity; the LSH banding is derived "
                          "via lsh_tuning instead of the 16x4 default. "
-                         "Incompatible with --state/--streaming: "
-                         "persisted/streaming probes are keyed under the "
-                         "state's stamped banding")
+                         "Incompatible with --state/--streaming: the "
+                         "committed neardup state is written and probed "
+                         "under the 16x4 banding only")
     ap.add_argument("--report", default=None, metavar="PATH",
                     help="after the write, run the one-pass corpus audit "
                          "(corpus_report: totals, language mix, gate keep "

@@ -71,7 +71,7 @@ def _ns(fx, out, **kw):
         input=str(fx / "in"), output=str(out), id_col="doc_id",
         text_col="text", url_col="url", min_kept_lines=2, line_min_chars=30,
         linededup_unit="line", span_k=8, rate=["s1=0.5"], default_rate=1.0,
-        stratum_col="source", cap_per_source=2, hash_family="md5mix",
+        stratum_col="source", cap_per_source=2,
         blocked_domains=str(fx / "blocked.txt"), clf_weights=str(fx / "clf"),
         clf_threshold=0.5, benchmark=str(fx / "bench.parquet"),
         semdedup_clusters=2, buckets=3, ts_col="ts",

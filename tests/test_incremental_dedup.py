@@ -88,18 +88,13 @@ def test_incremental_near_dedup_shard_loop(spark):
     survivors, new_buckets = incremental_near_dedup(shard_b, seen)
     assert [r["doc_id"] for r in survivors.collect()] == [11]
     nb = new_buckets.collect()
-    # default persist_buckets='cluster': the dropped within-shard member
-    # 12 persists its buckets too (transitive coverage for future shards)
+    # the dropped within-shard member 12 persists its buckets too
+    # (transitive coverage for future shards)
     assert {r["doc_id"] for r in nb} == {11, 12}
     assert len(nb) == 8  # one row per band per persisted doc
     # appendix schema identical to the bootstrap table: one plain union
     # maintains the running bucket table
     assert new_buckets.columns == seen.columns
-    # persist_buckets='canonical': survivors only (the r5 semantics)
-    _, nb_canon = incremental_near_dedup(
-        shard_b, seen, persist_buckets="canonical"
-    )
-    assert {r["doc_id"] for r in nb_canon.collect()} == {11}
 
     # idempotence: the same shard against seen + its own appendix drains
     seen2 = seen.union(new_buckets)
@@ -169,22 +164,16 @@ def test_incremental_near_dedup_member_hit_drops_canonical(spark):
     assert survivors.count() == 0, "member hit must drop the whole cluster"
     assert new_buckets.count() == 0
 
-    # hash-family mismatch against a stamped table fails loudly
-    import pytest
-
-    with pytest.raises(ValueError, match="hash_family"):
-        incremental_near_dedup(shard, seen, hash_family="xxhash64")
-
 
 def test_cluster_persist_covers_dropped_member_transitively(spark):
-    """The DISCRIMINATING case for persist_buckets='cluster' (the round-5
-    advice item): shard 1 holds cluster {X (canonical), Y} with nothing in
-    the corpus; a later shard brings S where S ~ Y but S shares NO bucket
-    with X. Batch connected components would put S in X's component and
-    drop it. Under 'canonical' persistence only X's buckets survive, so S
-    is admitted -- the recall loss; under 'cluster' (default) Y's buckets
-    persist and S is dropped. Reuses the offline-searched X~Y~S md5mix
-    chain whose bucket preconditions are asserted in
+    """The DISCRIMINATING case for persisting every member of a surviving
+    cluster: shard 1 holds cluster {X (canonical), Y} with nothing in the
+    corpus; a later shard brings S where S ~ Y but S shares NO bucket with
+    X. Batch connected components would put S in X's component and drop
+    it. Persisting survivors only would keep X's buckets alone and admit S
+    -- a recall loss; persisting the cluster keeps Y's buckets and S is
+    dropped. Reuses the offline-searched X~Y~S md5mix chain whose bucket
+    preconditions are asserted in
     test_incremental_near_dedup_member_hit_drops_canonical."""
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
         incremental_near_dedup,
@@ -203,15 +192,11 @@ def test_cluster_persist_covers_dropped_member_transitively(spark):
     )
     shard2 = spark.createDataFrame([(300, S)], "doc_id long, text string")
 
-    for mode, expect_s_admitted in (("cluster", False), ("canonical", True)):
-        surv1, nb1 = incremental_near_dedup(
-            shard1, empty_seen, persist_buckets=mode
-        )
-        assert [r["doc_id"] for r in surv1.collect()] == [100]
-        table = empty_seen.union(nb1)
-        surv2, _ = incremental_near_dedup(shard2, table, persist_buckets=mode)
-        admitted = [r["doc_id"] for r in surv2.collect()]
-        assert (admitted == [300]) == expect_s_admitted, (mode, admitted)
+    surv1, nb1 = incremental_near_dedup(shard1, empty_seen)
+    assert [r["doc_id"] for r in surv1.collect()] == [100]
+    assert {r["doc_id"] for r in nb1.collect()} == {100, 200}
+    surv2, _ = incremental_near_dedup(shard2, empty_seen.union(nb1))
+    assert surv2.count() == 0
 
 
 def test_bucketed_fps_table_no_corpus_shuffle(spark, tmp_path):

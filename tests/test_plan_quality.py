@@ -392,8 +392,8 @@ def test_training_mix_funnel_has_no_window_and_broadcasts_cap_counts(spark):
 def test_minhash_buckets_column_form_equals_batch_form(spark):
     """The streaming column form (`minhash_buckets_col`, interpreted HOF
     folds over the shingle array) must produce exactly the batch
-    `minhash_band_buckets` (band, bucket) rows per doc, for every hash
-    family -- it is what the stateless stream-static corpus probe keys on.
+    `minhash_band_buckets` (band, bucket) rows per doc -- it is what the
+    stateless stream-static corpus probe keys on.
     Docs with no shingles yield a NULL array (the batch form has no rows
     for them; a placeholder bucket would collapse all empty docs)."""
     from pyspark.sql import functions as F
@@ -404,21 +404,19 @@ def test_minhash_buckets_column_form_equals_batch_form(spark):
     )
 
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-    for fam in ("md5mix", "md5", "xxhash64"):
-        batch = {}
-        for r in minhash_band_buckets(df, hash_family=fam).collect():
-            batch.setdefault(r["doc_id"], set()).add((r["band"], r["bucket"]))
-        col = {
-            r["doc_id"]: (None if r["bb"] is None
-                          else {(e["band"], e["bucket"]) for e in r["bb"]})
-            for r in df.select(
-                "doc_id",
-                minhash_buckets_col(F.col("text"), hash_family=fam).alias("bb"),
-            ).collect()
-        }
-        for doc_id, got in col.items():
-            want = batch.get(doc_id)
-            assert got == want, (fam, doc_id, got, want)
+    batch = {}
+    for r in minhash_band_buckets(df).collect():
+        batch.setdefault(r["doc_id"], set()).add((r["band"], r["bucket"]))
+    col = {
+        r["doc_id"]: (None if r["bb"] is None
+                      else {(e["band"], e["bucket"]) for e in r["bb"]})
+        for r in df.select(
+            "doc_id", minhash_buckets_col(F.col("text")).alias("bb"),
+        ).collect()
+    }
+    for doc_id, got in col.items():
+        want = batch.get(doc_id)
+        assert got == want, (doc_id, got, want)
 
     empty = spark.createDataFrame(
         [(1, ""), (2, "   "), (3, None), (4, "oneword")],

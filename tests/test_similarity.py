@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from action_pdf_accessibility_paddle_docker_spark.operators.multimodal import (
+    decode_base64_media,
     decode_media,
     make_fake_audio,
     make_fake_formula_image,
@@ -108,6 +109,26 @@ def test_multimodal_decode(spark):
     assert out[2]["kind"] == "audio" and out[2]["sample_rate"] == 16000 and out[2]["n_samples"] == 100
     assert out[3]["ok"] is False and "unknown magic" in out[3]["error"]
     assert out[4]["ok"] is False
+
+
+def test_multimodal_decode_base64_data_urls(spark):
+    """``data:<mime>;base64,<b64>`` strings decode to exactly the rows
+    decode_media gives over the raw bytes, unknown magic included."""
+    import base64
+
+    raw = [(1, make_fake_image(1, 40, 30), "image/x-fake"),
+           (2, make_fake_audio(2, 16000, 100), "audio/x-fake"),
+           (3, b"JUNKxxxxxxxx", "application/octet-stream")]
+    urls = spark.createDataFrame(
+        [(i, f"data:{mime};base64,{base64.b64encode(b).decode()}")
+         for i, b, mime in raw],
+        "media_id bigint, data_url string",
+    )
+    want = decode_media(spark.createDataFrame(
+        [(i, b) for i, b, _ in raw], "media_id bigint, payload binary"))
+    got = sorted(decode_base64_media(urls).collect())
+    assert got == sorted(want.collect())
+    assert [r["kind"] for r in got] == ["image", "audio", "unknown"]
 
 
 def test_multimodal_resize_and_frames(spark):

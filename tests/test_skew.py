@@ -182,12 +182,10 @@ def test_chunk_dedup_hot_hash_never_joins_on_the_hash(spark):
     assert all(r["n_chunks"] == 1 for r in rows)
 
 
-def test_minhash_xxhash64_family_pairs_exact_duplicates(spark):
-    """The production hash family (xxhash64, measured 1.27x on the
-    signature stage vs the DuckDB-replayable md5 default) must preserve
-    the core MinHash guarantee: documents with IDENTICAL normalized
-    shingle sets have identical signatures in EVERY family, land in the
-    same band buckets, and always pair."""
+def test_md5mix_pairs_exact_duplicates(spark):
+    """The core MinHash guarantee: documents with IDENTICAL normalized
+    shingle sets have identical md5mix signatures, land in the same band
+    buckets, and always pair."""
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
@@ -200,14 +198,13 @@ def test_minhash_xxhash64_family_pairs_exact_duplicates(spark):
         (4, "totally different content words here now"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for family in ("md5mix", "md5", "xxhash64"):
-        sigs = {r["doc_id"]: list(r["sig"])
-                for r in minhash_signatures(df, hash_family=family).collect()}
-        assert sigs[1] == sigs[2], family
-        assert sigs[1] != sigs[3], family
-        pairs = {(r["id_a"], r["id_b"])
-                 for r in minhash_lsh_candidates(df, hash_family=family).collect()}
-        assert (1, 2) in pairs, family
+    sigs = {r["doc_id"]: list(r["sig"])
+            for r in minhash_signatures(df).collect()}
+    assert sigs[1] == sigs[2]
+    assert sigs[1] != sigs[3]
+    pairs = {(r["id_a"], r["id_b"])
+             for r in minhash_lsh_candidates(df).collect()}
+    assert (1, 2) in pairs
 
 
 def test_md5mix_signatures_match_independent_python_reference(spark):
@@ -332,27 +329,6 @@ def test_lsh_candidates_threshold_param(spark):
     # rejected (None sentinel), never silently overridden
     with pytest.raises(ValueError, match="not both"):
         minhash_band_buckets(df, bands=4, threshold=0.5)
-    # a threshold-banded PERSISTED table probed under an EXPLICIT different
-    # banding would silently match nothing -- the banding stamp fails it
-    # loudly; a probe that pins nothing ADOPTS the stamp and drains the
-    # same shard to zero survivors
-    from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
-        adopt_banding,
-        incremental_near_dedup,
-    )
-
-    seen = minhash_band_buckets(df, threshold=0.95)
-    stamp = seen.head(1)[0]["banding"]
-    assert stamp != "16x4"  # the mismatch is real
-    with pytest.raises(ValueError, match="banding"):
-        incremental_near_dedup(df, seen, bands=4)
-    nh, b = adopt_banding(seen, None, None)
-    assert f"{nh}x{b}" == stamp
-    survivors, appendix = incremental_near_dedup(df, seen)  # adopts
-    assert survivors.count() == 0 and appendix.count() == 0
-    # a pre-stamp (legacy) table resolves to the module defaults
-    legacy = seen.drop("banding")
-    assert adopt_banding(legacy, None, None) == (16, 4)
 
 
 def test_span_dedup_hot_gram_exact_under_skew(spark):

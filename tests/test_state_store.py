@@ -2,8 +2,9 @@
 spandedup. A three-shard chain through ``run_pipeline(..., state=S)`` equals
 the library ``incremental_*`` chain with a manual union of each appendix;
 the store commits a shard's appendix only after its output lands, a retry
-of a committed (input, output) reproduces its output, and the CLI refuses
-the compositions the store cannot serve."""
+of a committed (input, output) reproduces its output, a store built under
+a foreign stamp is refused before any output, and the CLI refuses the
+compositions the store cannot serve."""
 
 import argparse
 import json
@@ -44,10 +45,7 @@ CHAINS = {
     "dedup-url": ("dedup", {"fps_key": "url"}, lambda df, seen: _fps(
         D.incremental_dedup(df, seen, key="url"), "url")),
     "neardup-cluster": ("neardup", {}, lambda df, seen: D.incremental_near_dedup(
-        df, seen, persist_buckets="cluster")),
-    "neardup-canonical": ("neardup", {"bucket_persist": "canonical"},
-                          lambda df, seen: D.incremental_near_dedup(
-                              df, seen, persist_buckets="canonical")),
+        df, seen)),
     "spandedup": ("spandedup", {}, lambda df, seen: D.incremental_span_dedup(
         df, seen, k=8)),
 }
@@ -63,7 +61,7 @@ def _fps(pair, key):
 
 def _ns(**kw):
     base = dict(id_col="doc_id", text_col="text", url_col="url",
-                hash_family="md5mix", span_k=8, rate=[], default_rate=1.0)
+                span_k=8, rate=[], default_rate=1.0)
     base.update(kw)
     return argparse.Namespace(**base)
 
@@ -212,6 +210,53 @@ def test_span_k_mismatch_fails_before_any_output(spark, tmp_path):
                                    state=state, span_k=12), ["spandedup"])
     assert not out.exists()
     assert list(_commits(state, "spandedup")) == [0]
+
+
+@pytest.mark.parametrize("col,value", [
+    ("hash_family", "md5"), ("hash_family", "xxhash64"), ("banding", "16x8"),
+])
+def test_foreign_neardup_stamp_is_refused(spark, tmp_path, col, value):
+    """A bucket table stamped with a MinHash family or a banding the
+    probes do not compute (a store written under the removed --hash-family
+    md5|xxhash64, or under a tuned banding) is refused by the batch probe,
+    the streaming probe and a --state run -- the last before its output
+    path exists."""
+    from pyspark.sql import functions as F
+
+    from action_pdf_accessibility_paddle_docker_spark.streaming.stream import (
+        streaming_near_dedup_against_corpus,
+    )
+
+    df = spark.read.parquet(_shard(tmp_path, 0))
+    if col == "banding":
+        seen = D.minhash_band_buckets(df, bands=8)
+    else:
+        seen = D.minhash_band_buckets(df).withColumn(col, F.lit(value))
+    assert {r[col] for r in seen.collect()} == {value}
+    with pytest.raises(ValueError, match=col):
+        D.incremental_near_dedup(df, seen)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        _shard(tmp_path, 1))
+    with pytest.raises(ValueError, match=col):
+        streaming_near_dedup_against_corpus(stream, seen)
+    state = str(tmp_path / "state")
+    LIN.StateStore(spark, f"{state}/neardup", CJ.STAGE_TABLE["neardup"].state,
+                   run=("legacy", "legacy")).commit(seen, partition_by=("band",))
+    out = tmp_path / "o1"
+    with pytest.raises(ValueError, match=col):
+        CJ.run_pipeline(spark, _ns(input=_shard(tmp_path, 1), output=str(out),
+                                   state=state), ["neardup"])
+    assert not out.exists()
+    assert list(_commits(state, "neardup")) == [0]
+
+
+def test_unstamped_neardup_table_is_probed_under_module_banding(spark, tmp_path):
+    """A bucket table written before the stamps existed (no ``banding``
+    column) is probed as 16x4: the shard it was built from drains."""
+    df = spark.read.parquet(_shard(tmp_path, 0))
+    legacy = D.minhash_band_buckets(df).drop("banding")
+    survivors, appendix = D.incremental_near_dedup(df, legacy)
+    assert survivors.count() == 0 and appendix.count() == 0
 
 
 @pytest.mark.parametrize("argv,frag", [

@@ -431,11 +431,10 @@ def test_streaming_near_dedup_against_corpus_bucket_table(spark, tmp_path):
     docs and shingle-less docs pass; the survivors equal the batch
     incremental path's cross-corpus verdict on the same shard (the
     within-shard half is deliberately out of scope -- compose
-    streaming_near_dedup/streaming_exact_dedup for that). Also: the
-    hash-family stamp mismatch fails loudly before any micro-batch."""
+    streaming_near_dedup/streaming_exact_dedup for that). Foreign stamps
+    are refused in tests/test_state_store.py."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest
     from datetime import datetime, timedelta, timezone
 
     from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
@@ -497,10 +496,6 @@ def test_streaming_near_dedup_against_corpus_bucket_table(spark, tmp_path):
     )
     batch_surv, _ = incremental_near_dedup(shard_df, seen)
     assert {r["doc_id"] for r in batch_surv.collect()} == survivors
-
-    with pytest.raises(ValueError, match="hash_family"):
-        streaming_near_dedup_against_corpus(stream, seen,
-                                            hash_family="xxhash64")
 
 
 def test_sessions_split_gap_inside_one_batch(spark, tmp_path):

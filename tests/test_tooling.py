@@ -85,7 +85,7 @@ def test_scale_probe_help_lists_targets_without_a_session():
 
 
 # The jobs' option sets besides --help, pinned: a new knob must edit this
-# list visibly (corpus_job: 52).
+# list visibly (corpus_job: 50).
 JOB_OPTIONS = {
     "corpus_job.py": [
         "--input", "--output", "--stages", "--id-col", "--text-col",
@@ -99,10 +99,9 @@ JOB_OPTIONS = {
         "--embedding-col", "--embedding-id-col", "--semdedup-threshold",
         "--semdedup-clusters", "--semdedup-cap", "--benchmark",
         "--benchmark-id-col", "--benchmark-text-col", "--decontam-overlap",
-        "--bucket-persist", "--hash-family", "--lsh-threshold", "--report",
-        "--report-domains", "--report-exact-dup", "--resumable", "--buckets",
-        "--bucket-batch", "--streaming", "--checkpoint", "--ts-col",
-        "--dedup-horizon",
+        "--lsh-threshold", "--report", "--report-domains",
+        "--report-exact-dup", "--resumable", "--buckets", "--bucket-batch",
+        "--streaming", "--checkpoint", "--ts-col", "--dedup-horizon",
     ],
     "extract_job.py": [
         "--input", "--output", "--resumable", "--buckets", "--bucket-batch",
