@@ -552,10 +552,13 @@ def _non_winner_positions(occ: DataFrame) -> DataFrame:
     Skew posture mirrors the dup-line join (SCALE.md): the build side is ONE
     row per distinct gram hash (map-side-combined min), and ``occ`` must
     arrive checkpointed so the probe side's hot-gram partitions stay
-    AQE-splittable (a reused exchange is excluded from OptimizeSkewedJoin)."""
+    AQE-splittable (a reused exchange is excluded from OptimizeSkewedJoin).
+    Both sides grow with the corpus, so the join is pinned to sort-merge: a
+    broadcast of the gram side ran a 3 GiB driver out of memory at ~5M
+    grams, and AQE broadcasts it whenever a run's gram table is small."""
     winners = occ.groupBy("gh").agg(F.min(F.struct("doc_id", "pos")).alias("w"))
     return (
-        occ.join(winners, "gh")
+        occ.hint("shuffle_merge").join(winners, "gh")
         .where(
             ~(
                 (F.col("w.doc_id") == F.col("doc_id"))

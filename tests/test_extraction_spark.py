@@ -2,15 +2,19 @@
 pure-Python oracle PER TURN (text, regions, mathml), under stable
 (conv_id, turn_idx) ordering, identically at different parallelism."""
 
+from collections import Counter
+
 import pytest
 
+from action_pdf_accessibility_paddle_docker_spark.oracle.compare import (
+    engine_view,
+    oracle_view,
+)
 from action_pdf_accessibility_paddle_docker_spark.oracle.extract import extract_turn
 from action_pdf_accessibility_paddle_docker_spark.plans.extraction import (
     build_extraction,
 )
 from action_pdf_accessibility_paddle_docker_spark.sources.transcripts import iter_rows
-
-from tests.util import flatten_oracle_regions, flatten_region_rows
 
 N_CONVS = 40
 MEDIAN_TURNS = 6
@@ -32,25 +36,12 @@ def test_per_turn_text_equality_vs_oracle(spark, transcripts):
     keys = [(r["conv_id"], r["turn_idx"]) for r in out]
     assert keys == sorted(keys)
 
-    n_pdf = n_html = 0
     for row in out:
-        exp = oracle[(row["conv_id"], row["turn_idx"])]
-        assert row["payload_kind"] == exp["payload_kind"]
-        assert row["extracted_text"] == exp["extracted_text"], (
-            row["conv_id"], row["turn_idx"])
-        assert row["n_artifacts"] == exp["n_artifacts"]
-        got_mathml = [(m["region_id"], m["mathml"]) for m in row["mathml"]]
-        assert got_mathml == list(exp["mathml"])
-        if row["payload_kind"] == "pdf":
-            n_pdf += 1
-            assert flatten_region_rows(row["regions"]) == flatten_oracle_regions(exp)
-        elif row["payload_kind"] == "html":
-            n_html += 1
-            got = [(r["label"], r["text"], r["flags"]) for r in row["regions"]]
-            expd = [(r["label"], r["text"], r["flags"]) for r in exp["regions"]]
-            assert got == expd
+        key = (row["conv_id"], row["turn_idx"])
+        assert engine_view(row) == oracle_view(oracle[key]), key
     # the fixture mix must actually exercise both branches
-    assert n_pdf > 50 and n_html > 50
+    kinds = Counter(row["payload_kind"] for row in out)
+    assert kinds["pdf"] > 50 and kinds["html"] > 50
 
 
 def test_output_identical_under_different_parallelism(spark, transcripts):
@@ -59,12 +50,7 @@ def test_output_identical_under_different_parallelism(spark, transcripts):
     b = build_extraction(df.repartition(17), salt=8).collect()
 
     def key(rows):
-        return [
-            (r["conv_id"], r["turn_idx"], r["extracted_text"],
-             tuple((m["region_id"], m["mathml"]) for m in r["mathml"]),
-             tuple(flatten_region_rows(r["regions"])))
-            for r in rows
-        ]
+        return [(r["conv_id"], r["turn_idx"], engine_view(r)) for r in rows]
 
     assert key(a) == key(b)
 

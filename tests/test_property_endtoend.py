@@ -12,9 +12,11 @@ from action_pdf_accessibility_paddle_docker_spark.config import (
     PDF_PAYLOAD_SENTINEL,
 )
 from action_pdf_accessibility_paddle_docker_spark.operators.payload import extract_series
+from action_pdf_accessibility_paddle_docker_spark.oracle.compare import (
+    engine_view,
+    oracle_view,
+)
 from action_pdf_accessibility_paddle_docker_spark.oracle.extract import extract_turn
-
-from tests.util import flatten_oracle_regions, flatten_region_rows
 
 label_st = st.sampled_from(list(CLASS_LABELS))
 
@@ -64,12 +66,8 @@ payload_st = st.lists(
 @settings(max_examples=120, deadline=None)
 @given(payload_st)
 def test_random_pdf_payload_oracle_equals_kernel(payload):
-    exp = extract_turn(payload)
     got = next(iter(extract_series(pd.Series([payload]))))
-    assert got["extracted_text"] == exp["extracted_text"]
-    assert list(got["mathml"]) == list(exp["mathml"])
-    assert flatten_region_rows(got["regions"]) == flatten_oracle_regions(exp)
-    assert got["n_artifacts"] == exp["n_artifacts"]
+    assert engine_view(got) == oracle_view(extract_turn(payload))
 
 
 # --------------------------------------------------------------------------

@@ -1,73 +1,50 @@
-"""Mimic the driver's correctness harness: run every queries() entry on Spark
-at sf0.001 and compare row-count + values against the DuckDB oracle_sql()."""
-
-import math
+"""Run every queries() entry on Spark at sf0.001 and sf0.01 and compare
+its columns and rows with its DuckDB oracle_sql() under the one comparator
+(``oracle.compare``)."""
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from action_pdf_accessibility_paddle_docker_spark.oracle import compare
 
-SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+# perfbench/checks.py imports these two names from this module
+from action_pdf_accessibility_paddle_docker_spark.oracle.compare import TABLES, row_multiset as _rows_to_set  # noqa: F401,E501
+
+SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    cons = {sf: compare.connect(sf) for sf in SF_DIRS}
+    yield cons
+    for con in cons.values():
+        con.close()
 
 
-def _normalize(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return round(v, 6)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()[:26]
-    if isinstance(v, int):
-        return float(v) if abs(v) < 2**52 else v
-    return v
+# ids: the bare query name at sf0.001 (the ids from before the sf0.01
+# cases), "sf0.01-<name>" at sf0.01
+@pytest.mark.parametrize("sf_dir,name", [
+    pytest.param(sf, name, id=name if sf == SF_DIRS[0] else f"sf0.01-{name}")
+    for sf in SF_DIRS for name in sorted(entrymod.oracle_sql())
+])
+def test_query_matches_duckdb(spark, duck, sf_dir, name):
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    rel = duck[sf_dir].sql(entrymod.oracle_sql()[name])
+    diff = compare.rows_diff(sdf.columns, sdf.collect(), rel.columns, rel.fetchall())
+    assert diff is None, f"{name} at {sf_dir}: {diff}"
 
 
-def _rows_to_set(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_normalize(r[i]) for i in order) for r in rows)
-
-
-@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql().keys()))
-def test_query_matches_duckdb(spark, duck, name):
-    sql = entrymod.oracle_sql()[name]
-    builder = entrymod.queries()[name]
-
-    sdf = builder(spark, SF_DIR)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    rel = duck.sql(sql)
-    duck_cols = [c.lower() for c in rel.columns]
-    duck_rows = rel.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (spark_cols, duck_cols)
-    assert len(spark_rows) == len(duck_rows), f"{name}: {len(spark_rows)} vs {len(duck_rows)}"
-    a = _rows_to_set(spark_cols, spark_rows)
-    b = _rows_to_set(duck_cols, duck_rows)
-    if a != b:
-        diff = [(x, y) for x, y in zip(a, b) if x != y][:5]
-        raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
-
-
-def test_rows_only_queries_run(spark):
-    for name, builder in entrymod.queries().items():
-        if name in entrymod.oracle_sql():
-            continue
-        df = builder(spark, SF_DIR)
-        assert df.count() >= 0
-        assert len(df.schema.fields) > 0
+def test_every_query_is_oracle_checked_on_rows(duck):
+    """Every registered query has DuckDB SQL, and returns a row at some
+    tested scale, so the comparison above checks values, not only a schema."""
+    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+    empty = [
+        name for name, sql in sorted(entrymod.oracle_sql().items())
+        if all(con.sql(f"SELECT count(*) FROM ({sql})").fetchone()[0] == 0
+               for con in duck.values())
+    ]
+    assert not empty
 
 
 def test_entry_smoke(spark):
@@ -105,8 +82,7 @@ def test_sketch_accuracy_half_cent_medians_match_duckdb(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'")
     rel = con.sql(entrymod.oracle_sql()["q_sketch_accuracy"])
-    a = _rows_to_set([c.lower() for c in sdf.columns], [tuple(r) for r in sdf.collect()])
-    b = _rows_to_set([c.lower() for c in rel.columns], rel.fetchall())
-    assert len(a) == 3000
-    diff = [(x, y) for x, y in zip(a, b) if x != y]
-    assert not diff, f"{len(diff)} groups differ, first: {diff[:3]}"
+    got = sdf.collect()
+    assert len(got) == 3000
+    diff = compare.rows_diff(sdf.columns, got, rel.columns, rel.fetchall())
+    assert diff is None, diff

@@ -85,6 +85,19 @@ def test_duplicate_span_stats_matches_removal(spark):
     assert stats[6]["rewritten_fp"] == hashlib.md5(b"").hexdigest()
 
 
+def test_gram_join_never_broadcasts(spark):
+    """The gram-hash join of ``_non_winner_positions`` stays sort-merge even
+    when the grams are few: unpinned, AQE turns it into a broadcast of the
+    exploded gram side here, and that broadcast is what runs a driver out
+    of memory on a large corpus whose size estimate is small."""
+    out = duplicate_span_stats(_corpus(spark).localCheckpoint(eager=False), k=K)
+    out.collect()  # the adaptive plan is final only after a run
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    gram_joins = [line for line in final.splitlines() if "Join [gh#" in line]
+    assert gram_joins, final
+    assert all("SortMergeJoin" in line for line in gram_joins), final
+
+
 def test_span_winner_is_position_independent(spark):
     # the corpus-first occurrence is min(doc_id, pos): doc 5 holds the span
     # at pos 0 but doc 4 (later position, smaller id) wins

@@ -1,6 +1,7 @@
 """The measurement tooling beside the package: the headline query lists stay
-in step, perfbench's traced names exist, every script compiles, and the
-scale probe parses its arguments before it builds a session."""
+in step, perfbench's traced names exist, every script compiles, nothing but
+the tests imports the test tree, and the scale probe parses its arguments
+before it builds a session."""
 
 import ast
 import glob
@@ -70,6 +71,38 @@ def test_stub_detector_runs_the_traced_batch_hook():
 def test_tooling_compiles(path, tmp_path):
     py_compile.compile(os.path.join(REPO, path),
                        cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+# perfbench/checks.py still reaches the comparator through tests/; the next
+# change to the benchmark imports oracle.compare and empties this set.
+TESTS_IMPORTERS = {"perfbench/checks.py"}
+
+
+def _imports_tests(path: str) -> bool:
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            names = [node.module]
+        else:
+            continue
+        if any(n == "tests" or n.startswith("tests.") for n in names):
+            return True
+    return False
+
+
+def test_only_the_tests_import_the_test_tree():
+    paths = [
+        p for pattern in ("action_pdf_accessibility_paddle_docker_spark/**/*.py",
+                          "jobs/*.py", "scripts/*.py", "perfbench/*.py",
+                          "bench.py", "__spark_entry__.py")
+        for p in glob.glob(os.path.join(REPO, pattern), recursive=True)
+    ]
+    assert len(paths) > 50
+    importers = {os.path.relpath(p, REPO) for p in paths if _imports_tests(p)}
+    assert importers == TESTS_IMPORTERS
 
 
 def test_scale_probe_help_lists_targets_without_a_session():

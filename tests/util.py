@@ -1,55 +1,7 @@
-"""Shared test helpers: flatten oracle / Spark extraction results to a common
-comparable row shape."""
+"""perfbench/checks.py imports the region flatteners from here; the next
+change to the benchmark imports them from ``oracle.compare`` instead."""
 
-from action_pdf_accessibility_paddle_docker_spark.config import PDE_TABLE
-
-
-def _r6(xs):
-    return tuple(round(float(b), 6) for b in xs)
-
-
-def flatten_oracle_regions(res: dict) -> list[tuple]:
-    out = []
-    for el in res["regions"]:
-        out.append(
-            (el["page"], el["label"], round(el["score"], 9), _r6(el["bbox"]),
-             el["tag"], el["flags"], el["type"], el["heading"], el["text"],
-             el["reading_rank"], el["region_id"], None, el["row_num"], el["col_num"])
-        )
-        for nested in el["nested"]:
-            out.append(
-                (nested["page"], nested["label"], round(nested["score"], 9), _r6(nested["bbox"]),
-                 nested["tag"], nested["flags"], nested["type"], nested["heading"], nested["text"],
-                 0, nested["region_id"], el["region_id"], None, None)
-            )
-        if el["type"] == PDE_TABLE and el["cells"]:
-            for c in el["cells"]:
-                out.append(
-                    (el["page"], "cell", round(el["score"], 9), _r6(c["bbox"]),
-                     None, "", "pde_cell", None, c.get("text", ""),
-                     0, c["region_id"], el["region_id"], c["row"], c["column"])
-                )
-    return out
-
-
-def flatten_region_rows(regions) -> list[tuple]:
-    """Spark Row / plain-tuple / dict region rows -> comparable tuples."""
-    from action_pdf_accessibility_paddle_docker_spark.operators.payload import (
-        region_as_dict,
-    )
-
-    out = []
-    for r in regions:
-        if hasattr(r, "asDict"):
-            d = r.asDict()
-        elif isinstance(r, tuple):
-            d = region_as_dict(r)
-        else:
-            d = r
-        out.append(
-            (d["page"], d["label"], round(float(d["score"]), 9), _r6(d["bbox"]),
-             d["tag"], d["flags"], d["rtype"], d["heading"], d["text"],
-             d["reading_rank"], d["region_id"], d["parent_region_id"],
-             d["row_num"], d["col_num"])
-        )
-    return out
+from action_pdf_accessibility_paddle_docker_spark.oracle.compare import (  # noqa: F401
+    flatten_oracle_regions,
+    flatten_region_rows,
+)
