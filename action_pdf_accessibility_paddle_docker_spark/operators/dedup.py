@@ -20,7 +20,7 @@ from __future__ import annotations
 from functools import lru_cache
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 NUM_MINHASHES = 16
 LSH_BANDS = 4  # 4 rows per band
@@ -66,9 +66,10 @@ def word_bigrams(text_col):
 
 def _widen(df: DataFrame, key: str | None = None) -> DataFrame:
     """Single fat parquet files arrive as one split; spread the per-row-heavy
-    shingle/token projections across the cluster before exploding. Guarded:
-    under Spark Connect there is no RDD API, so fall back to an unconditional
-    repartition (the explode below dominates the extra exchange anyway).
+    shingle/token projections across the cluster before exploding. A
+    streaming frame has no partition count to probe (``.rdd`` raises), so
+    it always repartitions to 16 (the explode below dominates the extra
+    exchange anyway).
 
     ``key`` (round 8): HASH-partition by that column instead of round-robin.
     When the downstream plan aggregates per document, HashPartitioning(key)
@@ -82,23 +83,26 @@ def _widen(df: DataFrame, key: str | None = None) -> DataFrame:
     DOCUMENT still lands on one task, exactly as the explode stage already
     did under round-robin)."""
     part = (F.col(key),) if key is not None else ()
-    try:
-        want = df.sparkSession.sparkContext.defaultParallelism
-        # the .rdd partition-count probe costs ~35 ms of driver time per
-        # call (plan -> RDD conversion); memoize it per semantically-equal
-        # plan (round 8). A (vanishingly unlikely) 32-bit hash collision
-        # could only flip the widen DECISION, never a value -- repartition
-        # is value-neutral; same staleness caveat as the scan memo.
-        ck = (df.sparkSession, df.semanticHash())
-        n_parts = _NPARTS_CACHE.get(ck)
-        if n_parts is None:
-            n_parts = _NPARTS_CACHE[ck] = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no sparkContext / DataFrame.rdd
+    if df.isStreaming:
         return df.repartition(16, *part)
+    want = df.sparkSession.sparkContext.defaultParallelism
+    # the .rdd partition-count probe costs ~35 ms of driver time per call
+    # (plan -> RDD conversion); memoize it per semantically-equal plan
+    # (round 8), oldest entry evicted past the bound. A (vanishingly
+    # unlikely) 32-bit hash collision could only flip the widen DECISION,
+    # never a value -- repartition is value-neutral; same staleness caveat
+    # as the scan memo.
+    ck = (df.sparkSession, df.semanticHash())
+    n_parts = _NPARTS_CACHE.get(ck)
+    if n_parts is None:
+        n_parts = _NPARTS_CACHE[ck] = df.rdd.getNumPartitions()
+        if len(_NPARTS_CACHE) > _NPARTS_MAX:
+            del _NPARTS_CACHE[next(iter(_NPARTS_CACHE))]
     return df.repartition(want, *part) if n_parts < want else df
 
 
 _NPARTS_CACHE: dict = {}
+_NPARTS_MAX = 128
 
 
 def range_widen(df: DataFrame, key: str) -> DataFrame:
@@ -122,10 +126,7 @@ def range_widen(df: DataFrame, key: str) -> DataFrame:
     does not coalesce it into UnknownPartitioning, which would resurrect
     the final exchange. Callers' operators still call ``_widen`` internally;
     it no-ops on the already-widened frame."""
-    try:
-        want = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        want = 16
+    want = df.sparkSession.sparkContext.defaultParallelism
     return df.repartitionByRange(want, *[F.col(k) for k in key.split(",")])
 
 
@@ -1013,7 +1014,7 @@ def minhash_signatures(
     return sig.select("doc_id", arr.alias("sig"))
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _minhash_agg_exprs(num_hashes: int):
     """The md5mix min-aggregate Columns and the signature-array Column
     (name-based, input-independent) -- compiled once per process instead of
@@ -1137,7 +1138,7 @@ def minhash_band_buckets(
     )
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _band_struct_array(num_hashes: int, bands: int):
     """The (band, bucket) struct array over the ``sig`` column -- compiled
     once per (num_hashes, bands) pair per process (same rationale as
@@ -1282,52 +1283,54 @@ def contamination_scores(
     )
 
 
-def connected_component_labels(
-    nodes: DataFrame, pairs: DataFrame, max_iter: int = 50
-) -> DataFrame:
+#: propagation advances one hop per round, so this bounds the component
+#: diameter ``connected_component_labels`` resolves
+CC_MAX_ROUNDS = 50
+
+
+def connected_component_labels(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Distributed connected components: (doc_id) nodes + (id_a, id_b) edges
     -> (doc_id, cluster_id = min id in component). Iterative min-label
-    propagation entirely in DataFrame ops -- each round is one equi-join
-    (labels onto the symmetric edge list) + one groupBy(min), converging in
-    O(component diameter) rounds. localCheckpoint() truncates the growing
-    lineage so round N's plan does not replay rounds 1..N-1 (no GraphFrames
-    dependency; same loop GraphX's CC runs under the hood). Property-tested
-    against a scalar union-find on random graphs."""
-    edges = pairs.unionByName(
+    propagation entirely in DataFrame ops (no GraphFrames dependency; same
+    loop GraphX's CC runs under the hood), converging in O(component
+    diameter) rounds. Property-tested against a scalar union-find.
+
+    The symmetric edge list is materialized once (eager localCheckpoint),
+    so callers pass their candidate pairs as a plain plan. Each round is
+    one Spark action: the propagation join + groupBy(min), eagerly
+    checkpointed (which truncates the lineage), and the same job observes
+    how many labels moved. Labels only decrease, so count(label < previous
+    label) is exact and no second convergence join runs."""
+    edges = pairs.select("id_a", "id_b").unionByName(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    )
+    ).localCheckpoint()
     labels = nodes.select("doc_id").distinct().withColumn("label", F.col("doc_id"))
     labels = labels.localCheckpoint()
-    changed = 0
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         neigh = edges.join(
             labels.withColumnRenamed("doc_id", "id_a"), "id_a"
         ).select(F.col("id_b").alias("doc_id"), "label")
-        new_labels = (
-            labels.unionByName(neigh)
+        moved = Observation()
+        labels = (
+            labels.withColumn("prev", F.col("label"))
+            .unionByName(neigh, allowMissingColumns=True)
             .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.min("prev").alias("prev"))
+            .observe(moved, F.count(F.when(F.col("label") < F.col("prev"), 1))
+                     .alias("n"))
+            .drop("prev")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.withColumnRenamed("label", "new_label")
-            .join(labels, "doc_id")
-            .where(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if moved.get["n"] == 0:
             break
     else:
-        # propagation advances one hop per round; exiting via max_iter with
-        # labels still moving would silently split one component into
-        # several cluster_ids -- fail loudly instead
-        if changed != 0:
-            raise RuntimeError(
-                f"connected_component_labels did not converge in {max_iter} "
-                f"rounds ({changed} labels still changing); raise max_iter "
-                "(component diameter exceeds it)"
-            )
+        # exiting with labels still moving would silently split one
+        # component into several cluster_ids -- fail loudly instead
+        raise RuntimeError(
+            f"connected_component_labels did not converge in {CC_MAX_ROUNDS} "
+            f"rounds ({moved.get['n']} labels still changing): the component "
+            "diameter exceeds CC_MAX_ROUNDS"
+        )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -1335,7 +1338,6 @@ def dedup_clusters(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_iter: int = 20,
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """Near-duplicate CLUSTER assignment: connected components over the
@@ -1346,17 +1348,15 @@ def dedup_clusters(
     shallow (dupes of a common original), so the propagation rounds stay in
     single digits. ``threshold=`` tunes the banding to a target Jaccard
     similarity (see ``lsh_tuning``) -- safe here because the WITHIN-corpus
-    form persists no bucket table for later runs to mismatch."""
-    # checkpoint the candidate pairs (round 8): connected_component_labels
-    # references the edge list twice per propagation round and each round
-    # is a fresh job, so without a materialization point the whole
-    # signature/banding pipeline would re-execute every round (the
-    # semantic_dedup pair-checkpoint pattern)
+    form persists no bucket table for later runs to mismatch. The candidate
+    pairs go to ``connected_component_labels`` as a plain plan: it
+    materializes its edge list once, so the signature/banding pipeline runs
+    once, not once per propagation round."""
     pairs = minhash_lsh_candidates(
         df, id_col=id_col, text_col=text_col, threshold=threshold,
-    ).localCheckpoint(eager=False)
+    )
     nodes = df.select(F.col(id_col).alias("doc_id"))
-    return connected_component_labels(nodes, pairs, max_iter=max_iter)
+    return connected_component_labels(nodes, pairs)
 
 
 def incremental_near_dedup(
@@ -1364,7 +1364,6 @@ def incremental_near_dedup(
     seen_buckets: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_iter: int = 20,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental NEAR-dup dedup for an arriving shard against the
     corpus's persisted MinHash band-bucket table -- the CDC shape of
@@ -1415,14 +1414,16 @@ def incremental_near_dedup(
     pair expansion across it, and a hot bucket is a skew-split join
     partition, never a window. The shard's bucket table is computed once
     (lazy localCheckpoint) and reused for the candidate pairing, the
-    cross-corpus probe, and the returned appendix."""
+    cross-corpus probe, and the returned appendix; the candidate pairs go
+    to ``connected_component_labels`` as a plain plan (it materializes its
+    edge list once)."""
     check_stamps(seen_buckets, BUCKET_STAMPS)
     buckets = minhash_band_buckets(
         new_df, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=False)
     pairs = _candidate_pairs_from_buckets(buckets)
     nodes = new_df.select(F.col(id_col).alias("doc_id"))
-    labels = connected_component_labels(nodes, pairs, max_iter=max_iter)
+    labels = connected_component_labels(nodes, pairs)
     # cross-corpus probe over ALL members' buckets, then lift member hits
     # to their cluster: a hit on a non-canonical member must still remove
     # the cluster's canonical. JOIN DIRECTION matters at corpus scale:
@@ -1561,7 +1562,7 @@ def simhash(df: DataFrame, bits: int = SIMHASH_BITS, id_col: str = "doc_id", tex
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _simhash_agg_exprs(bits: int):
     """The per-bit vote aggregates and the recombine Column (name-based,
     input-independent) -- compiled once per process (the

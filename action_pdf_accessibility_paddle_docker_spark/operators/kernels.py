@@ -92,8 +92,7 @@ def reference_groups(adj: np.ndarray) -> list[np.ndarray]:
     so the returned boolean masks may be NON-disjoint (a later merge that
     enlarges a group does not re-check earlier-scanned groups). True
     connected components would differ on some graphs (pinned by the 6-box
-    counterexample in tests/test_kernels.py); ``connected_components`` below
-    stays available as the general CC utility."""
+    counterexample in tests/test_kernels.py)."""
     n = adj.shape[0]
     groups: list[np.ndarray] = []
     for box in np.flatnonzero(adj.any(axis=1)):
@@ -114,26 +113,6 @@ def reference_groups(adj: np.ndarray) -> list[np.ndarray]:
                 dropped[i2] = True
         unique.append(g1)
     return unique
-
-
-def connected_components(adj: np.ndarray) -> np.ndarray:
-    """Component label per node (-1 for isolated nodes)."""
-    n = adj.shape[0]
-    labels = np.full(n, -1, dtype=np.int64)
-    comp = 0
-    has_edge = adj.any(axis=1)
-    for start in range(n):
-        if labels[start] != -1 or not has_edge[start]:
-            continue
-        frontier = np.zeros(n, dtype=bool)
-        frontier[start] = True
-        member = np.zeros(n, dtype=bool)
-        while frontier.any():
-            member |= frontier
-            frontier = (adj[frontier].any(axis=0)) & ~member
-        labels[member] = comp
-        comp += 1
-    return labels
 
 
 def nms_keep_mask(coords: np.ndarray, scores: np.ndarray) -> np.ndarray:

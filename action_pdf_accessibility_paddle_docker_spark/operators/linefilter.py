@@ -79,7 +79,7 @@ def line_filter_stats(
     )
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _line_filter_exprs(
     id_col: str, text_col: str, min_words: int, min_kept_lines: int
 ) -> tuple:

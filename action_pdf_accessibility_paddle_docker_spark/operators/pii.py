@@ -135,7 +135,7 @@ def pii_stats(
     return _widen(df).select(*_pii_stats_exprs(id_col, text_col, validate_cards))
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _pii_stats_exprs(id_col: str, text_col: str, validate_cards: bool) -> tuple:
     """``pii_stats``' output Columns -- pure functions of the column names,
     compiled once per process (round 8 driver-side build reduction)."""

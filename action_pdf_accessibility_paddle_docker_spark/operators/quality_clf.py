@@ -188,9 +188,10 @@ def _score_exprs(
     py4j round-trips per call on the q_quality_gate path). ``terms_key`` is
     None (derive from ``text_col``), a column name, a tuple of array-column
     names to concat, or a ``_TermsExpr`` (uncached path only). Returned
-    containers are shared -- callers must treat them as read-only. Two
-    outputs built from one entry share their aliases' exprIds, and joining
-    them still resolves each side (pinned by test_quality_clf). Bounded:
+    containers are shared -- callers must treat them as read-only. Each
+    use of a cached aliased Column gets a fresh exprId, so two outputs
+    built from one entry share none and a join of them resolves each side
+    (both pinned by test_quality_clf). Bounded:
     bias/threshold vary per trained model, so a sweep over many models
     would otherwise grow the cache without limit."""
     if terms_key is None:

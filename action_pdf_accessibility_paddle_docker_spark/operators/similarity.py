@@ -549,7 +549,10 @@ def semantic_dedup(
 
     Scale shape: the assignment table is lazily localCheckpointed so the
     self-join does not run the KMeans assignment UDF twice (AQE compiles
-    the two sides independently; same pattern as q_lm_quality's tf).
+    the two sides independently; same pattern as q_lm_quality's tf). The
+    pair table goes to ``connected_component_labels`` as a plain plan: it
+    materializes its edge list once, so the cosine join runs once, not
+    once per propagation round.
     The pair join is a cid equi-join -- never a cross product -- and the
     per-cluster pair count is the documented cost: size n_clusters so
     clusters stay bounded (~n/k rows); a skewed cluster is an AQE
@@ -597,9 +600,6 @@ def semantic_dedup(
         F.col("vid").alias("id_b"), "cid", F.col("v").alias("vb"),
         F.col("_n2").alias("_bn2"),
     )
-    # checkpoint the pair table too: connected_component_labels is
-    # iterative, and each propagation round would otherwise re-run the
-    # O(sum per-cluster n^2) cosine join from scratch
     pairs = (
         a.join(b, ["cid"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -607,7 +607,7 @@ def semantic_dedup(
             F.col("va"), F.col("vb"), F.col("_an2"), F.col("_bn2")))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b")
-    ).localCheckpoint(eager=False)
+    )
     nodes = assigned.select(F.col("vid").alias("doc_id"))
     labels = connected_component_labels(nodes, pairs)
     return (

@@ -267,7 +267,7 @@ def _gate_frame(df: DataFrame, text_col: str, p: dict):
     return base, reasons, cols
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _gate_exprs(text_col: str, p_items: tuple):
     """The gate's staged array Columns, reject-reasons Column, and signal
     Columns -- pure functions of (text_col, thresholds), compiled once per
@@ -446,12 +446,12 @@ def document_stats(
     return base.select(*_doc_stats_exprs(tuple(extra)))
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _DOC_TOKS_EXPR():
     return tokens(F.col("_t")).alias("_toks")
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _doc_stats_exprs(extra_names: tuple) -> tuple:
     """``document_stats``' output Columns over the staged ``_t``/``_toks``
     names -- compiled once per process (round 8: the stats expressions cost

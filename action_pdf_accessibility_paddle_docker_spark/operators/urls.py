@@ -287,7 +287,7 @@ def with_url_columns(
     return out.drop(*staged)
 
 
-@lru_cache(maxsize=None)
+@lru_cache(maxsize=128)
 def _staged_url_exprs() -> dict:
     """The five staged URL Columns over the fixed staging names -- compiled
     once per process (see ``with_url_columns``). Pure expression handles:

@@ -629,7 +629,7 @@ _ES_LIST = "['el','la','de','los','y','en']"
 from functools import lru_cache as _lru_cache  # noqa: E402
 
 
-@_lru_cache(maxsize=None)
+@_lru_cache(maxsize=128)
 def _synth_url_col() -> "F.Column":
     d = F.col("doc_id")
 
@@ -2206,7 +2206,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.pii_stats(doc, validate_cards=True).orderBy("doc_id")
 
 
-@_lru_cache(maxsize=None)
+@_lru_cache(maxsize=128)
 def _pii_injected_col() -> "F.Column":
     d = F.col("doc_id")
     return F.when(
@@ -2325,7 +2325,7 @@ def q_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return L.line_filter_stats(doc).orderBy("doc_id")
 
 
-@_lru_cache(maxsize=None)
+@_lru_cache(maxsize=128)
 def _line_filter_injected_col() -> "F.Column":
     t = F.split(D.normalized(F.col("text")), " ")
     d = F.col("doc_id")
@@ -3131,8 +3131,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_ivf_ann_topk is here because building it FITS the MLlib KMeans coarse
 # quantizer (full embedding scans + iterative jobs, twice).
 # q_incremental_dedup and q_dedup_clusters run the iterative
-# connected-components loop (eager localCheckpoint + count per round) at
-# build time; q_stratified_sample collects the per-source counts for the
+# connected-components loop (one eager localCheckpoint per round, whose job
+# also observes how many labels moved) at build time; q_stratified_sample collects the per-source counts for the
 # temperature leg.
 EAGER_BUILDERS = frozenset(
     {

@@ -286,10 +286,7 @@ def distributed_transcripts(spark, n_convs: int, median_turns: int = 8, seed: in
                     rows.append(make_row(seed, conv, turn))
             yield pd.DataFrame(rows, columns=cols)
 
-    try:
-        par = max(1, min(spark.sparkContext.defaultParallelism, n_convs))
-    except Exception:  # Spark Connect: no sparkContext on the client
-        par = max(1, min(8, n_convs))
+    par = max(1, min(spark.sparkContext.defaultParallelism, n_convs))
     return spark.range(n_convs).repartition(par).mapInPandas(gen, schema)
 
 

@@ -3,6 +3,8 @@
 These pin the scale-critical plan shapes so a regression (e.g. a filter that
 stops reaching the scan, a broadcast that degrades to shuffle) fails fast."""
 
+from pyspark.sql import functions as F
+
 from action_pdf_accessibility_paddle_docker_spark.plans import queries as Q
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -338,6 +340,31 @@ def test_widen_exchange_reused_by_per_doc_aggregate(spark):
         n_ex = plan.count("Exchange ")
         assert n_ex == 1, (op.__name__, n_ex, plan[:800])
 
+
+
+def test_widen_plans_a_fixed_repartition_on_a_stream(spark):
+    """A streaming frame has no partition count to probe: _widen plans a
+    hash repartition to 16 by the key, without raising."""
+    from action_pdf_accessibility_paddle_docker_spark.operators.dedup import _widen
+
+    stream = (
+        spark.readStream.format("rate").load()
+        .select(F.col("value").alias("doc_id"), F.lit("a b").alias("text"))
+    )
+    plan = _widen(stream, key="doc_id")._jdf.queryExecution().analyzed().toString()
+    assert "RepartitionByExpression [doc_id" in plan and "], 16" in plan, plan
+
+
+def test_widen_partition_count_memo_is_bounded(spark, monkeypatch):
+    """_widen memoizes one partition count per distinct plan; past its
+    bound the oldest entry goes, so the memo never outgrows it."""
+    from action_pdf_accessibility_paddle_docker_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_NPARTS_CACHE", {})
+    for i in range(1, 3 * D._NPARTS_MAX // 2):
+        D._widen(spark.range(i))
+        assert len(D._NPARTS_CACHE) <= D._NPARTS_MAX
+    assert len(D._NPARTS_CACHE) == D._NPARTS_MAX
 
 def test_ann_pair_join_uses_precomputed_norms(spark):
     """Round-8 q_ann_topk fix (r7 verdict item 2): the squared norms must

@@ -150,3 +150,55 @@ def test_connected_component_labels_match_union_find(spark, edges):
         for r in connected_component_labels(nodes, pairs).collect()
     }
     assert got == expected
+
+
+def _cc(spark, n, edges):
+    from action_pdf_accessibility_paddle_docker_spark.operators.dedup import (
+        connected_component_labels,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    return {r["doc_id"]: r["cluster_id"]
+            for r in connected_component_labels(nodes, pairs).collect()}
+
+
+def test_connected_components_job_count_per_round(spark):
+    """Each propagation round is one Spark action: an 8-node path takes 8
+    rounds (7 that move a label, 1 that observes none moving), and the
+    whole call runs at most 6 jobs per round. A round that also runs a
+    convergence join + count() takes ~10 (83 jobs on this graph)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-path8", "cc-path8")
+    try:
+        got = _cc(spark, 8, [(i, i + 1) for i in range(7)])
+    finally:
+        sc.setJobGroup("cc-path8-done", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc-path8"))
+    assert got == {i: 0 for i in range(8)}
+    assert jobs <= 6 * 8, jobs
+
+
+def test_connected_components_empty_graph_and_isolated_nodes(spark):
+    assert _cc(spark, 0, []) == {}
+    assert _cc(spark, 5, []) == {i: i for i in range(5)}
+
+
+def test_connected_components_reads_each_round_after_its_job(spark):
+    """Labels move in round 1 (1 -> 0, 2 -> 1, 4 -> 3) and settle in round
+    2 (2 -> 0). A moved-count read before its round's job ran (0) would
+    stop after round 1 and leave doc 2 labeled 1."""
+    assert _cc(spark, 5, [(0, 1), (1, 2), (3, 4)]) == {
+        0: 0, 1: 0, 2: 0, 3: 3, 4: 3}
+
+
+def test_connected_components_non_convergence_raises(spark, monkeypatch):
+    """Exiting the round bound with labels still moving would split one
+    component into several cluster ids: it raises instead."""
+    import pytest
+
+    from action_pdf_accessibility_paddle_docker_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        _cc(spark, 5, [(i, i + 1) for i in range(4)])

@@ -323,6 +323,37 @@ def test_terms_col_tuple_form_cached(spark):
     assert C._score_exprs.cache_info().misses == 2
 
 
+
+def _expr_ids(df):
+    out = df._jdf.queryExecution().analyzed().output()
+    return {out.apply(i).name(): out.apply(i).exprId().id()
+            for i in range(out.size())}
+
+
+def test_cached_column_fragments_get_fresh_expr_ids(spark):
+    """Every use of a cached aliased Column is analyzed under a fresh
+    exprId, so the lru_cache'd expression builders never make two plans
+    share an attribute id. A Spark that starts sharing them fails here."""
+    from functools import lru_cache
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    weights, bias = C.load_classifier(spark, FIXTURE)
+    C._score_exprs.cache_clear()
+    one = C.score_documents(docs, weights, bias=bias)
+    two = C.score_documents(docs, weights, bias=bias)
+    info = C._score_exprs.cache_info()
+    assert (info.hits, info.misses) == (1, 1)
+    assert _expr_ids(one)["clf_score"] != _expr_ids(two)["clf_score"]
+
+    @lru_cache(maxsize=1)
+    def lowest():
+        return F.min("doc_id").alias("x")
+
+    by_lang = docs.groupBy("lang").agg(lowest())
+    by_source = docs.groupBy("source").agg(lowest())
+    assert lowest.cache_info().hits == 1
+    assert _expr_ids(by_lang)["x"] != _expr_ids(by_source)["x"]
+
 def test_plan_jvm_only_and_broadcast(spark):
     """No Python nodes in the scoring plan; the weights side broadcasts."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
